@@ -190,17 +190,33 @@ object RtcmPipeline {
         col("coordinates.ecef_z").as("ecef_z"),
         col("coordinates.antenna_height").as("antenna_height"))
 
+  /** Which ARP fix is a mountpoint's current one: the latest
+    * `receive_micros`, ties broken by the larger `rtcm_package_id`.
+    * Keys most significant first, both descending. `latestCoordinates`
+    * orders its window by these columns and the JDBC sink
+    * (`Sinks.writeDecodedBatchJdbc`) picks fixes by them via `laterFix`. */
+  val LatestFixKeys: Seq[(String, DecodedFrame => Long)] = Seq(
+    "receive_micros" -> (_.receive_micros),
+    "rtcm_package_id" -> (_.rtcm_package_id))
+
+  /** The later of two fixes of one mountpoint under `LatestFixKeys`. */
+  def laterFix(a: DecodedFrame, b: DecodedFrame): DecodedFrame =
+    LatestFixKeys.iterator.map { case (_, key) => java.lang.Long.compare(key(a), key(b)) }
+      .find(_ != 0).fold(a)(c => if (c > 0) a else b)
+
   /** The `coordinates` table's upsert-on-mountpoint semantics
     * (initdb/99-stored_procedures.sql:208-231) as a window dedup:
     * latest fix per mountpoint. One shuffle on the key. */
   def latestCoordinates(decoded: Dataset[DecodedFrame]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("mountpoint")
-      .orderBy(col("receive_time").desc, col("rtcm_package_id").desc)
-    coordinates(decoded)
+      .orderBy(LatestFixKeys.map { case (c, _) => col(c).desc }: _*)
+    coordinates(decoded
+      .filter(col("coordinates").isNotNull)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn")
+      .as[DecodedFrame](decoded.encoder))
   }
 
   /** Register the reference's per-constellation observation tables

@@ -4,6 +4,7 @@ import java.util
 import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -157,10 +158,12 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
           }
           orderlyEnd = chunk.isEmpty && !stopped.get()
         } catch {
-          case _: Throwable if !stopped.get() =>
+          // stop() interrupts the reader; InterruptedException is not NonFatal
+          case e if stopped.get() && (NonFatal(e) || e.isInstanceOf[InterruptedException]) =>
+            () // orderly shutdown
+          case NonFatal(_) =>
             try Thread.sleep(backoffMs) catch { case _: InterruptedException => () }
             backoffMs = math.min(backoffMs * 2, 300000L) // cap 5 min (reference cap)
-          case _: Throwable => // orderly shutdown
         } finally client.close()
       }
     }, s"ntrip-reader-$mount")

@@ -83,11 +83,13 @@ object RtcmStreaming {
       .start()
   }
 
-  /** JDBC landing path (S5–S7 executed): each micro-batch appends
-    * packages/observations (executor-side, batched prepared inserts)
-    * and upserts latest coordinates — `Sinks.writeDecodedBatchJdbc`
-    * against any `ConnectionFactory` (production: UrlConnectionFactory
-    * with a postgres/timescale URL; tests: a recording fake). */
+  /** JDBC landing path (S5–S7 executed): `Sinks.writeDecodedBatchJdbc`
+    * runs each micro-batch as one Spark job — every partition appends
+    * its packages and observations over one connection (batched
+    * prepared inserts), then the driver upserts the latest coordinates
+    * per mountpoint — against any `ConnectionFactory` (production:
+    * UrlConnectionFactory with a postgres/timescale URL; tests: a
+    * recording fake). */
   def startJdbcSink(decoded: Dataset[graft.etl.DecodedFrame],
                     factory: graft.etl.Sinks.ConnectionFactory,
                     checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =

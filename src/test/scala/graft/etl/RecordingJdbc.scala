@@ -7,28 +7,29 @@ import java.util.concurrent.atomic.AtomicInteger
 
 /** Recording fake JDBC endpoint (test seam for the executed sink
   * path): dynamic proxies over java.sql.Connection/PreparedStatement
-  * that record every prepared SQL string, bound parameter row, and
-  * executed batch size into JVM-static queues. local[*] executors
-  * share the JVM, so executor-side `foreachPartition` writes are
+  * that record every executed batch — its SQL, bound parameter rows
+  * and connection, in execution order — into a JVM-static queue.
+  * local[*] executors share the JVM, so executor-side writes are
   * visible to test assertions — the no-DB stand-in for a real
   * postgres/timescale endpoint. */
 object RecordingJdbc {
-  final case class Exec(sql: String, rows: Int)
+  /** One executed batch: `conn` numbers the connection it ran on (1 =
+    * first opened since `clear`), `params` are its bound rows. */
+  final case class Exec(sql: String, conn: Int, params: Vector[Vector[Any]]) {
+    def rows: Int = params.length
+  }
 
   val execs = new ConcurrentLinkedQueue[Exec]()
-  val paramRows = new ConcurrentLinkedQueue[(String, Vector[Any])]()
   val connectionsOpened = new AtomicInteger(0)
 
-  def clear(): Unit = { execs.clear(); paramRows.clear(); connectionsOpened.set(0) }
+  def clear(): Unit = { execs.clear(); connectionsOpened.set(0) }
 
   class Factory extends Sinks.ConnectionFactory {
     override def connect(): Connection = newConnection()
   }
 
-  def newConnection(): Connection = {
-    connectionsOpened.incrementAndGet()
-    proxy[Connection](new ConnHandler)
-  }
+  def newConnection(): Connection =
+    proxy[Connection](new ConnHandler(connectionsOpened.incrementAndGet()))
 
   private def proxy[T](h: InvocationHandler)(implicit ct: scala.reflect.ClassTag[T]): T =
     Proxy.newProxyInstance(getClass.getClassLoader,
@@ -41,10 +42,10 @@ object RecordingJdbc {
     case _ => null
   }
 
-  private final class ConnHandler extends InvocationHandler {
+  private final class ConnHandler(conn: Int) extends InvocationHandler {
     override def invoke(p: Any, m: Method, args: Array[AnyRef]): AnyRef = m.getName match {
       case "prepareStatement" =>
-        proxy[PreparedStatement](new StatementHandler(args(0).asInstanceOf[String]))
+        proxy[PreparedStatement](new StatementHandler(args(0).asInstanceOf[String], conn))
       case "close" | "commit" | "rollback" | "setAutoCommit" => null
       case "isClosed" => java.lang.Boolean.FALSE
       case "toString" => "RecordingJdbc.Connection"
@@ -52,9 +53,10 @@ object RecordingJdbc {
     }
   }
 
-  private final class StatementHandler(sql: String) extends InvocationHandler {
+  private final class StatementHandler(sql: String, conn: Int) extends InvocationHandler {
     private val current = scala.collection.mutable.Map[Int, Any]()
-    private var batched = 0
+    private val batched = Vector.newBuilder[Vector[Any]]
+    private def row = current.toSeq.sortBy(_._1).map(_._2).toVector
 
     override def invoke(p: Any, m: Method, args: Array[AnyRef]): AnyRef = m.getName match {
       case "setObject" | "setString" | "setLong" | "setInt" | "setDouble" | "setTimestamp" =>
@@ -64,16 +66,15 @@ object RecordingJdbc {
         current(args(0).asInstanceOf[Integer].intValue()) = null
         null
       case "addBatch" =>
-        paramRows.add(sql -> current.toSeq.sortBy(_._1).map(_._2).toVector)
-        batched += 1
+        batched += row
         null
       case "executeBatch" =>
-        execs.add(Exec(sql, batched))
-        val r = Array.fill(batched)(1)
-        batched = 0
-        r
+        val rows = batched.result()
+        batched.clear()
+        execs.add(Exec(sql, conn, rows))
+        Array.fill(rows.length)(1)
       case "executeUpdate" =>
-        execs.add(Exec(sql, 1))
+        execs.add(Exec(sql, conn, Vector(row)))
         Integer.valueOf(1)
       case "close" | "clearParameters" | "clearBatch" => null
       case "toString" => s"RecordingJdbc.Statement($sql)"

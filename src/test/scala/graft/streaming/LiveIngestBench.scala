@@ -154,10 +154,9 @@ object LiveIngestBench {
 
     val totalFrames = n1 + n2
     import scala.jdk.CollectionConverters._
-    val pkgRows = RecordingJdbc.paramRows.asScala.toVector
-      .filter(_._1.startsWith("INSERT INTO rtcm_packages"))
-    val obsRows = RecordingJdbc.paramRows.asScala.toVector
-      .filter(_._1.startsWith("INSERT INTO observations"))
+    val landed = RecordingJdbc.execs.asScala.toVector.flatMap(e => e.params.map(e.sql -> _))
+    val pkgRows = landed.filter(_._1.startsWith("INSERT INTO rtcm_packages"))
+    val obsRows = landed.filter(_._1.startsWith("INSERT INTO observations"))
     val byId = pkgRows.groupBy(_._2.head) // rtcm_package_id is param 1
     val distinctIds = byId.size
     val maxVariants = if (byId.isEmpty) 0 else byId.values.map(_.map(_._2).distinct.size).max
