@@ -147,6 +147,16 @@ object PlanAudit {
       "events scan pruned through as-of (no props/value)" -> (s =>
         !s.contains("props") && !s.contains("value#")))
 
+    // rtcm_packages_e2e: the cached decoded corpus comes out of the
+    // DecodeFrames node, which writes decoded rows straight into
+    // Spark's row format — no object serializer turning one
+    // DecodedFrame per frame into a row
+    audit("rtcm_packages_e2e")(
+      "decode planned as the DecodeFrames node" -> (_.contains("DecodeFrames")),
+      "no DecodedFrame object serializer" -> simpleOnly(s =>
+        !s.split("\n").exists(l =>
+          nodeIs(l, "SerializeFromObject") && l.contains("DecodedFrame"))))
+
     // h19's OR-of-conjunctions spans both sides; the common l_partkey
     // equi-join must still be extracted (no cartesian/nested-loop)
     audit("h19_disjunctive_pred")(

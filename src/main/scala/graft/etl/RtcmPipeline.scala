@@ -1,7 +1,9 @@
 package graft.etl
 
+import graft.plans.{DecodeFrames, DecodeFramesStrategy}
 import graft.rtcm._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.graftshim.PlanDataFrame
 import org.apache.spark.sql.functions._
 
 /** Raw byte chunk as delivered by a transport (NTRIP body read, Kafka
@@ -50,9 +52,13 @@ final case class DecodedFrame(
   * DataFrames (SURVEY.md §2.1-§2.2, S3-S6 + D1-D11).
   *
   * Scale design: framing is per-mountpoint sequential (keyed
-  * groupByKey — the only shuffle), decode is embarrassingly parallel
-  * (`flatMap`), and the table outputs are narrow projections of one
-  * decoded Dataset. At 100 TB the decoded set would be written
+  * repartition — the only shuffle), decode is embarrassingly parallel
+  * (the [[graft.plans.DecodeFrames]] node, one output row per frame,
+  * written straight into Spark's row format), and the table outputs
+  * are narrow projections of one decoded Dataset. The streaming path
+  * (`RtcmStreaming.decodeStream`) frames per mountpoint in state and
+  * decodes through the same node; its source plans one input
+  * partition per mountpoint. At 100 TB the decoded set would be written
   * partitioned by (date(receive_time), constellation) and the obs
   * explode runs map-side — no additional shuffle.
   */
@@ -135,11 +141,27 @@ object RtcmPipeline {
       }
   }
 
+  /** Decode every frame with `decodeOne`, as the [[graft.plans.DecodeFrames]]
+    * plan node: rows go from the frames' columns to `DecodedFrame` rows
+    * without a JVM object per row. The batch path (`frameChunks`) and
+    * the streaming path (`RtcmStreaming.decodeStream`) both land here. */
   def decode(frames: Dataset[EncodedFrame]): Dataset[DecodedFrame] = {
     val spark = frames.sparkSession
     import spark.implicits._
-    frames.map(decodeOne _)
+    ensureDecodeStrategy(spark)
+    val child = frames.select(col("mountPoint"), col("receiveMicros"), col("frame"))
+    PlanDataFrame.ofRows(spark, DecodeFrames.over(child.queryExecution.analyzed))
+      .as[DecodedFrame]
   }
+
+  /** Make [[graft.plans.DecodeFrames]] plannable in `spark`'s session
+    * even if GraftExtensions wasn't installed (as `AsOfJoin` does). */
+  private def ensureDecodeStrategy(spark: SparkSession): Unit =
+    spark.synchronized {
+      if (!spark.experimental.extraStrategies.contains(DecodeFramesStrategy))
+        spark.experimental.extraStrategies =
+          spark.experimental.extraStrategies :+ DecodeFramesStrategy
+    }
 
   /** `rtcm_packages` projection (initdb/01-rtcm_packages.sql). */
   def packages(decoded: Dataset[DecodedFrame]): DataFrame =

@@ -3,7 +3,11 @@ package graft.etl
 import scala.collection.mutable
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Sink-side SQL builders for the JDBC/TimescaleDB landing path
   * (SURVEY.md §2.1 S5–S9). The container has no database, so the
@@ -101,34 +105,68 @@ object Sinks {
   /** Rows per `executeBatch`. */
   private val BatchRows = 500
 
+  /** The `DecodedFrame` columns the landing path reads, selected by
+    * name so the binding ordinals below do not depend on the batch's
+    * column order. */
+  private val LandedFrameColumns: Seq[String] = Seq(
+    "rtcm_package_id", "mountpoint", "receive_micros", "rtcm_msg_type", "rtcm_msg_size",
+    "rtcm_sat_count", "rtcm_obs_epoch_micros", "constellation", "observations", "coordinates")
+
   /** The executable foreachBatch body for the relational landing path
     * (S5–S7), run as ONE Spark job: every partition appends its packages
     * and observations over one connection and returns its latest ARP fix
     * per mountpoint; the driver keeps one fix per mountpoint and upserts
-    * it only after every append has been acknowledged. The parquet sink
-    * in RtcmStreaming remains the no-DB stand-in. */
+    * it only after every append has been acknowledged. Rows are bound
+    * straight from Spark's `InternalRow`s (a terminal writer, like
+    * Spark's own `ForeachBatchSink`), with no `DecodedFrame` object per
+    * row. The parquet sink in RtcmStreaming remains the no-DB stand-in. */
   def writeDecodedBatchJdbc(batch: Dataset[DecodedFrame],
                             factory: ConnectionFactory): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val fixes = batch.mapPartitions(frames => appendPartition(frames, factory)).collect()
+    val landed = batch.select(LandedFrameColumns.map(col): _*)
+    val fields = FrameFields(landed.schema)
+    val fixes = landed.queryExecution.toRdd
+      .mapPartitions(rows => appendPartition(rows, fields, factory)).collect()
     upsertCoordinates(fixes.groupBy(_.mountpoint).values.map(_.reduce(RtcmPipeline.laterFix))
       .toSeq.sortBy(_.mountpoint), factory)
   }
 
-  /** Appends one partition's frames with single-row prepared INSERTs.
-    * Frames go in groups of `BatchRows`: a group's package rows are
-    * executed first, then its observation rows, so an observation row
-    * never executes before the package row it references, and every
-    * `executeBatch` carries at most `BatchRows` rows. Binds the value
-    * types Spark's `Row` conversion yields (boxed numbers, String,
-    * `java.sql.Timestamp`, null for None), in `PackagesColumns` /
-    * `ObservationsColumns` order. Returns the partition's latest ARP fix
-    * per mountpoint. */
-  private def appendPartition(frames: Iterator[DecodedFrame],
+  /** Ordinals, inside their structs, of the nested observation and
+    * coordinate fields, looked up by name. */
+  private final case class FrameFields(obsFields: Int, obs: Seq[Int], coordFields: Int,
+                                       coord: Seq[Int])
+  private object FrameFields {
+    def apply(schema: StructType): FrameFields = {
+      val o = schema("observations").dataType.asInstanceOf[ArrayType].elementType
+        .asInstanceOf[StructType]
+      val c = schema("coordinates").dataType.asInstanceOf[StructType]
+      FrameFields(o.length,
+        Seq("obs_epoch_micros", "sat_id", "sat_signal", "obs_code", "obs_phase", "obs_doppler",
+          "obs_snr", "obs_lock_time_indicator").map(o.fieldIndex),
+        c.length, Seq("ecef_x", "ecef_y", "ecef_z", "antenna_height").map(c.fieldIndex))
+    }
+  }
+
+  /** Appends one partition's frames (rows of `LandedFrameColumns`) with
+    * single-row prepared INSERTs. Frames go in groups of `BatchRows`: a
+    * group's package rows are executed first, then its observation rows,
+    * so an observation row never executes before the package row it
+    * references, and every `executeBatch` carries at most `BatchRows`
+    * rows. Binds the value types Spark's `Row` conversion yields (boxed
+    * numbers, String, `java.sql.Timestamp`, null for null), in
+    * `PackagesColumns` / `ObservationsColumns` order. Returns the
+    * partition's latest ARP fix per mountpoint. */
+  private def appendPartition(rows: Iterator[InternalRow], fields: FrameFields,
                               factory: ConnectionFactory): Iterator[DecodedFrame] = {
-    if (!frames.hasNext) return Iterator.empty
+    if (!rows.hasNext) return Iterator.empty
     def ts(micros: Long): java.sql.Timestamp = DateTimeUtils.toJavaTimestamp(micros)
+    val strings = new java.util.HashMap[UTF8String, String]()
+    def str(u: UTF8String): String = {
+      var s = strings.get(u)
+      if (s == null) { s = u.toString; strings.put(u.clone(), s) }
+      s
+    }
+    val Seq(oEpoch, oSat, oSignal, oCode, oPhase, oDoppler, oSnr, oLock) = fields.obs
+    val Seq(cX, cY, cZ, cHeight) = fields.coord
     val latest = mutable.HashMap.empty[String, DecodedFrame]
     val conn = factory.connect()
     try {
@@ -137,37 +175,52 @@ object Sinks {
         val obs = conn.prepareStatement(insertSql("observations", ObservationsColumns, 1))
         try {
           var pendingObs = 0
-          frames.grouped(BatchRows).foreach { group =>
+          // the row iterator reuses its row: buffer copies
+          rows.map(_.copy()).grouped(BatchRows).foreach { group =>
             group.foreach { f =>
-              pk.setObject(1, Long.box(f.rtcm_package_id))
-              pk.setObject(2, ts(f.receive_micros))
-              pk.setObject(3, f.mountpoint)
-              pk.setObject(4, f.rtcm_obs_epoch_micros.map(ts).orNull)
-              pk.setObject(5, Int.box(f.rtcm_msg_type))
-              pk.setObject(6, Int.box(f.rtcm_msg_size))
-              pk.setObject(7, f.rtcm_sat_count.map(Int.box).orNull)
+              pk.setObject(1, Long.box(f.getLong(0)))
+              pk.setObject(2, ts(f.getLong(2)))
+              pk.setObject(3, str(f.getUTF8String(1)))
+              pk.setObject(4, if (f.isNullAt(6)) null else ts(f.getLong(6)))
+              pk.setObject(5, Int.box(f.getInt(3)))
+              pk.setObject(6, Int.box(f.getInt(4)))
+              pk.setObject(7, if (f.isNullAt(5)) null else Int.box(f.getInt(5)))
               pk.addBatch()
             }
             pk.executeBatch()
             group.foreach { f =>
-              f.observations.foreach { o =>
-                obs.setObject(1, Long.box(f.rtcm_package_id))
-                obs.setObject(2, f.mountpoint)
-                obs.setObject(3, f.constellation)
-                obs.setObject(4, ts(o.obs_epoch_micros))
-                obs.setObject(5, o.sat_id)
-                obs.setObject(6, o.sat_signal)
-                obs.setObject(7, Double.box(o.obs_code))
-                obs.setObject(8, Double.box(o.obs_phase))
-                obs.setObject(9, Double.box(o.obs_doppler))
-                obs.setObject(10, Double.box(o.obs_snr))
-                obs.setObject(11, Int.box(o.obs_lock_time_indicator))
+              val id = Long.box(f.getLong(0))
+              val mount = str(f.getUTF8String(1))
+              val constellation = str(f.getUTF8String(7))
+              val cells = f.getArray(8)
+              var i = 0
+              while (i < cells.numElements()) {
+                val o = cells.getStruct(i, fields.obsFields)
+                obs.setObject(1, id)
+                obs.setObject(2, mount)
+                obs.setObject(3, constellation)
+                obs.setObject(4, ts(o.getLong(oEpoch)))
+                obs.setObject(5, str(o.getUTF8String(oSat)))
+                obs.setObject(6, str(o.getUTF8String(oSignal)))
+                obs.setObject(7, Double.box(o.getDouble(oCode)))
+                obs.setObject(8, Double.box(o.getDouble(oPhase)))
+                obs.setObject(9, Double.box(o.getDouble(oDoppler)))
+                obs.setObject(10, Double.box(o.getDouble(oSnr)))
+                obs.setObject(11, Int.box(o.getInt(oLock)))
                 obs.addBatch()
                 pendingObs += 1
                 if (pendingObs >= BatchRows) { obs.executeBatch(); pendingObs = 0 }
+                i += 1
               }
-              if (f.coordinates.isDefined)
-                latest(f.mountpoint) = latest.get(f.mountpoint).fold(f)(RtcmPipeline.laterFix(f, _))
+              if (!f.isNullAt(9)) {
+                // only the fields laterFix and upsertCoordinates read
+                val c = f.getStruct(9, fields.coordFields)
+                val fix = DecodedFrame(f.getLong(0), mount, f.getLong(2), f.getInt(3), f.getInt(4),
+                  None, None, constellation, Nil,
+                  Some(CoordOut(c.getDouble(cX), c.getDouble(cY), c.getDouble(cZ),
+                    if (c.isNullAt(cHeight)) None else Some(c.getDouble(cHeight)))), None)
+                latest(mount) = latest.get(mount).fold(fix)(RtcmPipeline.laterFix(fix, _))
+              }
             }
           }
           if (pendingObs > 0) obs.executeBatch()

@@ -179,5 +179,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // as the built-in ColumnPruning, which then pushes the pruned
     // projection into the scans)
     ext.injectOptimizerRule(_ => graft.plans.AsOfMergePruning)
+    // per-frame RTCM decode node (etl.RtcmPipeline.decode also
+    // self-heals this into extraStrategies)
+    ext.injectPlannerStrategy(_ => graft.plans.DecodeFramesStrategy)
   }
 }

@@ -31,6 +31,13 @@ final case class Observation(
   */
 object MsmExpander {
 
+  /** Satellite ids per constellation prefix, indexed by satellite-mask
+    * position: `G01` … `G64`. Built once, so expansion formats none. */
+  private val satIdTable: Map[String, Array[String]] =
+    SignalTables.constellationPrefix.values.map { p =>
+      p -> Array.tabulate(64)(i => f"$p${i + 1}%02d")
+    }.toMap
+
   def expand(msg: MsmMessage, mountPoint: String, receiveMicros: Long): Seq[Observation] = {
     val t = msg.header.messageType
     val flavor = t % 10
@@ -41,11 +48,11 @@ object MsmExpander {
       else (math.pow(2, -29), math.pow(2, -31), math.pow(2, -4))
 
     val obsEpochMicros = GnssTime.resolveEpochMicros(t, msg.header.epochMs, receiveMicros)
-    val prefix = SignalTables.constellationPrefix(SignalTables.msmConstellation(t))
+    val idTable = satIdTable(SignalTables.constellationPrefix(SignalTables.msmConstellation(t)))
     val signals = SignalTables.presentSignals(t, msg.header.signalMask)
     val signalCount = signals.length
     val satIds: IndexedSeq[String] =
-      (0 until 64).collect { case i if msg.header.satMask(i) => f"$prefix${i + 1}%02d" }
+      (0 until 64).collect { case i if msg.header.satMask(i) => idTable(i) }
 
     val out = Vector.newBuilder[Observation]
     var cellNo = 0

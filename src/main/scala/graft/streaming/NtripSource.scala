@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicBoolean
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
+import graft.etl.RawChunk
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -32,7 +33,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * backpressure to the caster via TCP flow control); offsets are the
   * global count of buffered chunks and micro-batches read buffer
   * slices — the same driver-buffered design as Spark's own socket
-  * source, with the same delivery caveat: a live TCP byte stream is
+  * source. A micro-batch is planned as one input partition per
+  * mountpoint present in its slice, each packed into primitive arrays
+  * in arrival order (see [[NtripInputPartition]]). The same delivery
+  * caveat applies: a live TCP byte stream is
   * not replayable, so this source is at-least-once across driver
   * restarts (the reference's ingest makes the identical trade; the
   * restart rebase below guarantees no post-restart live chunk is
@@ -101,7 +105,7 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
   private val maxBuffered: Int = options.getInt("maxBufferedChunks", 65536)
 
   /** Buffered chunks in arrival order; index = offset. */
-  private val buffer = new ArrayBuffer[(String, Long, Long, Array[Byte])]()
+  private val buffer = new ArrayBuffer[RawChunk]()
   private val stopped = new AtomicBoolean(false)
   private var committed = 0L // absolute offset of buffer.head
   // After a driver restart the checkpointed offsets can exceed this
@@ -151,7 +155,7 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
               // until the query consumes — natural TCP backpressure
               while (buffer.length >= maxBuffered && !stopped.get())
                 buffer.wait(200L)
-              if (!stopped.get()) buffer += ((mount, micros, seq, chunk.get))
+              if (!stopped.get()) buffer += RawChunk(mount, micros, seq, chunk.get)
             }
             seq += 1
             chunk = if (stopped.get()) None else client.readChunk()
@@ -204,27 +208,28 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
     // call — rebase here too (to the batch END: its commit is the
     // watermark) so that commit cannot drop live rows
     rebaseTo(e)
-    val rows = buffer.synchronized {
+    NtripInputPartition.perMountpoint(bufferSlice(s, e))
+  }
+
+  /** The buffered chunks at offsets `[start, end)`, in arrival order. */
+  private[streaming] def bufferSlice(start: Long, end: Long): IndexedSeq[RawChunk] =
+    buffer.synchronized {
       // clamp to what the buffer still holds: after a restart the
       // checkpointed range may predate this process's buffer (live TCP
       // is not replayable — the documented at-least-once trade), and
       // must not crash the query
-      val lo = math.max(0L, s - committed).toInt
-      val hi = math.min(buffer.length.toLong, math.max(0L, e - committed)).toInt
-      (lo until hi).map(buffer(_)).toArray
+      val lo = math.max(0L, start - committed).toInt
+      val hi = math.min(buffer.length.toLong, math.max(0L, end - committed)).toInt
+      buffer.slice(lo, hi).toIndexedSeq
     }
-    Array(NtripInputPartition(rows))
-  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     (partition: InputPartition) => new PartitionReader[InternalRow] {
-      private val rows = partition.asInstanceOf[NtripInputPartition].rows
+      private val p = partition.asInstanceOf[NtripInputPartition]
+      private val mount = UTF8String.fromString(p.mount)
       private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = {
-        val (m, micros, seq, data) = rows(i)
-        InternalRow(UTF8String.fromString(m), micros, seq, data)
-      }
+      override def next(): Boolean = { i += 1; i < p.size }
+      override def get(): InternalRow = InternalRow(mount, p.micros(i), p.seqs(i), p.bytes(i))
       override def close(): Unit = ()
     }
 
@@ -249,8 +254,48 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
   }
 }
 
-private final case class NtripInputPartition(
-    rows: Array[(String, Long, Long, Array[Byte])]) extends InputPartition
+/** One mountpoint's chunks of a micro-batch, in arrival order, packed
+  * into primitive arrays: chunk `i` is `data[offsets(i), offsets(i + 1))`,
+  * received at `micros(i)` with reader sequence number `seqs(i)`. The
+  * driver serializes a partition as five flat values, not as one object
+  * graph per chunk. */
+private final class NtripInputPartition(
+    val mount: String,
+    val micros: Array[Long],
+    val seqs: Array[Long],
+    val offsets: Array[Int],
+    val data: Array[Byte]) extends InputPartition {
+  def size: Int = micros.length
+  def bytes(i: Int): Array[Byte] = util.Arrays.copyOfRange(data, offsets(i), offsets(i + 1))
+  def chunks: IndexedSeq[RawChunk] =
+    (0 until size).map(i => RawChunk(mount, micros(i), seqs(i), bytes(i)))
+}
+
+private object NtripInputPartition {
+  /** One partition per mountpoint present in `chunks` (ordered by
+    * mountpoint), each keeping its chunks' order in `chunks`. */
+  def perMountpoint(chunks: IndexedSeq[RawChunk]): Array[InputPartition] =
+    chunks.groupBy(_.mountPoint).toArray.sortBy(_._1).map { case (mount, cs) =>
+      val offsets = new Array[Int](cs.length + 1)
+      var total = 0L
+      var i = 0
+      while (i < cs.length) {
+        total += cs(i).data.length
+        require(total <= Int.MaxValue,
+          s"mountpoint $mount buffered over 2 GiB in one micro-batch; lower maxChunksPerTrigger")
+        offsets(i + 1) = total.toInt
+        i += 1
+      }
+      val data = new Array[Byte](total.toInt)
+      i = 0
+      while (i < cs.length) {
+        System.arraycopy(cs(i).data, 0, data, offsets(i), cs(i).data.length)
+        i += 1
+      }
+      new NtripInputPartition(mount, cs.map(_.receiveMicros).toArray, cs.map(_.seq).toArray,
+        offsets, data)
+    }
+}
 
 object NtripSource {
   /** Matches `etl.RawChunk`, so `.as[RawChunk]` feeds the pipeline. */

@@ -5,7 +5,8 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession}
 import org.apache.spark.sql.{DataFrame, SparkSession => ApiSparkSession}
 
 /** The one `private[sql]` doorway the engine needs: wrap a custom
-  * `LogicalPlan` (graft.plans.AsOfMergeLogical) in a DataFrame.
+  * `LogicalPlan` (graft.plans.AsOfMergeLogical, graft.plans.DecodeFrames)
+  * in a DataFrame.
   * Spark exposes custom-plan REGISTRATION (SparkSessionExtensions
   * strategies) publicly but not plan→DataFrame construction, so
   * every library adding a whole-operator plan node carries exactly

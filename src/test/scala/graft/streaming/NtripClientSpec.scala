@@ -299,25 +299,68 @@ class NtripClientSpec extends AnyFunSuite {
       (Map("host" -> "127.0.0.1", "port" -> port.toString, "mountpoints" -> "MNT0")
         ++ extra).asJava))
 
+  /** Plans the micro-batch `[start, end)` and checks its partitioning:
+    * one partition per mountpoint present, each holding that
+    * mountpoint's chunks in arrival order, together exactly the
+    * buffer's slice (whatever the rebase and clamp made of it). Returns
+    * the planned chunks. */
+  private def planChecked(stream: NtripMicroBatchStream, start: Long, end: Long): Seq[RawChunk] = {
+    val slice = stream.bufferSlice(start, end)
+    val parts = stream.planInputPartitions(NtripOffset(start), NtripOffset(end))
+      .map(_.asInstanceOf[NtripInputPartition]).toSeq
+    assert(parts.map(_.mount) == slice.map(_.mountPoint).distinct.sorted)
+    def key(c: RawChunk) = (c.mountPoint, c.receiveMicros, c.seq, c.data.toSeq)
+    parts.foreach { p =>
+      assert(p.chunks.map(key) == slice.filter(_.mountPoint == p.mount).map(key))
+      assert(p.chunks.map(_.seq).sliding(2).forall(w => w.size < 2 || w(0) < w(1)),
+        s"${p.mount}: chunks out of arrival order")
+    }
+    parts.flatMap(_.chunks)
+  }
+
   /** Manual micro-batch loop: latestOffset → plan → commit until
-    * `expectedBytes` have been read or the deadline passes. */
+    * `expectedBytes` have been read or the deadline passes. Returns
+    * every planned chunk. */
   private def drainAll(stream: NtripMicroBatchStream, startN: Long,
-                       expectedBytes: Long, deadlineMs: Long = 30000): Long = {
+                       expectedBytes: Long, deadlineMs: Long = 30000): Seq[RawChunk] = {
     val deadline = System.currentTimeMillis() + deadlineMs
     var cur = startN
+    val got = Seq.newBuilder[RawChunk]
     var total = 0L
     while (total < expectedBytes && System.currentTimeMillis() < deadline) {
       val end = stream.latestOffset(NtripOffset(cur), ReadLimit.allAvailable())
         .asInstanceOf[NtripOffset].n
       if (end > cur) {
-        val rows = stream.planInputPartitions(NtripOffset(cur), NtripOffset(end))
-          .flatMap(_.asInstanceOf[NtripInputPartition].rows)
-        total += rows.map(_._4.length.toLong).sum
+        val chunks = planChecked(stream, cur, end)
+        got ++= chunks
+        total += chunks.map(_.data.length.toLong).sum
         stream.commit(NtripOffset(end))
         cur = end
       } else Thread.sleep(50)
     }
-    total
+    got.result()
+  }
+
+  private def bytes(chunks: Seq[RawChunk]): Long = chunks.map(_.data.length.toLong).sum
+
+  test("micro-batches plan one packed partition per mountpoint present, in arrival order") {
+    val perMount = Seq("MNT0", "MNT1", "MNT2").zipWithIndex.map { case (m, i) =>
+      m -> SyntheticRtcm.framesFor(m, 100 + i, 60, 50L + i).map(_._2)
+    }.toMap
+    val bodyBytes = perMount.values.flatten.map(_.length.toLong).sum
+    val server = new ServerSocket(0)
+    try {
+      serveMany(server, perMount)
+      val stream = mkStream(server.getLocalPort, "mountpoints" -> "MNT0,MNT1,MNT2")
+      try {
+        val got = drainAll(stream, 0L, bodyBytes)
+        assert(bytes(got) == bodyBytes)
+        // each mountpoint's chunks, in planned order, are its body
+        perMount.foreach { case (m, frames) =>
+          assert(got.filter(_.mountPoint == m).flatMap(_.data.toSeq) == frames.flatMap(_.toSeq), m)
+        }
+      } finally stream.stop()
+    } finally server.close()
   }
 
   test("maxBufferedChunks bounds driver memory while the query stalls, then resumes") {
@@ -339,7 +382,7 @@ class NtripClientSpec extends AnyFunSuite {
         assert(maxSeen <= 8, s"buffer grew past cap: $maxSeen")
         assert(maxSeen > 0, "caster never delivered")
         // resume: the stalled stream must still deliver every byte
-        val total = drainAll(stream, 0L, bodyBytes)
+        val total = bytes(drainAll(stream, 0L, bodyBytes))
         assert(total == bodyBytes, s"$total != $bodyBytes")
       } finally stream.stop()
     } finally server.close()
@@ -362,11 +405,10 @@ class NtripClientSpec extends AnyFunSuite {
         // batch [500, 520) via planInputPartitions (no latestOffset
         // yet), then commits its end — the rebase must anchor on the
         // batch END or that commit drops the live chunks buffered here
-        val replayed = stream.planInputPartitions(NtripOffset(500L), NtripOffset(520L))
-          .flatMap(_.asInstanceOf[NtripInputPartition].rows)
+        val replayed = planChecked(stream, 500L, 520L)
         assert(replayed.isEmpty, "pre-restart data cannot be replayed from a live socket")
         stream.commit(NtripOffset(520L))
-        val total = drainAll(stream, 520L, bodyBytes)
+        val total = bytes(drainAll(stream, 520L, bodyBytes))
         assert(total == bodyBytes, s"$total != $bodyBytes — live chunks were dropped")
       } finally stream.stop()
     } finally server.close()

@@ -173,4 +173,40 @@ class SinkSpec extends AnyFunSuite {
     assert(latest.filter($"mountpoint" === "MNT03").select("rtcm_package_id").as[Long]
       .collect().toSeq == Seq(tieIds.max))
   }
+
+  test("writeDecodedBatchJdbc binds the same rows whatever the batch's column order") {
+    import graft.etl.{DecodedFrame, RecordingJdbc, Sinks}
+    import spark.implicits._
+    val decoded = RtcmPipeline.decode(
+      RtcmPipeline.frameChunks(spark.createDataset(SyntheticRtcm.corpus(2, 64)))).persist()
+    try {
+      // top-level columns reversed, nested struct fields reversed too
+      val reordered = decoded.selectExpr(
+        "error",
+        """CASE WHEN coordinates IS NULL THEN NULL ELSE named_struct(
+          |  'antenna_height', coordinates.antenna_height, 'ecef_z', coordinates.ecef_z,
+          |  'ecef_y', coordinates.ecef_y, 'ecef_x', coordinates.ecef_x) END AS coordinates""".stripMargin,
+        """transform(observations, o -> named_struct(
+          |  'obs_lock_time_indicator', o.obs_lock_time_indicator, 'obs_snr', o.obs_snr,
+          |  'obs_doppler', o.obs_doppler, 'obs_phase', o.obs_phase, 'obs_code', o.obs_code,
+          |  'sat_signal', o.sat_signal, 'sat_id', o.sat_id,
+          |  'obs_epoch_micros', o.obs_epoch_micros)) AS observations""".stripMargin,
+        "constellation", "rtcm_obs_epoch_micros", "rtcm_sat_count", "rtcm_msg_size",
+        "rtcm_msg_type", "receive_micros", "mountpoint", "rtcm_package_id")
+        .as[DecodedFrame]
+      assert(reordered.schema.fieldNames.toSeq == decoded.schema.fieldNames.toSeq.reverse)
+      // executes of concurrent partitions interleave: compare as multisets
+      def landed(batch: org.apache.spark.sql.Dataset[DecodedFrame]): Seq[String] = {
+        RecordingJdbc.clear()
+        Sinks.writeDecodedBatchJdbc(batch, new RecordingJdbc.Factory)
+        RecordingJdbc.execs.toArray(Array.empty[RecordingJdbc.Exec]).toSeq.flatMap(e =>
+          e.params.map(r => e.sql + " <- " + r.map(v =>
+            if (v == null) "null" else s"${v.getClass.getName}:$v").mkString("|"))).sorted
+      }
+      val straight = landed(decoded)
+      assert(straight.exists(_.startsWith("INSERT INTO observations ")))
+      assert(straight.exists(_.contains("ON CONFLICT")))
+      assert(landed(reordered) == straight)
+    } finally decoded.unpersist()
+  }
 }
