@@ -51,14 +51,16 @@ final case class DecodedFrame(
 /** Batch decode pipeline: bytes → frames → typed rows → table
   * DataFrames (SURVEY.md §2.1-§2.2, S3-S6 + D1-D11).
   *
-  * Scale design: framing is per-mountpoint sequential (keyed
+  * Scale design: batch framing is per-mountpoint sequential (keyed
   * repartition — the only shuffle), decode is embarrassingly parallel
   * (the [[graft.plans.DecodeFrames]] node, one output row per frame,
   * written straight into Spark's row format), and the table outputs
-  * are narrow projections of one decoded Dataset. The streaming path
-  * (`RtcmStreaming.decodeStream`) frames per mountpoint in state and
-  * decodes through the same node; its source plans one input
-  * partition per mountpoint. At 100 TB the decoded set would be written
+  * are narrow projections of one decoded Dataset. The live path
+  * (`RtcmStreaming.decodeStream` over the NTRIP source) has no framing
+  * stage at all: the source's reader threads frame as bytes arrive, so
+  * each chunk holds whole frames, and the same node splits and decodes
+  * them in the source stage, one input partition per mountpoint, with
+  * no state and no shuffle. At 100 TB the decoded set would be written
   * partitioned by (date(receive_time), constellation) and the obs
   * explode runs map-side — no additional shuffle.
   */
@@ -145,12 +147,18 @@ object RtcmPipeline {
     * plan node: rows go from the frames' columns to `DecodedFrame` rows
     * without a JVM object per row. The batch path (`frameChunks`) and
     * the streaming path (`RtcmStreaming.decodeStream`) both land here. */
-  def decode(frames: Dataset[EncodedFrame]): Dataset[DecodedFrame] = {
-    val spark = frames.sparkSession
+  def decode(frames: Dataset[EncodedFrame]): Dataset[DecodedFrame] =
+    decodeNode(frames.toDF(), "frame", packed = false)
+
+  /** The [[graft.plans.DecodeFrames]] node over `input`'s `mountPoint`,
+    * `receiveMicros` and `frameColumn` columns; `packed` as the node's. */
+  private[graft] def decodeNode(input: DataFrame, frameColumn: String,
+                                packed: Boolean): Dataset[DecodedFrame] = {
+    val spark = input.sparkSession
     import spark.implicits._
     ensureDecodeStrategy(spark)
-    val child = frames.select(col("mountPoint"), col("receiveMicros"), col("frame"))
-    PlanDataFrame.ofRows(spark, DecodeFrames.over(child.queryExecution.analyzed))
+    val child = input.select(col("mountPoint"), col("receiveMicros"), col(frameColumn))
+    PlanDataFrame.ofRows(spark, DecodeFrames.over(child.queryExecution.analyzed, frameColumn, packed))
       .as[DecodedFrame]
   }
 

@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.etl.{DecodedFrame, EncodedFrame, RtcmPipeline}
+import graft.rtcm.RtcmFraming
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.catalyst.InternalRow
@@ -20,18 +21,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * A `Dataset.map(decodeOne)` would instead run the generated object
   * serializer over every nested observation of every frame.
   *
-  * `mountPoint`, `receiveMicros` and `frame` are the child's columns of
-  * those names; `output` is a fresh attribute per field of
-  * [[DecodeFrames.Schema]]. One output row per input row, no shuffle.
+  * `mountPoint`, `receiveMicros` and `frame` are the child's columns
+  * bound by [[DecodeFrames.over]]; `output` is a fresh attribute per
+  * field of [[DecodeFrames.Schema]]. No shuffle. When `packed` is false
+  * each input row holds one frame and yields one output row. When it is
+  * true each input row holds whole frames back to back, as the NTRIP
+  * source's chunks do, and yields one output row per frame, split by
+  * `RtcmFraming.splitPacked` in the same task; only
+  * `RtcmStreaming.decodeStream` sets it, for input it has checked
+  * comes straight from that source.
   */
 case class DecodeFrames(
     mountPoint: Attribute,
     receiveMicros: Attribute,
     frame: Attribute,
+    packed: Boolean,
     output: Seq[Attribute],
     child: LogicalPlan) extends UnaryNode {
   override def producedAttributes: AttributeSet = AttributeSet(output)
-  override def maxRows: Option[Long] = child.maxRows
+  override def maxRows: Option[Long] = if (packed) None else child.maxRows
   override protected def withNewChildInternal(newChild: LogicalPlan): DecodeFrames =
     copy(child = newChild)
 }
@@ -40,13 +48,13 @@ object DecodeFrames {
   /** The node's output schema: exactly the `DecodedFrame` encoder's. */
   val Schema: StructType = Encoders.product[DecodedFrame].schema
 
-  /** Decode node over `frames`, whose `EncodedFrame` columns are bound
-    * by name. */
-  def over(frames: LogicalPlan): DecodeFrames = {
-    def in(name: String): Attribute = frames.output.find(_.name == name).getOrElse(
+  /** Decode node over `input`, whose `mountPoint`, `receiveMicros` and
+    * `frameColumn` columns are bound by name. */
+  def over(input: LogicalPlan, frameColumn: String, packed: Boolean): DecodeFrames = {
+    def in(name: String): Attribute = input.output.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"DecodeFrames input lacks column $name"))
-    DecodeFrames(in("mountPoint"), in("receiveMicros"), in("frame"),
-      DataTypeUtils.toAttributes(Schema), frames)
+    DecodeFrames(in("mountPoint"), in("receiveMicros"), in(frameColumn), packed,
+      DataTypeUtils.toAttributes(Schema), input)
   }
 }
 
@@ -56,7 +64,8 @@ object DecodeFrames {
 object DecodeFramesStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case d: DecodeFrames =>
-      DecodeFramesExec(d.mountPoint, d.receiveMicros, d.frame, d.output, planLater(d.child)) :: Nil
+      DecodeFramesExec(d.mountPoint, d.receiveMicros, d.frame, d.packed, d.output,
+        planLater(d.child)) :: Nil
     case _ => Nil
   }
 }
@@ -65,12 +74,13 @@ case class DecodeFramesExec(
     mountPoint: Attribute,
     receiveMicros: Attribute,
     frame: Attribute,
+    packed: Boolean,
     output: Seq[Attribute],
     child: SparkPlan) extends UnaryExecNode {
 
   override def producedAttributes: AttributeSet = AttributeSet(output)
-  // row for row: the child's partition count, but none of its
-  // partitioning keys survive into the output
+  // the child's partition count, but none of its partitioning keys
+  // survive into the output
   override def outputPartitioning: Partitioning =
     UnknownPartitioning(child.outputPartitioning.numPartitions)
 
@@ -80,12 +90,14 @@ case class DecodeFramesExec(
     child.execute().mapPartitions { rows =>
       val writer = new DecodedRowWriter
       val mounts = new java.util.HashMap[UTF8String, String]()
-      rows.map { r =>
+      rows.flatMap { r =>
         val m = r.getUTF8String(mountOrd)
         var mount = mounts.get(m)
         if (mount == null) { mount = m.toString; mounts.put(m.clone(), mount) }
-        writer.write(RtcmPipeline.decodeOne(
-          EncodedFrame(mount, r.getLong(microsOrd), r.getBinary(frameOrd))))
+        val micros = r.getLong(microsOrd)
+        val bytes = r.getBinary(frameOrd)
+        val frames = if (packed) RtcmFraming.splitPacked(bytes) else Iterator.single(bytes)
+        frames.map(f => writer.write(RtcmPipeline.decodeOne(EncodedFrame(mount, micros, f))))
       }
     }
   }

@@ -15,9 +15,11 @@ package graft.rtcm
   * bounded (maxBuffer) so per-key streaming state can't grow without
   * limit at scale (SURVEY.md §7 risk 6).
   *
-  * Pure function of (state, chunk) → (state', frames) so it can run
-  * inside `flatMapGroupsWithState` keyed by mountpoint, or be folded
-  * over batch rows.
+  * Pure function of (state, chunk) → (state', frames), so one fold
+  * serves every front end: the NTRIP source's reader threads run it per
+  * connection as bytes arrive, `RtcmStreaming.frameStream` carries the
+  * state per mountpoint for other chunk streams, and
+  * `RtcmPipeline.frameChunks` folds it over batch rows.
   */
 object RtcmFraming {
   final val Preamble: Byte = 0xD3.toByte
@@ -82,4 +84,26 @@ object RtcmFraming {
 
   /** Convenience: extract all frames from a self-contained byte blob. */
   def frames(data: Array[Byte]): Vector[Array[Byte]] = feed(emptyState, data)._2
+
+  /** The frames of `packed`, which holds whole frames back to back (as
+    * the NTRIP source's chunks do, [[feed]] having already checked their
+    * CRCs): each frame's extent comes from its 10-bit length header, with
+    * no search and no CRC. A byte that is not a preamble where a frame
+    * must start, or a length that runs past the end, fails the
+    * `require`: such input was not framed by [[feed]]. */
+  def splitPacked(packed: Array[Byte]): Iterator[Array[Byte]] = new Iterator[Array[Byte]] {
+    private var pos = 0
+    override def hasNext: Boolean = pos < packed.length
+    override def next(): Array[Byte] = {
+      if (!hasNext) throw new NoSuchElementException("no frame left")
+      require(packed(pos) == Preamble && packed.length - pos >= 6,
+        s"no whole RTCM frame at byte $pos of a ${packed.length}-byte packed chunk")
+      val end = pos + (((packed(pos + 1) & 0x03) << 8) | (packed(pos + 2) & 0xFF)) + 6
+      require(end <= packed.length,
+        s"RTCM frame at byte $pos runs to byte $end, past the ${packed.length}-byte packed chunk")
+      val frame = java.util.Arrays.copyOfRange(packed, pos, end)
+      pos = end
+      frame
+    }
+  }
 }

@@ -47,9 +47,10 @@ import javax.net.ssl.SSLContext
   * Blocking JVM sockets on purpose: one caster connection is a
   * single sequential byte stream; concurrency comes from running one
   * client per mountpoint on the ingest host (or inside a streaming
-  * source's partition reader), not from async IO. Downstream framing/
-  * CRC/decode is the Spark pipeline — this class only yields raw body
-  * chunks, which become `RawChunk` rows.
+  * source's reader thread), not from async IO. Framing/CRC happens in
+  * the caller (`NtripSource`'s reader threads, or the Spark pipeline
+  * for replayed chunks), decode in the Spark pipeline — this class only
+  * yields raw body chunks.
   */
 final class NtripClient(
     host: String,

@@ -22,7 +22,9 @@ import graft.etl.RawChunk
   * its file streaming source, whose checkpointed file tracking plus a
   * file sink is end-to-end exactly-once. The rest of the pipeline
   * (framer → decode → sinks) is unchanged — it consumes the same
-  * `Dataset[RawChunk]`.
+  * `Dataset[RawChunk]`. Its chunks are raw reads, not whole frames, so
+  * `RtcmStreaming.decodeStream` frames them with the stateful
+  * `frameStream`.
   *
   * File format: one JSON object per chunk
   * `{"mountPoint":…,"receiveMicros":…,"seq":…,"data":"<base64>"}`,

@@ -1,16 +1,17 @@
 package graft.streaming
 
 import java.util
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
 import graft.etl.RawChunk
+import graft.rtcm.RtcmFraming
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, ReportsSourceMetrics, SupportsAdmissionControl}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -28,12 +29,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * ```
   *
   * One driver-side reader thread per mountpoint drains an NtripClient
-  * (chunked/raw body reads) into a BOUNDED in-memory buffer
-  * (`maxBufferedChunks`; readers block when full, pushing
-  * backpressure to the caster via TCP flow control); offsets are the
-  * global count of buffered chunks and micro-batches read buffer
-  * slices — the same driver-buffered design as Spark's own socket
-  * source. A micro-batch is planned as one input partition per
+  * (chunked/raw body reads) and frames the bytes as they arrive, as the
+  * reference's reader does (src/ntripclient.py:523-544): it folds
+  * `RtcmFraming.feed` over each connection's reads and buffers only
+  * whole frames. A buffered chunk is the CRC-valid frames that one read
+  * completed, back to back, stamped with that read's receive time; a
+  * read that completes no frame buffers nothing. On reconnect the
+  * unfinished residual is dropped (it could only fail CRC against the
+  * new stream) and framing starts afresh. Because every chunk is whole
+  * frames, `RtcmStreaming.decodeStream` decodes this source with no
+  * streaming state.
+  *
+  * The buffer is BOUNDED (`maxBufferedChunks`; readers block when full,
+  * pushing backpressure to the caster via TCP flow control); offsets
+  * are the global count of buffered chunks and micro-batches read
+  * buffer slices — the same driver-buffered design as Spark's own
+  * socket source. A micro-batch is planned as one input partition per
   * mountpoint present in its slice, each packed into primitive arrays
   * in arrival order (see [[NtripInputPartition]]). The same delivery
   * caveat applies: a live TCP byte stream is
@@ -46,8 +57,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Options: `host`, `port`, `mountpoints` (csv), `user`/`passwd`,
   * `tls` (SSLSocketFactory; https casters), `nmeaGga` (VRS
-  * mountpoints), `maxChunksPerTrigger` (admission control),
-  * `maxBufferedChunks` (driver-heap bound, default 65536).
+  * mountpoints), `maxChunksPerTrigger` (admission control, in buffered
+  * chunks of whole frames), `maxBufferedChunks` (driver-heap bound in
+  * buffered chunks of whole frames, default 65536).
+  *
+  * Each micro-batch's progress reports, per mountpoint `M`, in
+  * `StreamingQueryProgress.sources(i).metrics`: `M.frames` (frames
+  * buffered), `M.skippedBytes` (bytes read that are in no frame: noise,
+  * CRC rejects and residuals dropped at reconnect), `M.reconnects`, and
+  * `M.lastReconnectCause` (class and message of the last error that
+  * ended a connection; absent until one does).
   */
 class NtripSourceProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -82,8 +101,16 @@ private final case class NtripOffset(n: Long) extends Offset {
   override def json(): String = n.toString
 }
 
+/** What one mountpoint's reader has framed and dropped so far. */
+private final class ReaderCounters {
+  val frames = new AtomicLong
+  val skippedBytes = new AtomicLong
+  val reconnects = new AtomicLong
+  @volatile var lastReconnectCause: Option[String] = None
+}
+
 private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends MicroBatchStream with SupportsAdmissionControl with ReportsSourceMetrics {
 
   private val host = options.get("host")
   private val port = options.getInt("port", 2101)
@@ -133,8 +160,12 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
     }
   }
 
+  private val counters: Map[String, ReaderCounters] =
+    mounts.map(_ -> new ReaderCounters).toMap
+
   private val readers: Seq[Thread] = mounts.toIndexedSeq.map { mount =>
     val t = new Thread(() => {
+      val count = counters(mount)
       var seq = 0L
       var orderlyEnd = false
       // abnormal errors (caster drop, read timeout) RECONNECT with
@@ -144,20 +175,38 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
       var backoffMs = 1000L
       while (!stopped.get() && !orderlyEnd) {
         val client = new NtripClient(host, port, tls = tls)
+        // this connection's framing state: its residual dies with it
+        var framing = RtcmFraming.emptyState
         try {
           client.openStream(mount, user, passwd, nmeaGga = nmeaGga)
           backoffMs = 1000L
           var chunk = client.readChunk()
           while (chunk.isDefined && !stopped.get()) {
             val micros = System.currentTimeMillis() * 1000L
-            buffer.synchronized {
-              // bound the buffer: block (and stop draining the socket)
-              // until the query consumes — natural TCP backpressure
-              while (buffer.length >= maxBuffered && !stopped.get())
-                buffer.wait(200L)
-              if (!stopped.get()) buffer += RawChunk(mount, micros, seq, chunk.get)
+            val read = chunk.get
+            val (next, frames) = RtcmFraming.feed(framing, read)
+            val frameBytes = frames.map(_.length.toLong).sum
+            count.skippedBytes.addAndGet(framing.size + read.length - next.size - frameBytes)
+            framing = next
+            if (frames.nonEmpty) {
+              val data = if (frames.size == 1) frames.head else {
+                val all = new Array[Byte](frameBytes.toInt)
+                var at = 0
+                frames.foreach { f => System.arraycopy(f, 0, all, at, f.length); at += f.length }
+                all
+              }
+              buffer.synchronized {
+                // bound the buffer: block (and stop draining the socket)
+                // until the query consumes — natural TCP backpressure
+                while (buffer.length >= maxBuffered && !stopped.get())
+                  buffer.wait(200L)
+                if (!stopped.get()) {
+                  buffer += RawChunk(mount, micros, seq, data)
+                  count.frames.addAndGet(frames.size.toLong)
+                }
+              }
+              seq += 1
             }
-            seq += 1
             chunk = if (stopped.get()) None else client.readChunk()
           }
           orderlyEnd = chunk.isEmpty && !stopped.get()
@@ -165,10 +214,15 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
           // stop() interrupts the reader; InterruptedException is not NonFatal
           case e if stopped.get() && (NonFatal(e) || e.isInstanceOf[InterruptedException]) =>
             () // orderly shutdown
-          case NonFatal(_) =>
+          case NonFatal(e) =>
+            count.reconnects.incrementAndGet()
+            count.lastReconnectCause = Some(e.toString)
             try Thread.sleep(backoffMs) catch { case _: InterruptedException => () }
             backoffMs = math.min(backoffMs * 2, 300000L) // cap 5 min (reference cap)
-        } finally client.close()
+        } finally {
+          client.close()
+          count.skippedBytes.addAndGet(framing.size.toLong)
+        }
       }
     }, s"ntrip-reader-$mount")
     t.setDaemon(true)
@@ -243,6 +297,17 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
       committed = math.max(committed, e)
       buffer.notifyAll() // wake readers blocked on the buffer bound
     }
+  }
+
+  override def metrics(latestConsumedOffset: util.Optional[Offset]): util.Map[String, String] = {
+    val m = new util.TreeMap[String, String]()
+    counters.foreach { case (mount, c) =>
+      m.put(s"$mount.frames", c.frames.get.toString)
+      m.put(s"$mount.skippedBytes", c.skippedBytes.get.toString)
+      m.put(s"$mount.reconnects", c.reconnects.get.toString)
+      c.lastReconnectCause.foreach(m.put(s"$mount.lastReconnectCause", _))
+    }
+    m
   }
 
   /** Test seam: current number of buffered, unconsumed chunks. */

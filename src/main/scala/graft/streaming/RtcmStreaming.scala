@@ -3,23 +3,36 @@ package graft.streaming
 import graft.etl.{EncodedFrame, RawChunk, RtcmPipeline}
 import graft.rtcm.RtcmFraming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias, Union}
+import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Structured Streaming front-end of the ingest pipeline: raw chunk
-  * stream → stateful per-mountpoint framing → decoded rows
-  * (SURVEY.md §3.1 Spark retrace).
+  * stream → frames → decoded rows (SURVEY.md §3.1 Spark retrace).
   *
-  * State design (100 TB discipline): per-key state is ONE bounded
-  * residual byte buffer (≤ RtcmFraming.DefaultMaxBuffer) — constant
-  * memory per mountpoint regardless of stream length. A processing-
-  * time timeout evicts buffers of mountpoints that stopped
-  * transmitting (the reference's watchdog analog, src/ingestion.py:61-95).
+  * Live NTRIP input needs no streaming state: the source's reader
+  * threads frame each connection's bytes as they arrive (as the
+  * reference's reader does, src/ntripclient.py:523-544), so every chunk
+  * it delivers holds whole frames, and [[decodeStream]] splits and
+  * decodes them in the source stage — one stateless stage per
+  * micro-batch. Any other chunk stream (durable-log replay, replay
+  * files, `MemoryStream`) has arbitrary chunk boundaries and goes
+  * through [[frameStream]], whose per-key state is ONE bounded residual
+  * byte buffer (≤ RtcmFraming.DefaultMaxBuffer) — constant memory per
+  * mountpoint regardless of stream length. A processing-time timeout
+  * evicts buffers of mountpoints that stopped transmitting (the
+  * reference's watchdog analog, src/ingestion.py:61-95).
   */
 object RtcmStreaming {
 
-  /** Per-mountpoint sequential framing as flatMapGroupsWithState.
-    * Chunks inside a micro-batch are ordered by `seq` (arrival order);
-    * the residual buffer crosses micro-batch boundaries via state.
+  /** Per-mountpoint sequential framing as flatMapGroupsWithState, for
+    * chunk streams whose boundaries fall anywhere in a frame. Chunks
+    * inside a micro-batch are ordered by `seq` (arrival order); the
+    * residual buffer crosses micro-batch boundaries via state. It costs
+    * a hash exchange of the raw bytes, a second stage and a state-store
+    * commit per micro-batch; [[decodeStream]] skips it for the NTRIP
+    * source, whose chunks are already whole frames.
     *
     * `stateTimeout = Some(d)` evicts buffers of silent mountpoints
     * after `d` of processing time (production hygiene; note a
@@ -53,9 +66,32 @@ object RtcmStreaming {
       }
   }
 
-  /** Full streaming decode: chunks → frames → DecodedFrame rows. */
+  /** Full streaming decode: chunks → frames → DecodedFrame rows.
+    *
+    * The plan is chosen from `chunks`' analyzed plan. When it reads only
+    * the NTRIP source (see [[readsNtripChunksOnly]]), every chunk holds
+    * whole frames, and `DecodeFrames` splits and decodes them in the
+    * source stage: no state, no exchange, no second stage. Any other
+    * input is framed by [[frameStream]] first. */
   def decodeStream(chunks: Dataset[RawChunk]): Dataset[graft.etl.DecodedFrame] =
-    RtcmPipeline.decode(frameStream(chunks))
+    if (readsNtripChunksOnly(chunks.queryExecution.analyzed))
+      RtcmPipeline.decodeNode(chunks.toDF(), "data", packed = true)
+    else RtcmPipeline.decode(frameStream(chunks))
+
+  /** Whether every row of `plan` is a chunk the NTRIP source delivered,
+    * unchanged: its leaves are all [[NtripSourceProvider]] relations, and
+    * the nodes above them only filter, union, alias or pass columns
+    * through. Anything else could reshape a chunk's bytes, so it keeps
+    * the stateful framer. */
+  private[streaming] def readsNtripChunksOnly(plan: LogicalPlan): Boolean = plan match {
+    case r: StreamingRelationV2 => r.table.isInstanceOf[NtripTable]
+    case u: Union => u.children.forall(readsNtripChunksOnly)
+    case f: Filter => readsNtripChunksOnly(f.child)
+    case a: SubqueryAlias => readsNtripChunksOnly(a.child)
+    case p: Project =>
+      p.projectList.forall(_.isInstanceOf[Attribute]) && readsNtripChunksOnly(p.child)
+    case _ => false
+  }
 
   /** Land the decoded stream as partitioned parquet tables via
     * foreachBatch — the test-harness stand-in for the JDBC/TimescaleDB

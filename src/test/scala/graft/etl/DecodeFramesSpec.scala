@@ -91,6 +91,53 @@ class DecodeFramesSpec extends AnyFunSuite {
     assert(fresh.experimental.extraStrategies.contains(DecodeFramesStrategy))
   }
 
+  /** Every kind of frame, packed whole and back to back into chunks of
+    * one to four frames, each chunk with its own receive time. */
+  private def packedChunks: Seq[(RawChunk, Seq[Array[Byte]])] = {
+    val kinds = everyKind
+    val sizes = Iterator.continually(Seq(1, 3, 2, 4)).flatten
+    val out = Seq.newBuilder[(RawChunk, Seq[Array[Byte]])]
+    var rest = kinds
+    var i = 0
+    while (rest.nonEmpty) {
+      val (fs, more) = rest.splitAt(sizes.next())
+      out += RawChunk("PACKED", SyntheticRtcm.T0Micros + i * 1000L, i.toLong,
+        fs.flatMap(_.toSeq).toArray) -> fs
+      rest = more
+      i += 1
+    }
+    out.result()
+  }
+
+  test("packed mode: a chunk of N whole frames decodes to the rows of its N frames") {
+    import spark.implicits._
+    val chunked = packedChunks
+    assert(chunked.exists(_._2.size > 1))
+    val perFrame = chunked.flatMap { case (c, fs) =>
+      fs.map(f => EncodedFrame(c.mountPoint, c.receiveMicros, f))
+    }
+    val packed = RtcmPipeline.decodeNode(spark.createDataset(chunked.map(_._1)).toDF(), "data",
+      packed = true)
+    val got = packed.collect().toSeq
+    assert(got == RtcmPipeline.decode(spark.createDataset(perFrame)).collect().toSeq)
+    assert(got == perFrame.map(RtcmPipeline.decodeOne))
+    assert(packed.queryExecution.sparkPlan.collectFirst { case e: DecodeFramesExec => e.packed }
+      .contains(true))
+  }
+
+  test("packed mode fails loudly on a frame length that runs past the chunk end") {
+    import spark.implicits._
+    val whole = everyKind.take(3).flatMap(_.toSeq).toArray
+    val cut = RawChunk("PACKED", SyntheticRtcm.T0Micros, 0L, whole.dropRight(2))
+    val err = intercept[Exception] {
+      RtcmPipeline.decodeNode(spark.createDataset(Seq(cut)).toDF(), "data", packed = true)
+        .collect()
+    }
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+    assert(messages.exists(_.contains("past the")), messages.mkString(" | "))
+  }
+
   test("decodeStream lands the same rows as the batch decode") {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -5,12 +5,15 @@ import java.net.ServerSocket
 import java.nio.charset.StandardCharsets.ISO_8859_1
 
 import graft.etl.{RawChunk, SparkTestSession, SyntheticRtcm}
+import graft.rtcm.{Crc24q, RtcmFraming}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Live-socket NTRIP path: a localhost caster serving a chunked
   * HTTP body (the reference's transfer mode, ntripclient.py:437-455)
-  * feeds the client → RawChunk bridge → stateful streaming framer —
-  * the byte-level contract end-to-end over a real TCP connection. */
+  * feeds the client → source reader (which frames as bytes arrive) →
+  * stateless decode, and the client → RawChunk bridge → stateful
+  * streaming framer — the byte-level contract end-to-end over a real
+  * TCP connection. */
 class NtripClientSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -412,5 +415,198 @@ class NtripClientSpec extends AnyFunSuite {
         assert(total == bodyBytes, s"$total != $bodyBytes — live chunks were dropped")
       } finally stream.stop()
     } finally server.close()
+  }
+
+  // --- reader-side framing and the stateless live plan ---
+
+  /** Caster serving one body per connection, in order, each as HTTP
+    * chunks of frame-misaligned lengths. A body marked `cut` ends with a
+    * chunk that promises 64 bytes, sends 10 and closes the socket: the
+    * client sees a connection dropped mid-frame, and never the 10 bytes. */
+  private def serveConnections(server: ServerSocket, bodies: Seq[(Array[Byte], Boolean)]): Thread = {
+    val t = new Thread(() => {
+      try {
+        bodies.foreach { case (body, cut) =>
+          val sock = server.accept()
+          try {
+            val rd = new BufferedReader(new InputStreamReader(sock.getInputStream, ISO_8859_1))
+            Iterator.continually(rd.readLine()).takeWhile(l => l != null && l.nonEmpty).foreach(_ => ())
+            val out = sock.getOutputStream
+            def w(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
+            w("HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n")
+            val lens = Iterator.continually(Seq(13, 61, 150, 7, 300)).flatten
+            var off = 0
+            while (off < body.length) {
+              val n = math.min(lens.next(), body.length - off)
+              w(f"$n%x\r\n"); out.write(body, off, n); w("\r\n")
+              off += n
+            }
+            if (cut) { w(f"${64}%x\r\n"); out.write(new Array[Byte](10)) }
+            else w("0\r\n\r\n")
+            out.flush()
+          } finally sock.close()
+        }
+      } catch { case _: Throwable => () } // server closed
+    })
+    t.setDaemon(true)
+    t.start()
+    t
+  }
+
+  test("reader frames each connection like RtcmFraming and reports what it drops") {
+    val rnd = new java.util.Random(61L)
+    def noise(n: Int): Array[Byte] = {
+      val g = new Array[Byte](n)
+      rnd.nextBytes(g)
+      g.map(b => if (b == RtcmFraming.Preamble) 0.toByte else b)
+    }
+    val frames = SyntheticRtcm.framesFor("MNT0", 100, 40, 60L).map(_._2)
+    // garbage prefix, noise after every fifth frame, frame 3's CRC broken
+    val prefix = noise(37)
+    val body = scala.collection.mutable.ArrayBuffer.empty[Byte] ++= prefix
+    val starts = new Array[Int](frames.size)
+    var noiseBytes = 0
+    frames.zipWithIndex.foreach { case (f, i) =>
+      starts(i) = body.length
+      if (i == 3) body ++= f.updated(f.length - 1, (f.last ^ 0x5A).toByte) else body ++= f
+      if (i % 5 == 1) { val g = noise(1 + i % 4); body ++= g; noiseBytes += g.length }
+    }
+    val whole = body.toArray
+    val good = frames.indices.filter(_ != 3)
+    // the first connection drops 20 bytes into frame 30; the second
+    // serves the whole body
+    val cutAt = starts(30) + 20
+    val first = whole.take(cutAt)
+    val expected = good.filter(_ < 30).map(frames) ++ good.map(frames)
+    def key(fs: Seq[Array[Byte]]) = fs.map(_.toSeq)
+    // the batch framer over each connection's delivered bytes agrees
+    assert(key(RtcmFraming.frames(first) ++ RtcmFraming.frames(whole)) ==
+      key(expected))
+    val noiseBeforeCut = frames.indices.filter(i => i % 5 == 1 && i < 30).map(i => 1 + i % 4).sum
+    val skipped = (prefix.length + noiseBeforeCut + frames(3).length + 20) +
+      (prefix.length + noiseBytes + frames(3).length)
+    assert(skipped == first.length + whole.length - expected.map(_.length).sum)
+
+    val server = new ServerSocket(0)
+    try {
+      serveConnections(server, Seq(first -> true, whole -> false))
+      val stream = mkStream(server.getLocalPort)
+      try {
+        val got = drainAll(stream, 0L, expected.map(_.length.toLong).sum)
+        got.foreach { c =>
+          val split = RtcmFraming.splitPacked(c.data).toSeq
+          assert(split.nonEmpty && split.forall(Crc24q.frameValid), "not whole frames")
+          assert(split.flatMap(_.toSeq) == c.data.toSeq)
+        }
+        assert(key(got.flatMap(c => RtcmFraming.splitPacked(c.data))) == key(expected))
+        import scala.jdk.CollectionConverters._
+        val deadline = System.currentTimeMillis() + 10000
+        def metrics = stream.metrics(java.util.Optional.empty()).asScala.toMap
+        while (!metrics.get("MNT0.skippedBytes").contains(skipped.toString) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+        val m = metrics
+        assert(m("MNT0.frames") == expected.size.toString, m)
+        assert(m("MNT0.skippedBytes") == skipped.toString, m)
+        assert(m("MNT0.reconnects") == "1", m)
+        assert(m("MNT0.lastReconnectCause").matches("java\\.[\\w.]+Exception: .+"), m)
+      } finally stream.stop()
+    } finally server.close()
+  }
+
+  private def ntripChunks(port: Int, mounts: String): org.apache.spark.sql.Dataset[RawChunk] = {
+    import spark.implicits._
+    spark.readStream.format("graft.streaming.NtripSourceProvider")
+      .option("host", "127.0.0.1").option("port", port.toString)
+      .option("mountpoints", mounts)
+      .load().as[RawChunk]
+  }
+
+  test("decodeStream over the NTRIP source: no state, one stage per batch, batch-decode rows") {
+    import graft.etl.{DecodedFrame, RtcmPipeline}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.streaming.OutputMode
+    import spark.implicits._
+    // bodies with garbage, noise and frame-misaligned splits
+    val bodies = Seq("MNT0", "MNT1").zipWithIndex.map { case (m, i) =>
+      m -> SyntheticRtcm.chunksFor(m, 100 + i, 48, 70L + i).flatMap(_.data.toSeq).toArray
+    }.toMap
+    val now = System.currentTimeMillis() * 1000L
+    val reference = RtcmPipeline.decode(RtcmPipeline.frameChunks(spark.createDataset(
+      bodies.toSeq.flatMap { case (m, b) =>
+        b.grouped(100).zipWithIndex.map { case (c, i) => RawChunk(m, now + i, i.toLong, c) }
+      }))).collect().toSeq
+    def normal(fs: Seq[DecodedFrame]) =
+      fs.map(_.copy(rtcm_package_id = 0L, receive_micros = 0L)).sortBy(_.toString)
+
+    val stages = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val marker = s"ntripspec-${java.util.UUID.randomUUID()}"
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => stages.merge(b, Integer.valueOf(1),
+            (a: Integer, c: Integer) => Integer.valueOf(a.intValue + c.intValue)))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          markerSeen = true
+    }
+    val server = new ServerSocket(0)
+    try {
+      serveMany(server, bodies.map { case (m, b) => m -> Seq(b) })
+      spark.sparkContext.addSparkListener(listener)
+      val q = RtcmStreaming.decodeStream(ntripChunks(server.getLocalPort, "MNT0,MNT1"))
+        .writeStream.format("memory").queryName("ntrip_stateless_out")
+        .outputMode(OutputMode.Append).start()
+      try {
+        val deadline = System.currentTimeMillis() + 30000
+        def landed(): Long = spark.table("ntrip_stateless_out").count()
+        while (landed() < reference.size && System.currentTimeMillis() < deadline) {
+          Thread.sleep(200)
+          q.processAllAvailable()
+        }
+        val got = spark.table("ntrip_stateless_out").as[DecodedFrame].collect().toSeq
+        assert(normal(got) == normal(reference))
+        assert(q.recentProgress.nonEmpty && q.recentProgress.forall(_.stateOperators.isEmpty))
+        assert(q.lastProgress.stateOperators.isEmpty)
+        val sourceMetrics = q.lastProgress.sources.head.metrics
+        assert(sourceMetrics.get("MNT0.frames").toLong + sourceMetrics.get("MNT1.frames").toLong ==
+          reference.size)
+      } finally q.stop()
+      // listener events arrive in order: once a job submitted after the
+      // query stopped is seen, every batch's stages have been counted
+      spark.sparkContext.setJobDescription(marker)
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerSeen)
+      import scala.jdk.CollectionConverters._
+      val batches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId.toString).toSet
+      assert(batches.nonEmpty)
+      assert(stages.asScala.toMap.filter { case (b, _) => batches(b) } ==
+        batches.map(_ -> Integer.valueOf(1)).toMap, "one stage per micro-batch")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      server.close()
+    }
+  }
+
+  test("decodeStream keeps the stateful framer for any input that is not the NTRIP source alone") {
+    import graft.plans.DecodeFrames
+    import org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // planning only: no query starts, so the source never connects
+    val ntrip = ntripChunks(1, "MNT0")
+    def stateful(ds: org.apache.spark.sql.Dataset[graft.etl.DecodedFrame]): Boolean =
+      ds.queryExecution.analyzed.exists(_.isInstanceOf[FlatMapGroupsWithState])
+    val live = RtcmStreaming.decodeStream(ntrip)
+    assert(!stateful(live))
+    assert(live.queryExecution.analyzed.collectFirst { case d: DecodeFrames => d.packed }.contains(true))
+    assert(!stateful(RtcmStreaming.decodeStream(ntrip.union(ntripChunks(1, "MNT1")))))
+    assert(stateful(RtcmStreaming.decodeStream(ntrip.union(MemoryStream[RawChunk].toDS()))))
+    assert(stateful(RtcmStreaming.decodeStream(MemoryStream[RawChunk].toDS())))
+    assert(stateful(RtcmStreaming.decodeStream(ntrip.map(c => c.copy(data = c.data.drop(1))))))
   }
 }
