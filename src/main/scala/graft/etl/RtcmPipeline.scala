@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions._
 final case class RawChunk(mountPoint: String, receiveMicros: Long, seq: Long, data: Array[Byte])
 
 /** One complete CRC-valid RTCM frame + its arrival envelope
-  * (reference envelope: src/ingestion.py:325-332). */
+  * (reference envelope: src/ingestion.py:325-332). `RtcmStreaming.decodeStream`
+  * also reads the NTRIP source's chunks, whole frames back to back, as
+  * this type: `RtcmPipeline.decode` splits them. */
 final case class EncodedFrame(mountPoint: String, receiveMicros: Long, frame: Array[Byte])
 
 /** Observation output row (matches `*_observations` columns,
@@ -146,19 +148,16 @@ object RtcmPipeline {
   /** Decode every frame with `decodeOne`, as the [[graft.plans.DecodeFrames]]
     * plan node: rows go from the frames' columns to `DecodedFrame` rows
     * without a JVM object per row. The batch path (`frameChunks`) and
-    * the streaming path (`RtcmStreaming.decodeStream`) both land here. */
-  def decode(frames: Dataset[EncodedFrame]): Dataset[DecodedFrame] =
-    decodeNode(frames.toDF(), "frame", packed = false)
-
-  /** The [[graft.plans.DecodeFrames]] node over `input`'s `mountPoint`,
-    * `receiveMicros` and `frameColumn` columns; `packed` as the node's. */
-  private[graft] def decodeNode(input: DataFrame, frameColumn: String,
-                                packed: Boolean): Dataset[DecodedFrame] = {
-    val spark = input.sparkSession
+    * the streaming path (`RtcmStreaming.decodeStream`) both land here.
+    * Each row's `frame` holds whole frames back to back (one, as
+    * `RtcmFraming.feed` emits them, or a chunk of the NTRIP source); a
+    * row that does not fails the node's `require`. */
+  def decode(frames: Dataset[EncodedFrame]): Dataset[DecodedFrame] = {
+    val spark = frames.sparkSession
     import spark.implicits._
     ensureDecodeStrategy(spark)
-    val child = input.select(col("mountPoint"), col("receiveMicros"), col(frameColumn))
-    PlanDataFrame.ofRows(spark, DecodeFrames.over(child.queryExecution.analyzed, frameColumn, packed))
+    val child = frames.select(col("mountPoint"), col("receiveMicros"), col("frame"))
+    PlanDataFrame.ofRows(spark, DecodeFrames.over(child.queryExecution.analyzed))
       .as[DecodedFrame]
   }
 

@@ -15,31 +15,26 @@ import org.apache.spark.sql.types.{ArrayType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-frame RTCM decode as a plan node (custom-operator ladder (c),
-  * like [[AsOfMergeLogical]]): each `EncodedFrame` row of the child
-  * goes through `RtcmPipeline.decodeOne`, and the result is written as
-  * one `DecodedFrame`-schema row straight into Spark's row format.
+  * like [[AsOfMergeLogical]]): each frame of the child's rows goes
+  * through `RtcmPipeline.decodeOne`, and the result is written as one
+  * `DecodedFrame`-schema row straight into Spark's row format.
   * A `Dataset.map(decodeOne)` would instead run the generated object
   * serializer over every nested observation of every frame.
   *
-  * `mountPoint`, `receiveMicros` and `frame` are the child's columns
-  * bound by [[DecodeFrames.over]]; `output` is a fresh attribute per
-  * field of [[DecodeFrames.Schema]]. No shuffle. When `packed` is false
-  * each input row holds one frame and yields one output row. When it is
-  * true each input row holds whole frames back to back, as the NTRIP
-  * source's chunks do, and yields one output row per frame, split by
-  * `RtcmFraming.splitPacked` in the same task; only
-  * `RtcmStreaming.decodeStream` sets it, for input it has checked
-  * comes straight from that source.
+  * `mountPoint`, `receiveMicros` and `frame` are the child's columns of
+  * those names; `output` is a fresh attribute per field of
+  * [[DecodeFrames.Schema]]. Each `frame` value holds whole frames back
+  * to back — one for `frameChunks`/`frameStream` rows, any number for
+  * the NTRIP source's chunks — and `RtcmFraming.splitPacked` splits
+  * it in the same task: one output row per frame, no shuffle.
   */
 case class DecodeFrames(
     mountPoint: Attribute,
     receiveMicros: Attribute,
     frame: Attribute,
-    packed: Boolean,
     output: Seq[Attribute],
     child: LogicalPlan) extends UnaryNode {
   override def producedAttributes: AttributeSet = AttributeSet(output)
-  override def maxRows: Option[Long] = if (packed) None else child.maxRows
   override protected def withNewChildInternal(newChild: LogicalPlan): DecodeFrames =
     copy(child = newChild)
 }
@@ -48,13 +43,13 @@ object DecodeFrames {
   /** The node's output schema: exactly the `DecodedFrame` encoder's. */
   val Schema: StructType = Encoders.product[DecodedFrame].schema
 
-  /** Decode node over `input`, whose `mountPoint`, `receiveMicros` and
-    * `frameColumn` columns are bound by name. */
-  def over(input: LogicalPlan, frameColumn: String, packed: Boolean): DecodeFrames = {
-    def in(name: String): Attribute = input.output.find(_.name == name).getOrElse(
+  /** Decode node over `frames`, whose `EncodedFrame` columns are bound
+    * by name. */
+  def over(frames: LogicalPlan): DecodeFrames = {
+    def in(name: String): Attribute = frames.output.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"DecodeFrames input lacks column $name"))
-    DecodeFrames(in("mountPoint"), in("receiveMicros"), in(frameColumn), packed,
-      DataTypeUtils.toAttributes(Schema), input)
+    DecodeFrames(in("mountPoint"), in("receiveMicros"), in("frame"),
+      DataTypeUtils.toAttributes(Schema), frames)
   }
 }
 
@@ -64,8 +59,7 @@ object DecodeFrames {
 object DecodeFramesStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case d: DecodeFrames =>
-      DecodeFramesExec(d.mountPoint, d.receiveMicros, d.frame, d.packed, d.output,
-        planLater(d.child)) :: Nil
+      DecodeFramesExec(d.mountPoint, d.receiveMicros, d.frame, d.output, planLater(d.child)) :: Nil
     case _ => Nil
   }
 }
@@ -74,7 +68,6 @@ case class DecodeFramesExec(
     mountPoint: Attribute,
     receiveMicros: Attribute,
     frame: Attribute,
-    packed: Boolean,
     output: Seq[Attribute],
     child: SparkPlan) extends UnaryExecNode {
 
@@ -95,9 +88,7 @@ case class DecodeFramesExec(
         var mount = mounts.get(m)
         if (mount == null) { mount = m.toString; mounts.put(m.clone(), mount) }
         val micros = r.getLong(microsOrd)
-        val bytes = r.getBinary(frameOrd)
-        val frames = if (packed) RtcmFraming.splitPacked(bytes) else Iterator.single(bytes)
-        frames.map(f => writer.write(RtcmPipeline.decodeOne(EncodedFrame(mount, micros, f))))
+        RtcmFraming.splitPacked(r.getBinary(frameOrd)).map(f => writer.write(RtcmPipeline.decodeOne(EncodedFrame(mount, micros, f))))
       }
     }
   }

@@ -90,7 +90,8 @@ object RtcmFraming {
     * CRCs): each frame's extent comes from its 10-bit length header, with
     * no search and no CRC. A byte that is not a preamble where a frame
     * must start, or a length that runs past the end, fails the
-    * `require`: such input was not framed by [[feed]]. */
+    * `require`: such input was not framed by [[feed]]. A single frame
+    * spanning all of `packed` is returned as `packed` itself, uncopied. */
   def splitPacked(packed: Array[Byte]): Iterator[Array[Byte]] = new Iterator[Array[Byte]] {
     private var pos = 0
     override def hasNext: Boolean = pos < packed.length
@@ -101,7 +102,9 @@ object RtcmFraming {
       val end = pos + (((packed(pos + 1) & 0x03) << 8) | (packed(pos + 2) & 0xFF)) + 6
       require(end <= packed.length,
         s"RTCM frame at byte $pos runs to byte $end, past the ${packed.length}-byte packed chunk")
-      val frame = java.util.Arrays.copyOfRange(packed, pos, end)
+      val frame =
+        if (pos == 0 && end == packed.length) packed
+        else java.util.Arrays.copyOfRange(packed, pos, end)
       pos = end
       frame
     }

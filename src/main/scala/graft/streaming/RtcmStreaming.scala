@@ -3,8 +3,7 @@ package graft.streaming
 import graft.etl.{EncodedFrame, RawChunk, RtcmPipeline}
 import graft.rtcm.RtcmFraming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias, Union}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Union}
 import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -74,22 +73,18 @@ object RtcmStreaming {
     * source stage: no state, no exchange, no second stage. Any other
     * input is framed by [[frameStream]] first. */
   def decodeStream(chunks: Dataset[RawChunk]): Dataset[graft.etl.DecodedFrame] =
-    if (readsNtripChunksOnly(chunks.queryExecution.analyzed))
-      RtcmPipeline.decodeNode(chunks.toDF(), "data", packed = true)
-    else RtcmPipeline.decode(frameStream(chunks))
+    if (readsNtripChunksOnly(chunks.queryExecution.analyzed)) {
+      val spark = chunks.sparkSession
+      import spark.implicits._
+      RtcmPipeline.decode(chunks.withColumnRenamed("data", "frame").as[EncodedFrame])
+    } else RtcmPipeline.decode(frameStream(chunks))
 
   /** Whether every row of `plan` is a chunk the NTRIP source delivered,
-    * unchanged: its leaves are all [[NtripSourceProvider]] relations, and
-    * the nodes above them only filter, union, alias or pass columns
-    * through. Anything else could reshape a chunk's bytes, so it keeps
-    * the stateful framer. */
+    * unchanged: it is one [[NtripSourceProvider]] relation or a union of
+    * them. Anything else keeps the stateful framer. */
   private[streaming] def readsNtripChunksOnly(plan: LogicalPlan): Boolean = plan match {
     case r: StreamingRelationV2 => r.table.isInstanceOf[NtripTable]
     case u: Union => u.children.forall(readsNtripChunksOnly)
-    case f: Filter => readsNtripChunksOnly(f.child)
-    case a: SubqueryAlias => readsNtripChunksOnly(a.child)
-    case p: Project =>
-      p.projectList.forall(_.isInstanceOf[Attribute]) && readsNtripChunksOnly(p.child)
     case _ => false
   }
 

@@ -109,29 +109,25 @@ class DecodeFramesSpec extends AnyFunSuite {
     out.result()
   }
 
-  test("packed mode: a chunk of N whole frames decodes to the rows of its N frames") {
+  test("a row of N whole frames decodes to the rows of its N frames") {
     import spark.implicits._
     val chunked = packedChunks
     assert(chunked.exists(_._2.size > 1))
     val perFrame = chunked.flatMap { case (c, fs) =>
       fs.map(f => EncodedFrame(c.mountPoint, c.receiveMicros, f))
     }
-    val packed = RtcmPipeline.decodeNode(spark.createDataset(chunked.map(_._1)).toDF(), "data",
-      packed = true)
-    val got = packed.collect().toSeq
+    val packed = chunked.map { case (c, _) => EncodedFrame(c.mountPoint, c.receiveMicros, c.data) }
+    val got = RtcmPipeline.decode(spark.createDataset(packed)).collect().toSeq
     assert(got == RtcmPipeline.decode(spark.createDataset(perFrame)).collect().toSeq)
     assert(got == perFrame.map(RtcmPipeline.decodeOne))
-    assert(packed.queryExecution.sparkPlan.collectFirst { case e: DecodeFramesExec => e.packed }
-      .contains(true))
   }
 
-  test("packed mode fails loudly on a frame length that runs past the chunk end") {
+  test("the node fails loudly on a frame length that runs past the row's end") {
     import spark.implicits._
     val whole = everyKind.take(3).flatMap(_.toSeq).toArray
-    val cut = RawChunk("PACKED", SyntheticRtcm.T0Micros, 0L, whole.dropRight(2))
+    val cut = EncodedFrame("PACKED", SyntheticRtcm.T0Micros, whole.dropRight(2))
     val err = intercept[Exception] {
-      RtcmPipeline.decodeNode(spark.createDataset(Seq(cut)).toDF(), "data", packed = true)
-        .collect()
+      RtcmPipeline.decode(spark.createDataset(Seq(cut))).collect()
     }
     val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
       .map(e => String.valueOf(e.getMessage)).toSeq
