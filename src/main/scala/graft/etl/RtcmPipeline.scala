@@ -57,7 +57,11 @@ final case class DecodedFrame(
   * repartition — the only shuffle), decode is embarrassingly parallel
   * (the [[graft.plans.DecodeFrames]] node, one output row per frame,
   * written straight into Spark's row format), and the table outputs
-  * are narrow projections of one decoded Dataset. The live path
+  * are narrow projections of one decoded Dataset. Decode is one frame
+  * walk ([[walkFrame]]) with two outputs: `decodeOne` builds a
+  * `DecodedFrame`, and the node's row writer writes the same values
+  * into a row, with nothing allocated per observation and no code
+  * generated per query. The live path
   * (`RtcmStreaming.decodeStream` over the NTRIP source) has no framing
   * stage at all: the source's reader threads frame as bytes arrive, so
   * each chunk holds whole frames, and the same node splits and decodes
@@ -71,50 +75,110 @@ object RtcmPipeline {
   /** Deterministic 64-bit package id — stable across retries so obs
     * rows can carry the package FK without a sink round-trip
     * (SURVEY.md §7 risk 2). FNV-1a over the identifying fields. */
-  def packageId(mountPoint: String, receiveMicros: Long, frame: Array[Byte]): Long = {
+  def packageId(mountPoint: String, receiveMicros: Long, frame: Array[Byte]): Long =
+    packageId(mountPoint, receiveMicros, frame, 0, frame.length)
+
+  /** [[packageId]] of the frame at bytes[from, until). */
+  def packageId(mountPoint: String, receiveMicros: Long, bytes: Array[Byte], from: Int,
+                until: Int): Long = {
     var h = 0xcbf29ce484222325L
-    def mix(b: Int): Unit = { h ^= (b & 0xFF); h *= 0x100000001b3L }
-    mountPoint.foreach(c => { mix(c & 0xFF); mix((c >> 8) & 0xFF) })
     var i = 0
-    while (i < 8) { mix(((receiveMicros >> (8 * i)) & 0xFF).toInt); i += 1 }
+    while (i < mountPoint.length) {
+      val c = mountPoint.charAt(i)
+      h = (h ^ (c & 0xFF)) * 0x100000001b3L
+      h = (h ^ ((c >> 8) & 0xFF)) * 0x100000001b3L
+      i += 1
+    }
     i = 0
-    while (i < frame.length) { mix(frame(i)); i += 1 }
+    while (i < 8) { h = (h ^ ((receiveMicros >> (8 * i)) & 0xFF)) * 0x100000001b3L; i += 1 }
+    i = from
+    while (i < until) { h = (h ^ (bytes(i) & 0xFF)) * 0x100000001b3L; i += 1 }
     h
   }
 
-  /** Decode a single frame envelope (pure; unit-testable). */
-  def decodeOne(f: EncodedFrame): DecodedFrame = {
-    val id = packageId(f.mountPoint, f.receiveMicros, f.frame)
+  /** Receives what [[walkFrame]] decoded from one frame, as plain
+    * values: one call per frame, whose result the walk returns. `id`,
+    * `mount`, `micros` and `size` are the frame's package id, mountpoint,
+    * receive time and length in bytes. */
+  trait FrameOut[R] {
+    /** An MSM frame; `m` holds its fields until the next frame, and
+      * `epochMicros` is its resolved epoch. */
+    def msm(id: Long, mount: String, micros: Long, size: Int, constellation: String,
+            epochMicros: Long, m: MsmColumns): R
+    /** A station ARP (1005/1006), ECEF and antenna height in meters. */
+    def arp(id: Long, mount: String, micros: Long, msgType: Int, size: Int,
+            constellation: String, x: Double, y: Double, z: Double, height: Option[Double]): R
+    /** Any other frame that decoded: no observations, no coordinates. */
+    def other(id: Long, mount: String, micros: Long, msgType: Int, size: Int,
+              constellation: String): R
+    /** A frame whose decode threw: `error` is the exception's `toString`. */
+    def deadLetter(id: Long, mount: String, micros: Long, size: Int, error: String): R
+  }
+
+  /** The one frame walk: package id, message dispatch, epoch resolution
+    * and constellation for the frame at bytes[from, until), handed to
+    * `out`. An MSM payload decodes into `msm`, which the caller reuses
+    * from frame to frame. Any exception, the output's own included,
+    * becomes a dead letter instead of the reference's log-and-drop
+    * (src/decoderclasses.py:67-69): the same rows survive, and errors
+    * stay queryable. */
+  def walkFrame[R](mount: String, micros: Long, bytes: Array[Byte], from: Int, until: Int,
+                   msm: MsmColumns, out: FrameOut[R]): R = {
+    val id = packageId(mount, micros, bytes, from, until)
+    val size = until - from
     try {
-      val msg = RtcmDecoder.decodeFrame(f.frame)
-      val t = msg.messageType
+      require(size >= 6, "frame too short")
+      val payload = from + 3
+      val end = until - 3
+      val t = RtcmDecoder.messageType(bytes, payload, end)
       val constellation = SignalTables.constellation(t)
-      msg match {
-        case m: MsmMessage =>
-          val epochMicros = GnssTime.resolveEpochMicros(t, m.header.epochMs, f.receiveMicros)
-          val obs = MsmExpander.expand(m, f.mountPoint, f.receiveMicros).map(o =>
-            ObsOut(o.obsEpochMicros, o.satId, o.satSignal, o.obsCode, o.obsPhase,
-              o.obsDoppler, o.obsSnr, o.obsLockTimeIndicator))
-          DecodedFrame(id, f.mountPoint, f.receiveMicros, t, f.frame.length,
-            Some(m.satCount), Some(epochMicros), constellation, obs, None, None)
+      if (RtcmDecoder.isMsm(t)) {
+        RtcmDecoder.decodeMsm(bytes, payload, end, msm)
+        out.msm(id, mount, micros, size, constellation,
+          GnssTime.resolveEpochMicros(t, msm.epochMs, micros), msm)
+      } else RtcmDecoder.decodePayload(bytes, payload, end) match {
         case a: ArpMessage =>
           // 0.1 mm integer units → meters (reference: src/decoderclasses.py:144-152)
-          val c = CoordOut(a.ecefX / 10000.0, a.ecefY / 10000.0, a.ecefZ / 10000.0,
-            a.antennaHeight.map(_ / 10000.0))
-          DecodedFrame(id, f.mountPoint, f.receiveMicros, t, f.frame.length,
-            None, None, constellation, Nil, Some(c), None)
-        case other =>
-          DecodedFrame(id, f.mountPoint, f.receiveMicros, other.messageType, f.frame.length,
-            None, None, constellation, Nil, None, None)
+          out.arp(id, mount, micros, t, size, constellation, a.ecefX / 10000.0,
+            a.ecefY / 10000.0, a.ecefZ / 10000.0, a.antennaHeight.map(_ / 10000.0))
+        case _ => out.other(id, mount, micros, t, size, constellation)
       }
     } catch {
-      case e: Exception =>
-        // Dead-letter instead of the reference's log-and-drop
-        // (src/decoderclasses.py:67-69) — same rows survive, errors stay queryable.
-        DecodedFrame(id, f.mountPoint, f.receiveMicros, -1, f.frame.length,
-          None, None, "GNSS", Nil, None, Some(e.toString))
+      case e: Exception => out.deadLetter(id, mount, micros, size, e.toString)
     }
   }
+
+  /** [[walkFrame]]'s object output: one `DecodedFrame`. */
+  private object DecodedFrames extends FrameOut[DecodedFrame] {
+    def msm(id: Long, mount: String, micros: Long, size: Int, constellation: String,
+            epochMicros: Long, m: MsmColumns): DecodedFrame = {
+      val ids = if (MsmExpander.expands(m.messageType)) MsmExpander.satIds(m.messageType) else null
+      val signals = if (ids == null) null else MsmExpander.signalNames(m.messageType)
+      val obs = Vector.newBuilder[ObsOut]
+      MsmExpander.walk(m, (satPos, sigPos, code, phase, doppler, snr, lockTime) =>
+        obs += ObsOut(epochMicros, ids(satPos), signals(sigPos), code, phase, doppler, snr,
+          lockTime))
+      DecodedFrame(id, mount, micros, m.messageType, size, Some(m.satCount), Some(epochMicros),
+        constellation, obs.result(), None, None)
+    }
+    def arp(id: Long, mount: String, micros: Long, msgType: Int, size: Int,
+            constellation: String, x: Double, y: Double, z: Double,
+            height: Option[Double]): DecodedFrame =
+      DecodedFrame(id, mount, micros, msgType, size, None, None, constellation, Nil,
+        Some(CoordOut(x, y, z, height)), None)
+    def other(id: Long, mount: String, micros: Long, msgType: Int, size: Int,
+              constellation: String): DecodedFrame =
+      DecodedFrame(id, mount, micros, msgType, size, None, None, constellation, Nil, None, None)
+    def deadLetter(id: Long, mount: String, micros: Long, size: Int,
+                   error: String): DecodedFrame =
+      DecodedFrame(id, mount, micros, -1, size, None, None, "GNSS", Nil, None, Some(error))
+  }
+
+  /** Decode a single frame envelope (pure; unit-testable): [[walkFrame]]
+    * with the object output. */
+  def decodeOne(f: EncodedFrame): DecodedFrame =
+    walkFrame(f.mountPoint, f.receiveMicros, f.frame, 0, f.frame.length, new MsmColumns,
+      DecodedFrames)
 
   /** Frame raw byte chunks (batch): per-mountpoint sequential fold of
     * the framing state machine, arrival order restored via `seq`.
@@ -145,13 +209,15 @@ object RtcmPipeline {
       }
   }
 
-  /** Decode every frame with `decodeOne`, as the [[graft.plans.DecodeFrames]]
-    * plan node: rows go from the frames' columns to `DecodedFrame` rows
-    * without a JVM object per row. The batch path (`frameChunks`) and
-    * the streaming path (`RtcmStreaming.decodeStream`) both land here.
-    * Each row's `frame` holds whole frames back to back (one, as
-    * `RtcmFraming.feed` emits them, or a chunk of the NTRIP source); a
-    * row that does not fails the node's `require`. */
+  /** Decode every frame as the [[graft.plans.DecodeFrames]] plan node:
+    * [[walkFrame]] with the node's row writer, so rows go from the
+    * frames' columns to `DecodedFrame` rows, equal to `decodeOne`'s,
+    * without a JVM object per row or per observation. The batch path
+    * (`frameChunks`) and the streaming path (`RtcmStreaming.decodeStream`)
+    * both land here. Each row's `frame` holds whole frames back to back
+    * (one, as `RtcmFraming.feed` emits them, or a chunk of the NTRIP
+    * source); a row that does not fails the node with an
+    * `IllegalArgumentException`. */
   def decode(frames: Dataset[EncodedFrame]): Dataset[DecodedFrame] = {
     val spark = frames.sparkSession
     import spark.implicits._

@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.{ArrayType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -105,9 +105,9 @@ object Sinks {
   /** Rows per `executeBatch`. */
   private val BatchRows = 500
 
-  /** The `DecodedFrame` columns the landing path reads, selected by
-    * name so the binding ordinals below do not depend on the batch's
-    * column order. */
+  /** The `DecodedFrame` columns the landing path reads, bound by name
+    * so the binding ordinals below do not depend on the batch's column
+    * order. */
   private val LandedFrameColumns: Seq[String] = Seq(
     "rtcm_package_id", "mountpoint", "receive_micros", "rtcm_msg_type", "rtcm_msg_size",
     "rtcm_sat_count", "rtcm_obs_epoch_micros", "constellation", "observations", "coordinates")
@@ -117,44 +117,54 @@ object Sinks {
     * and observations over one connection and returns its latest ARP fix
     * per mountpoint; the driver keeps one fix per mountpoint and upserts
     * it only after every append has been acknowledged. Rows are bound
-    * straight from Spark's `InternalRow`s (a terminal writer, like
-    * Spark's own `ForeachBatchSink`), with no `DecodedFrame` object per
-    * row. The parquet sink in RtcmStreaming remains the no-DB stand-in. */
+    * straight from the batch's own `InternalRow`s (a terminal writer,
+    * like Spark's own `ForeachBatchSink`), with no `DecodedFrame` object
+    * per row and no projection: the batch `ForeachBatchSink` hands over
+    * is a `LogicalRDD` over the micro-batch's rows, which are read as
+    * they are, so a new query compiles no code here; any other batch is
+    * read through its `queryExecution.toRdd`. Ordinals come from the
+    * batch's schema by name. The parquet sink in RtcmStreaming remains
+    * the no-DB stand-in. */
   def writeDecodedBatchJdbc(batch: Dataset[DecodedFrame],
                             factory: ConnectionFactory): Unit = {
-    val landed = batch.select(LandedFrameColumns.map(col): _*)
-    val fields = FrameFields(landed.schema)
-    val fixes = landed.queryExecution.toRdd
-      .mapPartitions(rows => appendPartition(rows, fields, factory)).collect()
+    val rows = batch.queryExecution.analyzed match {
+      case r: LogicalRDD => r.rdd
+      case _ => batch.queryExecution.toRdd
+    }
+    val fields = FrameFields(batch.schema)
+    val fixes = rows.mapPartitions(appendPartition(_, fields, factory)).collect()
     upsertCoordinates(fixes.groupBy(_.mountpoint).values.map(_.reduce(RtcmPipeline.laterFix))
       .toSeq.sortBy(_.mountpoint), factory)
   }
 
-  /** Ordinals, inside their structs, of the nested observation and
-    * coordinate fields, looked up by name. */
-  private final case class FrameFields(obsFields: Int, obs: Seq[Int], coordFields: Int,
-                                       coord: Seq[Int])
+  /** Ordinals, looked up by name, of the `LandedFrameColumns` in a
+    * batch row, and of the nested observation and coordinate fields
+    * inside their structs. */
+  private final case class FrameFields(top: Seq[Int], obsFields: Int, obs: Seq[Int],
+                                       coordFields: Int, coord: Seq[Int])
   private object FrameFields {
     def apply(schema: StructType): FrameFields = {
       val o = schema("observations").dataType.asInstanceOf[ArrayType].elementType
         .asInstanceOf[StructType]
       val c = schema("coordinates").dataType.asInstanceOf[StructType]
-      FrameFields(o.length,
+      FrameFields(LandedFrameColumns.map(schema.fieldIndex), o.length,
         Seq("obs_epoch_micros", "sat_id", "sat_signal", "obs_code", "obs_phase", "obs_doppler",
           "obs_snr", "obs_lock_time_indicator").map(o.fieldIndex),
         c.length, Seq("ecef_x", "ecef_y", "ecef_z", "antenna_height").map(c.fieldIndex))
     }
   }
 
-  /** Appends one partition's frames (rows of `LandedFrameColumns`) with
-    * single-row prepared INSERTs. Frames go in groups of `BatchRows`: a
+  /** Appends one partition's frames (rows with the `LandedFrameColumns`)
+    * with single-row prepared INSERTs. Frames go in groups of `BatchRows`: a
     * group's package rows are executed first, then its observation rows,
     * so an observation row never executes before the package row it
     * references, and every `executeBatch` carries at most `BatchRows`
     * rows. Binds the value types Spark's `Row` conversion yields (boxed
     * numbers, String, `java.sql.Timestamp`, null for null), in
-    * `PackagesColumns` / `ObservationsColumns` order. Returns the
-    * partition's latest ARP fix per mountpoint. */
+    * `PackagesColumns` / `ObservationsColumns` order; a frame's
+    * observations share their epoch, so consecutive equal epochs bind
+    * one `Timestamp`. Returns the partition's latest ARP fix per
+    * mountpoint. */
   private def appendPartition(rows: Iterator[InternalRow], fields: FrameFields,
                               factory: ConnectionFactory): Iterator[DecodedFrame] = {
     if (!rows.hasNext) return Iterator.empty
@@ -165,9 +175,17 @@ object Sinks {
       if (s == null) { s = u.toString; strings.put(u.clone(), s) }
       s
     }
+    val Seq(fId, fMount, fMicros, fType, fSize, fSats, fEpoch, fConstellation, fObs, fCoord) =
+      fields.top
     val Seq(oEpoch, oSat, oSignal, oCode, oPhase, oDoppler, oSnr, oLock) = fields.obs
     val Seq(cX, cY, cZ, cHeight) = fields.coord
     val latest = mutable.HashMap.empty[String, DecodedFrame]
+    var epochMicros = 0L
+    var epoch: java.sql.Timestamp = null
+    def epochTs(micros: Long): java.sql.Timestamp = {
+      if (epoch == null || micros != epochMicros) { epochMicros = micros; epoch = ts(micros) }
+      epoch
+    }
     val conn = factory.connect()
     try {
       val pk = conn.prepareStatement(insertSql("rtcm_packages", PackagesColumns, 1))
@@ -178,28 +196,28 @@ object Sinks {
           // the row iterator reuses its row: buffer copies
           rows.map(_.copy()).grouped(BatchRows).foreach { group =>
             group.foreach { f =>
-              pk.setObject(1, Long.box(f.getLong(0)))
-              pk.setObject(2, ts(f.getLong(2)))
-              pk.setObject(3, str(f.getUTF8String(1)))
-              pk.setObject(4, if (f.isNullAt(6)) null else ts(f.getLong(6)))
-              pk.setObject(5, Int.box(f.getInt(3)))
-              pk.setObject(6, Int.box(f.getInt(4)))
-              pk.setObject(7, if (f.isNullAt(5)) null else Int.box(f.getInt(5)))
+              pk.setObject(1, Long.box(f.getLong(fId)))
+              pk.setObject(2, ts(f.getLong(fMicros)))
+              pk.setObject(3, str(f.getUTF8String(fMount)))
+              pk.setObject(4, if (f.isNullAt(fEpoch)) null else ts(f.getLong(fEpoch)))
+              pk.setObject(5, Int.box(f.getInt(fType)))
+              pk.setObject(6, Int.box(f.getInt(fSize)))
+              pk.setObject(7, if (f.isNullAt(fSats)) null else Int.box(f.getInt(fSats)))
               pk.addBatch()
             }
             pk.executeBatch()
             group.foreach { f =>
-              val id = Long.box(f.getLong(0))
-              val mount = str(f.getUTF8String(1))
-              val constellation = str(f.getUTF8String(7))
-              val cells = f.getArray(8)
+              val id = Long.box(f.getLong(fId))
+              val mount = str(f.getUTF8String(fMount))
+              val constellation = str(f.getUTF8String(fConstellation))
+              val cells = f.getArray(fObs)
               var i = 0
               while (i < cells.numElements()) {
                 val o = cells.getStruct(i, fields.obsFields)
                 obs.setObject(1, id)
                 obs.setObject(2, mount)
                 obs.setObject(3, constellation)
-                obs.setObject(4, ts(o.getLong(oEpoch)))
+                obs.setObject(4, epochTs(o.getLong(oEpoch)))
                 obs.setObject(5, str(o.getUTF8String(oSat)))
                 obs.setObject(6, str(o.getUTF8String(oSignal)))
                 obs.setObject(7, Double.box(o.getDouble(oCode)))
@@ -212,11 +230,11 @@ object Sinks {
                 if (pendingObs >= BatchRows) { obs.executeBatch(); pendingObs = 0 }
                 i += 1
               }
-              if (!f.isNullAt(9)) {
+              if (!f.isNullAt(fCoord)) {
                 // only the fields laterFix and upsertCoordinates read
-                val c = f.getStruct(9, fields.coordFields)
-                val fix = DecodedFrame(f.getLong(0), mount, f.getLong(2), f.getInt(3), f.getInt(4),
-                  None, None, constellation, Nil,
+                val c = f.getStruct(fCoord, fields.coordFields)
+                val fix = DecodedFrame(f.getLong(fId), mount, f.getLong(fMicros), f.getInt(fType),
+                  f.getInt(fSize), None, None, constellation, Nil,
                   Some(CoordOut(c.getDouble(cX), c.getDouble(cY), c.getDouble(cZ),
                     if (c.isNullAt(cHeight)) None else Some(c.getDouble(cHeight)))), None)
                 latest(mount) = latest.get(mount).fold(fix)(RtcmPipeline.laterFix(fix, _))

@@ -4,8 +4,10 @@ package graft.rtcm
   *
   * Layouts follow the reference's bitstring typesets
   * (reference: src/rtcm3.py:114-175,315-391) but are implemented as
-  * straight-line reads into case classes — no reflection, suitable for
-  * per-row use inside `Dataset.flatMap`.
+  * straight-line reads of a [[BitReader]] bounded to the payload, read
+  * in place. MSM payloads decode into [[MsmColumns]]: `decodeMsm` fills
+  * a caller's reused one (the ingest hot path), `decodeFrame` a fresh
+  * one that it copies out as an [[MsmMessage]].
   */
 object RtcmDecoder {
 
@@ -18,16 +20,33 @@ object RtcmDecoder {
 
   /** Decode the payload region bytes[from, until). */
   def decodePayload(bytes: Array[Byte], from: Int, until: Int): RtcmMessage = {
-    val r = new BitReader(java.util.Arrays.copyOfRange(bytes, from, until))
-    val messageType = new BitReader(r.bytes).uint(12).toInt
-    messageType match {
+    val r = payload(bytes, from, until)
+    messageType(bytes, from, until) match {
       case t if t >= 1001 && t <= 1004 => decodeLegacyGps(r)
       case t if t >= 1009 && t <= 1012 => decodeLegacyGlonass(r)
       case 1005 | 1006                 => decodeArp(r)
-      case t if isMsm(t)               => decodeMsm(r)
+      case t if isMsm(t)               =>
+        val m = new MsmColumns
+        decodeMsm(r, m)
+        m.toMessage
       case 1029                        => decodeText(r)
       case t                           => OpaqueMessage(t)
     }
+  }
+
+  /** The message number: the first 12 bits of the payload bytes[from, until). */
+  def messageType(bytes: Array[Byte], from: Int, until: Int): Int =
+    payload(bytes, from, until).uint(12).toInt
+
+  /** Decode the MSM payload bytes[from, until) into `into`, overwriting
+    * the message it held. */
+  def decodeMsm(bytes: Array[Byte], from: Int, until: Int, into: MsmColumns): Unit =
+    decodeMsm(payload(bytes, from, until), into)
+
+  private def payload(bytes: Array[Byte], from: Int, until: Int): BitReader = {
+    if (from < 0 || from > until || until > bytes.length)
+      throw new IllegalArgumentException(s"payload [$from, $until) of a ${bytes.length}-byte array")
+    new BitReader(bytes, from * 8, until * 8)
   }
 
   def isMsm(t: Int): Boolean =
@@ -99,102 +118,108 @@ object RtcmDecoder {
   }
 
   // ---- MSM 1071-1127 (reference: src/rtcm3.py:98-111,149-167,360-391) ----
-  private def decodeMsm(r: BitReader): MsmMessage = {
+  private def decodeMsm(r: BitReader, m: MsmColumns): Unit = {
     val t = r.uint(12).toInt
-    val stationId = r.uint(12).toInt
+    m.messageType = t
+    m.stationId = r.uint(12).toInt
     val rawEpoch = r.uint(30)
-    val multiple = r.bool()
-    val iods = r.uint(3).toInt
+    m.multipleMessage = r.bool()
+    m.issueOfDataStation = r.uint(3).toInt
     r.skip(7) // reserved
-    val clockSteering = r.uint(2).toInt
-    val extClock = r.uint(2).toInt
-    val smoothing = r.bool()
-    val smoothingInterval = r.uint(3).toInt
-    val satMask = r.mask(64)
-    val signalMask = r.mask(32)
-    val numSats = satMask.count(identity)
-    val numSignals = signalMask.count(identity)
-    val cellMask = r.mask(numSats * numSignals)
-    val numCells = cellMask.count(identity)
+    m.clockSteering = r.uint(2).toInt
+    m.externalClock = r.uint(2).toInt
+    m.smoothing = r.bool()
+    m.smoothingInterval = r.uint(3).toInt
+    val numSats = r.maskInto(m.satMask, 64)
+    val numSignals = r.maskInto(m.signalMask, 32)
+    val maskBits = numSats * numSignals
+    m.sizeFor(numSats, maskBits, 0)
+    val numCells = r.maskInto(m.cellMask, maskBits)
+    m.sizeFor(numSats, maskBits, numCells)
+    m.satCount = numSats
+    m.signalCount = numSignals
+    m.cellCount = numCells
 
     // GLONASS epoch: 3-bit day-of-week + 27-bit time-of-day-ms packed
     // into the 30-bit epoch field (reference: src/rtcm3.py:106-110).
-    val (epochMs, gloDow) =
-      if (t >= 1081 && t <= 1087) (rawEpoch & ((1L << 27) - 1), Some((rawEpoch >> 27).toInt))
-      else (rawEpoch, None)
-
-    val header = MsmHeader(t, stationId, epochMs, multiple, iods, clockSteering,
-      extClock, smoothing, smoothingInterval, satMask, signalMask, cellMask, gloDow)
+    if (t >= 1081 && t <= 1087) {
+      m.epochMs = rawEpoch & ((1L << 27) - 1)
+      m.glonassDow = (rawEpoch >> 27).toInt
+    } else {
+      m.epochMs = rawEpoch
+      m.glonassDow = -1
+    }
 
     // Field-major on the wire: all field-1 values, then all field-2 …
     // (reference reads "N*uint:w" per field then transposes,
     // src/rtcm3.py:159-166; we read field-major directly into arrays).
+    // Fields a flavor does not carry are zeroed.
     val flavor = t % 10
-    val sats = Array.fill(numSats)(MsmSat(0, 0, 0, 0))
-    def readSatField(width: Int, signed: Boolean): Array[Long] = {
-      val a = new Array[Long](numSats)
-      var i = 0
-      while (i < numSats) { a(i) = if (signed) r.int(width) else r.uint(width); i += 1 }
-      a
-    }
     flavor match {
       case 1 | 2 | 3 =>
-        val mod = readSatField(10, signed = false)
-        var i = 0
-        while (i < numSats) { sats(i) = MsmSat(0, 0, mod(i).toInt, 0); i += 1 }
+        zero(m.rangeInt, numSats); zero(m.extInfo, numSats)
+        readUints(r, m.rangeMod, numSats, 10); zero(m.rangeRate, numSats)
       case 4 | 6 =>
-        val ri = readSatField(8, signed = false)
-        val mod = readSatField(10, signed = false)
-        var i = 0
-        while (i < numSats) { sats(i) = MsmSat(ri(i).toInt, 0, mod(i).toInt, 0); i += 1 }
+        readUints(r, m.rangeInt, numSats, 8); zero(m.extInfo, numSats)
+        readUints(r, m.rangeMod, numSats, 10); zero(m.rangeRate, numSats)
       case 5 | 7 =>
-        val ri = readSatField(8, signed = false)
-        val ext = readSatField(4, signed = false)
-        val mod = readSatField(10, signed = false)
-        val rate = readSatField(14, signed = true)
-        var i = 0
-        while (i < numSats) {
-          sats(i) = MsmSat(ri(i).toInt, ext(i).toInt, mod(i).toInt, rate(i).toInt)
-          i += 1
-        }
+        readUints(r, m.rangeInt, numSats, 8)
+        readUints(r, m.extInfo, numSats, 4)
+        readUints(r, m.rangeMod, numSats, 10)
+        readInts(r, m.rangeRate, numSats, 14)
       case other => throw new IllegalArgumentException(s"MSM flavor $other")
     }
 
-    def readCellField(width: Int, signed: Boolean): Array[Long] = {
-      val a = new Array[Long](numCells)
-      var i = 0
-      while (i < numCells) { a(i) = if (signed) r.int(width) else r.uint(width); i += 1 }
-      a
-    }
-    val cells: Array[MsmCell] = flavor match {
+    flavor match {
       case 1 =>
-        val code = readCellField(15, signed = true)
-        code.map(c => MsmCell(c, 0L, 0, halfCycleAmbiguity = false, 0, 0))
+        readLongs(r, m.code, numCells, 15)
+        zero(m.phase, numCells); zero(m.lock, numCells); zero(m.half, numCells)
+        zero(m.cnrs, numCells); zero(m.rates, numCells)
       case 2 =>
-        val phase = readCellField(22, signed = true)
-        val lock = readCellField(4, signed = false)
-        val half = readCellField(1, signed = false)
-        Array.tabulate(numCells)(i =>
-          MsmCell(0L, phase(i), lock(i).toInt, half(i) == 1L, 0, 0))
+        zero(m.code, numCells)
+        readLongs(r, m.phase, numCells, 22)
+        readUints(r, m.lock, numCells, 4)
+        readBools(r, m.half, numCells)
+        zero(m.cnrs, numCells); zero(m.rates, numCells)
       case 3 | 4 | 5 =>
-        val code = readCellField(15, signed = true)
-        val phase = readCellField(22, signed = true)
-        val lock = readCellField(4, signed = false)
-        val half = readCellField(1, signed = false)
-        val cnr = if (flavor >= 4) readCellField(6, signed = false) else new Array[Long](numCells)
-        val rate = if (flavor == 5) readCellField(15, signed = true) else new Array[Long](numCells)
-        Array.tabulate(numCells)(i =>
-          MsmCell(code(i), phase(i), lock(i).toInt, half(i) == 1L, cnr(i).toInt, rate(i).toInt))
+        readLongs(r, m.code, numCells, 15)
+        readLongs(r, m.phase, numCells, 22)
+        readUints(r, m.lock, numCells, 4)
+        readBools(r, m.half, numCells)
+        if (flavor >= 4) readUints(r, m.cnrs, numCells, 6) else zero(m.cnrs, numCells)
+        if (flavor == 5) readInts(r, m.rates, numCells, 15) else zero(m.rates, numCells)
       case 6 | 7 =>
-        val code = readCellField(20, signed = true)
-        val phase = readCellField(24, signed = true)
-        val lock = readCellField(10, signed = false)
-        val half = readCellField(1, signed = false)
-        val cnr = readCellField(10, signed = false)
-        val rate = if (flavor == 7) readCellField(15, signed = true) else new Array[Long](numCells)
-        Array.tabulate(numCells)(i =>
-          MsmCell(code(i), phase(i), lock(i).toInt, half(i) == 1L, cnr(i).toInt, rate(i).toInt))
+        readLongs(r, m.code, numCells, 20)
+        readLongs(r, m.phase, numCells, 24)
+        readUints(r, m.lock, numCells, 10)
+        readBools(r, m.half, numCells)
+        readUints(r, m.cnrs, numCells, 10)
+        if (flavor == 7) readInts(r, m.rates, numCells, 15) else zero(m.rates, numCells)
     }
-    MsmMessage(header, sats, cells)
   }
+
+  private def readUints(r: BitReader, a: Array[Int], n: Int, width: Int): Unit = {
+    var i = 0
+    while (i < n) { a(i) = r.uint(width).toInt; i += 1 }
+  }
+
+  private def readInts(r: BitReader, a: Array[Int], n: Int, width: Int): Unit = {
+    var i = 0
+    while (i < n) { a(i) = r.int(width).toInt; i += 1 }
+  }
+
+  private def readLongs(r: BitReader, a: Array[Long], n: Int, width: Int): Unit = {
+    var i = 0
+    while (i < n) { a(i) = r.int(width); i += 1 }
+  }
+
+  /** One-bit unsigned fields (the half-cycle ambiguity flags). */
+  private def readBools(r: BitReader, a: Array[Boolean], n: Int): Unit = {
+    var i = 0
+    while (i < n) { a(i) = r.uint(1) == 1L; i += 1 }
+  }
+
+  private def zero(a: Array[Int], n: Int): Unit = java.util.Arrays.fill(a, 0, n, 0)
+  private def zero(a: Array[Long], n: Int): Unit = java.util.Arrays.fill(a, 0, n, 0L)
+  private def zero(a: Array[Boolean], n: Int): Unit = java.util.Arrays.fill(a, 0, n, false)
 }

@@ -32,10 +32,23 @@ object RtcmFraming {
 
   final val DefaultMaxBuffer: Int = 1 << 20 // 1 MiB per mountpoint
 
+  /** What one [[feedCounted]] call did: the new state, the complete
+    * CRC-valid frames, how many candidate frames failed their CRC
+    * (each costs the framer one dropped byte), and how many carried
+    * bytes the `maxBuffer` bound dropped. */
+  final case class Fed(state: State, frames: Vector[Array[Byte]], crcRejects: Int,
+                       truncatedBytes: Int)
+
   /** Feed one chunk; returns the new state and any complete CRC-valid
     * frames (each including header + payload + CRC). */
   def feed(state: State, chunk: Array[Byte],
            maxBuffer: Int = DefaultMaxBuffer): (State, Vector[Array[Byte]]) = {
+    val fed = feedCounted(state, chunk, maxBuffer)
+    (fed.state, fed.frames)
+  }
+
+  /** [[feed]], also counting CRC rejects and `maxBuffer` truncation. */
+  def feedCounted(state: State, chunk: Array[Byte], maxBuffer: Int = DefaultMaxBuffer): Fed = {
     var buf =
       if (state.buffer.isEmpty) chunk
       else {
@@ -46,6 +59,7 @@ object RtcmFraming {
       }
     val frames = Vector.newBuilder[Array[Byte]]
     var start = 0
+    var crcRejects = 0
 
     def scanPreamble(): Unit = {
       while (start < buf.length && buf(start) != Preamble) start += 1
@@ -68,6 +82,7 @@ object RtcmFraming {
             start += frameLen
           } else {
             start += 1 // CRC mismatch: drop one byte, realign
+            crcRejects += 1
           }
         }
       }
@@ -77,9 +92,10 @@ object RtcmFraming {
       else java.util.Arrays.copyOfRange(buf, start, buf.length)
     // Bound the carried state: a hostile/garbled stream must not grow
     // per-key state without limit. Keep the newest bytes.
-    if (residual.length > maxBuffer)
-      residual = java.util.Arrays.copyOfRange(residual, residual.length - maxBuffer, residual.length)
-    (State(residual), frames.result())
+    val truncated = math.max(0, residual.length - maxBuffer)
+    if (truncated > 0)
+      residual = java.util.Arrays.copyOfRange(residual, truncated, residual.length)
+    Fed(State(residual), frames.result(), crcRejects, truncated)
   }
 
   /** Convenience: extract all frames from a self-contained byte blob. */
@@ -88,25 +104,35 @@ object RtcmFraming {
   /** The frames of `packed`, which holds whole frames back to back (as
     * the NTRIP source's chunks do, [[feed]] having already checked their
     * CRCs): each frame's extent comes from its 10-bit length header, with
-    * no search and no CRC. A byte that is not a preamble where a frame
-    * must start, or a length that runs past the end, fails the
-    * `require`: such input was not framed by [[feed]]. A single frame
+    * no search and no CRC (see [[packedFrameEnd]]). A single frame
     * spanning all of `packed` is returned as `packed` itself, uncopied. */
   def splitPacked(packed: Array[Byte]): Iterator[Array[Byte]] = new Iterator[Array[Byte]] {
     private var pos = 0
     override def hasNext: Boolean = pos < packed.length
     override def next(): Array[Byte] = {
       if (!hasNext) throw new NoSuchElementException("no frame left")
-      require(packed(pos) == Preamble && packed.length - pos >= 6,
-        s"no whole RTCM frame at byte $pos of a ${packed.length}-byte packed chunk")
-      val end = pos + (((packed(pos + 1) & 0x03) << 8) | (packed(pos + 2) & 0xFF)) + 6
-      require(end <= packed.length,
-        s"RTCM frame at byte $pos runs to byte $end, past the ${packed.length}-byte packed chunk")
+      val end = packedFrameEnd(packed, pos)
       val frame =
         if (pos == 0 && end == packed.length) packed
         else java.util.Arrays.copyOfRange(packed, pos, end)
       pos = end
       frame
     }
+  }
+
+  /** The end of the frame that starts at byte `pos` of `packed` (whole
+    * frames back to back), from its length header. A byte that is not a
+    * preamble where a frame must start, or a length that runs past the
+    * end, throws `IllegalArgumentException`: such input was not framed
+    * by [[feed]]. */
+  def packedFrameEnd(packed: Array[Byte], pos: Int): Int = {
+    if (packed.length - pos < 6 || packed(pos) != Preamble)
+      throw new IllegalArgumentException(
+        s"requirement failed: no whole RTCM frame at byte $pos of a ${packed.length}-byte packed chunk")
+    val end = pos + (((packed(pos + 1) & 0x03) << 8) | (packed(pos + 2) & 0xFF)) + 6
+    if (end > packed.length)
+      throw new IllegalArgumentException(
+        s"requirement failed: RTCM frame at byte $pos runs to byte $end, past the ${packed.length}-byte packed chunk")
+    end
   }
 }

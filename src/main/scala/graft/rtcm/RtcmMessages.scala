@@ -50,12 +50,114 @@ final case class MsmCell(
     cnr: Int,
     rateFine: Int)
 
+/** What observation expansion (`MsmExpander.walk`) reads of one MSM
+  * message: its masks, and its satellite and cell fields by index
+  * (satellites and cells in wire order). [[MsmMessage]] holds them as
+  * objects; [[MsmColumns]] as primitive arrays reused from frame to
+  * frame. */
+trait MsmFields {
+  def messageType: Int
+  def satMask: Array[Boolean]
+  def signalMask: Array[Boolean]
+  /** At least `satCount` × (signals in `signalMask`) bits. */
+  def cellMask: Array[Boolean]
+  def satCount: Int
+  def cellCount: Int
+  def roughRangeInt(sat: Int): Int
+  def roughRangeMod(sat: Int): Int
+  def roughRangeRate(sat: Int): Int
+  def codeFine(cell: Int): Long
+  def phaseFine(cell: Int): Long
+  def lockTime(cell: Int): Int
+  def cnr(cell: Int): Int
+  def rateFine(cell: Int): Int
+}
+
 final case class MsmMessage(
     header: MsmHeader,
     sats: Array[MsmSat],
-    cells: Array[MsmCell]) extends RtcmMessage {
+    cells: Array[MsmCell]) extends RtcmMessage with MsmFields {
   def messageType: Int = header.messageType
+  def satMask: Array[Boolean] = header.satMask
+  def signalMask: Array[Boolean] = header.signalMask
+  def cellMask: Array[Boolean] = header.cellMask
   def satCount: Int = sats.length
+  def cellCount: Int = cells.length
+  def roughRangeInt(sat: Int): Int = sats(sat).roughRangeInt
+  def roughRangeMod(sat: Int): Int = sats(sat).roughRangeMod
+  def roughRangeRate(sat: Int): Int = sats(sat).roughRangeRate
+  def codeFine(cell: Int): Long = cells(cell).codeFine
+  def phaseFine(cell: Int): Long = cells(cell).phaseFine
+  def lockTime(cell: Int): Int = cells(cell).lockTime
+  def cnr(cell: Int): Int = cells(cell).cnr
+  def rateFine(cell: Int): Int = cells(cell).rateFine
+}
+
+/** One MSM message decoded into primitive arrays by
+  * `RtcmDecoder.decodeMsm`, which overwrites it with the next message:
+  * the ingest hot path decodes every MSM frame of a task into one of
+  * these, so a frame allocates nothing per satellite or cell. Arrays
+  * only grow; fields a flavor does not carry read 0. `toMessage` copies
+  * it out as an [[MsmMessage]]. Not thread-safe. */
+final class MsmColumns extends MsmFields {
+  var messageType: Int = 0
+  var stationId: Int = 0
+  /** Milliseconds of day; for GLONASS the 27-bit time of day. */
+  var epochMs: Long = 0L
+  var multipleMessage: Boolean = false
+  var issueOfDataStation: Int = 0
+  var clockSteering: Int = 0
+  var externalClock: Int = 0
+  var smoothing: Boolean = false
+  var smoothingInterval: Int = 0
+  /** GLONASS day of week, -1 for other constellations. */
+  var glonassDow: Int = -1
+  val satMask: Array[Boolean] = new Array[Boolean](64)
+  val signalMask: Array[Boolean] = new Array[Boolean](32)
+  var cellMask: Array[Boolean] = Array.emptyBooleanArray
+  var satCount: Int = 0
+  var signalCount: Int = 0
+  var cellCount: Int = 0
+
+  private[rtcm] var rangeInt, extInfo, rangeMod, rangeRate = Array.emptyIntArray
+  private[rtcm] var code, phase = Array.emptyLongArray
+  private[rtcm] var lock, cnrs, rates = Array.emptyIntArray
+  private[rtcm] var half = Array.emptyBooleanArray
+
+  def roughRangeInt(sat: Int): Int = rangeInt(sat)
+  def roughRangeMod(sat: Int): Int = rangeMod(sat)
+  def roughRangeRate(sat: Int): Int = rangeRate(sat)
+  def codeFine(cell: Int): Long = code(cell)
+  def phaseFine(cell: Int): Long = phase(cell)
+  def lockTime(cell: Int): Int = lock(cell)
+  def cnr(cell: Int): Int = cnrs(cell)
+  def rateFine(cell: Int): Int = rates(cell)
+
+  private def grown(n: Int, have: Int): Int = if (have >= n) have else math.max(n, 2 * have)
+
+  /** Room for `sats` satellites, `maskBits` cell-mask bits and `cells` cells. */
+  private[rtcm] def sizeFor(sats: Int, maskBits: Int, cells: Int): Unit = {
+    if (rangeInt.length < sats) {
+      val n = grown(sats, rangeInt.length)
+      rangeInt = new Array[Int](n); extInfo = new Array[Int](n)
+      rangeMod = new Array[Int](n); rangeRate = new Array[Int](n)
+    }
+    if (cellMask.length < maskBits) cellMask = new Array[Boolean](grown(maskBits, cellMask.length))
+    if (code.length < cells) {
+      val n = grown(cells, code.length)
+      code = new Array[Long](n); phase = new Array[Long](n); lock = new Array[Int](n)
+      half = new Array[Boolean](n); cnrs = new Array[Int](n); rates = new Array[Int](n)
+    }
+  }
+
+  def toMessage: MsmMessage = MsmMessage(
+    MsmHeader(messageType, stationId, epochMs, multipleMessage, issueOfDataStation,
+      clockSteering, externalClock, smoothing, smoothingInterval, satMask.clone(),
+      signalMask.clone(), java.util.Arrays.copyOf(cellMask, satCount * signalCount),
+      if (glonassDow >= 0) Some(glonassDow) else None),
+    Array.tabulate(satCount)(i => MsmSat(rangeInt(i), extInfo(i), rangeMod(i), rangeRate(i))),
+    Array.tabulate(cellCount)(i =>
+      MsmCell(code(i), phase(i), lock(i), half(i), cnrs(i), rates(i))))
 }
 
 /** Station antenna reference point, types 1005/1006

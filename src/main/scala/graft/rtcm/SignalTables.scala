@@ -53,11 +53,4 @@ object SignalTables {
       R, "L1C", R, R, R, R, R, R, R, R,
       R, R, R, R, R, R, R, R, R, R,
       R, "L5I", "L5Q", "L5X", R, R, R, R, R, R, R, R))
-
-  /** Names of the signals present in a signal mask, in mask order
-    * (reference: src/rtcm3.py:62-68). */
-  def presentSignals(messageType: Int, signalMask: Array[Boolean]): IndexedSeq[String] = {
-    val table = signalNames(msmConstellation(messageType))
-    (0 until signalMask.length).collect { case i if signalMask(i) => table(i) }
-  }
 }

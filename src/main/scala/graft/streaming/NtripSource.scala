@@ -64,7 +64,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Each micro-batch's progress reports, per mountpoint `M`, in
   * `StreamingQueryProgress.sources(i).metrics`: `M.frames` (frames
   * buffered), `M.skippedBytes` (bytes read that are in no frame: noise,
-  * CRC rejects and residuals dropped at reconnect), `M.reconnects`, and
+  * CRC rejects and residuals dropped at reconnect), `M.crcRejects`
+  * (candidate frames that failed their CRC), `M.reconnects`, and
   * `M.lastReconnectCause` (class and message of the last error that
   * ended a connection; absent until one does).
   */
@@ -105,6 +106,7 @@ private final case class NtripOffset(n: Long) extends Offset {
 private final class ReaderCounters {
   val frames = new AtomicLong
   val skippedBytes = new AtomicLong
+  val crcRejects = new AtomicLong
   val reconnects = new AtomicLong
   @volatile var lastReconnectCause: Option[String] = None
 }
@@ -184,8 +186,11 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
           while (chunk.isDefined && !stopped.get()) {
             val micros = System.currentTimeMillis() * 1000L
             val read = chunk.get
-            val (next, frames) = RtcmFraming.feed(framing, read)
+            val fed = RtcmFraming.feedCounted(framing, read)
+            val next = fed.state
+            val frames = fed.frames
             val frameBytes = frames.map(_.length.toLong).sum
+            count.crcRejects.addAndGet(fed.crcRejects.toLong)
             count.skippedBytes.addAndGet(framing.size + read.length - next.size - frameBytes)
             framing = next
             if (frames.nonEmpty) {
@@ -304,6 +309,7 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
     counters.foreach { case (mount, c) =>
       m.put(s"$mount.frames", c.frames.get.toString)
       m.put(s"$mount.skippedBytes", c.skippedBytes.get.toString)
+      m.put(s"$mount.crcRejects", c.crcRejects.get.toString)
       m.put(s"$mount.reconnects", c.reconnects.get.toString)
       c.lastReconnectCause.foreach(m.put(s"$mount.lastReconnectCause", _))
     }

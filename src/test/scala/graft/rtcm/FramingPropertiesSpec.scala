@@ -10,9 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * of every message kind the encoder writes, interleaved with random
   * garbage (preamble bytes included) and cut at random chunk
   * boundaries. The NTRIP source's reader threads fold `feed` over each
-  * connection's reads exactly like this, and `DecodeFrames` splits
-  * their chunks with `splitPacked`, so these properties are the live
-  * path's framing contract.
+  * connection's reads exactly like this, and `DecodeFrames` walks
+  * their chunks by the length headers `splitPacked` splits on
+  * (`packedFrameEnd`), so these properties are the live path's framing
+  * contract.
   *
   * Driven by `org.scalacheck.Test.check` from a fixed seed, without
   * shrinking; the four properties take a few seconds together. */
@@ -102,8 +103,13 @@ class FramingPropertiesSpec extends AnyFunSuite {
     check(Prop.forAllNoShrink(gen) { case (chunks, maxBuffer) =>
       var st = RtcmFraming.emptyState
       chunks.forall { c =>
-        st = RtcmFraming.feed(st, c, maxBuffer)._1
-        st.size <= maxBuffer
+        // the bound keeps the newest bytes, and counts what it drops
+        val unbounded = RtcmFraming.feedCounted(st, c, Int.MaxValue).state.buffer
+        val fed = RtcmFraming.feedCounted(st, c, maxBuffer)
+        st = fed.state
+        st.size <= maxBuffer &&
+          fed.truncatedBytes == math.max(0, unbounded.length - maxBuffer) &&
+          st.buffer.toSeq == unbounded.toSeq.takeRight(maxBuffer)
       }
     })
   }

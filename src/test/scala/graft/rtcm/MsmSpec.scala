@@ -11,13 +11,26 @@ class MsmSpec extends AnyFunSuite {
   }
 
   test("MSM encode→decode round-trips across flavors (seeded sweep)") {
+    // one MsmColumns reused across every message, as the ingest path
+    // reuses one per task, reads like a fresh decode of each
+    val reused = new MsmColumns
+    def same(a: MsmMessage, b: MsmMessage): Boolean =
+      a.header.copy(satMask = null, signalMask = null, cellMask = null) ==
+        b.header.copy(satMask = null, signalMask = null, cellMask = null) &&
+        a.header.satMask.toSeq == b.header.satMask.toSeq &&
+        a.header.signalMask.toSeq == b.header.signalMask.toSeq &&
+        a.header.cellMask.toSeq == b.header.cellMask.toSeq &&
+        a.sats.toSeq == b.sats.toSeq && a.cells.toSeq == b.cells.toSeq
     for (seed <- 1 to 40; msgType <- Seq(1074, 1075, 1077, 1084, 1085, 1094, 1104, 1115, 1126)) {
       val rnd = new java.util.Random(seed)
       val flavor = msgType % 10
       if (flavor >= 4) {
         val epochMs = if (msgType >= 1081 && msgType <= 1087) rnd.nextInt(86400000).toLong
           else rnd.nextInt(1 << 30).toLong & ((1L << 30) - 1)
-        val in = graft.etl.SyntheticRtcm.msm(rnd, msgType, 42, epochMs % (if (msgType >= 1081 && msgType <= 1087) 1L << 27 else 1L << 30))
+        val synthetic = graft.etl.SyntheticRtcm.msm(rnd, msgType, 42, epochMs % (if (msgType >= 1081 && msgType <= 1087) 1L << 27 else 1L << 30))
+        // MSM5/7 carry extended info (the synthetic corpus leaves it 0)
+        val in = if (flavor != 5 && flavor != 7) synthetic
+          else synthetic.copy(sats = synthetic.sats.map(_.copy(extendedInfo = 1 + rnd.nextInt(15))))
         val out = roundTrip(in)
         assert(out.header.messageType == in.header.messageType)
         assert(out.header.stationId == in.header.stationId)
@@ -28,6 +41,9 @@ class MsmSpec extends AnyFunSuite {
         assert(out.header.cellMask.toSeq == in.header.cellMask.toSeq)
         assert(out.sats.toSeq == in.sats.toSeq, s"type $msgType seed $seed")
         assert(out.cells.toSeq == in.cells.toSeq, s"type $msgType seed $seed")
+        val frame = RtcmEncoder.msmFrame(in)
+        RtcmDecoder.decodeMsm(frame, 3, frame.length - 3, reused)
+        assert(same(reused.toMessage, out), s"type $msgType seed $seed")
       }
     }
   }

@@ -486,6 +486,9 @@ class NtripClientSpec extends AnyFunSuite {
     val skipped = (prefix.length + noiseBeforeCut + frames(3).length + 20) +
       (prefix.length + noiseBytes + frames(3).length)
     assert(skipped == first.length + whole.length - expected.map(_.length).sum)
+    // both connections serve the broken frame 3, and nothing else fails a CRC
+    val crcRejects = Seq(first, whole).map(RtcmFraming.feedCounted(RtcmFraming.emptyState, _).crcRejects).sum
+    assert(crcRejects == 2)
 
     val server = new ServerSocket(0)
     try {
@@ -507,6 +510,7 @@ class NtripClientSpec extends AnyFunSuite {
         val m = metrics
         assert(m("MNT0.frames") == expected.size.toString, m)
         assert(m("MNT0.skippedBytes") == skipped.toString, m)
+        assert(m("MNT0.crcRejects") == crcRejects.toString, m)
         assert(m("MNT0.reconnects") == "1", m)
         assert(m("MNT0.lastReconnectCause").matches("java\\.[\\w.]+Exception: .+"), m)
       } finally stream.stop()
@@ -589,6 +593,41 @@ class NtripClientSpec extends AnyFunSuite {
       spark.sparkContext.removeSparkListener(listener)
       server.close()
     }
+  }
+
+  test("a second NTRIP → JDBC ingest query compiles at most one generated class") {
+    import graft.etl.{RecordingJdbc, Sinks}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val bodies = Seq("MNT0", "MNT1").zipWithIndex.map { case (m, i) =>
+      m -> SyntheticRtcm.framesFor(m, 100 + i, 40, 90L + i).map(_._2)
+    }.toMap
+    val frames = bodies.values.map(_.size).sum
+    val pkgSql = Sinks.insertSql("rtcm_packages", Sinks.PackagesColumns, 1)
+    def landed(): Int = RecordingJdbc.execs.toArray(Array.empty[RecordingJdbc.Exec])
+      .filter(_.sql == pkgSql).map(_.rows).sum
+    val server = new ServerSocket(0)
+    try {
+      serveMany(server, bodies)
+      // the code generator's cache counts a compile only on a miss
+      def compilesOfOneQuery(): Long = {
+        RecordingJdbc.clear()
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val q = RtcmStreaming.startJdbcSink(
+          RtcmStreaming.decodeStream(ntripChunks(server.getLocalPort, "MNT0,MNT1")),
+          new RecordingJdbc.Factory,
+          java.nio.file.Files.createTempDirectory("graft_compiles_ckpt").toString)
+        try {
+          val deadline = System.currentTimeMillis() + 60000
+          while (landed() < frames && System.currentTimeMillis() < deadline) Thread.sleep(50)
+          assert(landed() == frames)
+        } finally q.stop()
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      }
+      val first = compilesOfOneQuery()
+      val second = compilesOfOneQuery()
+      info(s"compiles: first query $first, second query $second")
+      assert(second <= 1, s"the second query compiled $second classes (the first $first)")
+    } finally server.close()
   }
 
   test("decodeStream keeps the stateful framer for any input that is not the NTRIP source alone") {
