@@ -13,8 +13,8 @@ final case class RawChunk(mountPoint: String, receiveMicros: Long, seq: Long, da
 
 /** One complete CRC-valid RTCM frame + its arrival envelope
   * (reference envelope: src/ingestion.py:325-332). `RtcmStreaming.decodeStream`
-  * also reads the NTRIP source's chunks, whole frames back to back, as
-  * this type: `RtcmPipeline.decode` splits them. */
+  * also reads streamed chunks, whole frames back to back, as this
+  * type: `RtcmPipeline.decode` splits them. */
 final case class EncodedFrame(mountPoint: String, receiveMicros: Long, frame: Array[Byte])
 
 /** Observation output row (matches `*_observations` columns,
@@ -61,14 +61,16 @@ final case class DecodedFrame(
   * walk ([[walkFrame]]) with two outputs: `decodeOne` builds a
   * `DecodedFrame`, and the node's row writer writes the same values
   * into a row, with nothing allocated per observation and no code
-  * generated per query. The live path
-  * (`RtcmStreaming.decodeStream` over the NTRIP source) has no framing
-  * stage at all: the source's reader threads frame as bytes arrive, so
+  * generated per query. The streaming path
+  * (`RtcmStreaming.decodeStream`) has no framing stage at all: every
+  * chunk stream is framed where its bytes are read (the NTRIP source's
+  * reader threads, the durable-log writer, the replay harness), so
   * each chunk holds whole frames, and the same node splits and decodes
-  * them in the source stage, one input partition per mountpoint, with
-  * no state and no shuffle. At 100 TB the decoded set would be written
-  * partitioned by (date(receive_time), constellation) and the obs
-  * explode runs map-side — no additional shuffle.
+  * them in the source stage (for the NTRIP source, one input partition
+  * per mountpoint), with no state and no shuffle. At 100 TB the
+  * decoded set would be written partitioned by (date(receive_time),
+  * constellation) and the obs explode runs map-side — no additional
+  * shuffle.
   */
 object RtcmPipeline {
 

@@ -26,10 +26,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * `mountPoint`, `receiveMicros` and `frame` are the child's columns of
   * those names; `output` is a fresh attribute per field of
   * [[DecodeFrames.Schema]]. Each `frame` value holds whole frames back
-  * to back — one for `frameChunks`/`frameStream` rows, any number for
-  * the NTRIP source's chunks — and the exec walks them in place by
-  * their length headers (`RtcmFraming.packedFrameEnd`) in the same
-  * task: one output row per frame, no shuffle.
+  * to back — one for `frameChunks` rows, any number for a streamed
+  * chunk, which an `RtcmFraming.Framer` built where its bytes were
+  * read — and the exec walks them in place by their length headers
+  * (`RtcmFraming.packedFrameEnd`) in the same task: one output row per
+  * frame, no shuffle. A value that is not whole frames fails the task
+  * with its mountpoint, receive time and byte offset.
   */
 case class DecodeFrames(
     mountPoint: Attribute,
@@ -101,7 +103,11 @@ case class DecodeFramesExec(
           private var pos = 0
           override def hasNext: Boolean = pos < bytes.length
           override def next(): InternalRow = {
-            val end = RtcmFraming.packedFrameEnd(bytes, pos)
+            val end = try RtcmFraming.packedFrameEnd(bytes, pos) catch {
+              case e: IllegalArgumentException => throw new IllegalArgumentException(
+                s"chunk of mountpoint $mount (receiveMicros $micros) is not whole RTCM frames: " +
+                  e.getMessage.stripPrefix("requirement failed: "), e)
+            }
             val row = RtcmPipeline.walkFrame(mount, micros, bytes, pos, end, msm, writer)
             pos = end
             row

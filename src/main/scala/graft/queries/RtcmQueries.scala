@@ -201,14 +201,15 @@ object RtcmQueries extends QueryModule {
 
   // ---- streaming window-aggregate parity (Q2/Q5/Q8 shapes) ----
   //
-  // The same corpus is replayed through the LIVE path — MemoryStream →
-  // stateful framing → decode → watermarked event-time window
-  // aggregate (graft.streaming.DashboardStreams) — in three
-  // micro-batches plus a watermark-advancing flush. The oracle is the
-  // batch SQL over the batch pipeline's own e2e dump, so a hash match
-  // proves streaming == batch END TO END: framing state across batch
-  // boundaries, decode, epoch-aligned window starts, exact fixed-point
-  // aggregate arithmetic, and Append-mode window-close semantics.
+  // The same corpus is replayed through the LIVE path — framed per
+  // mountpoint as a reader frames its connection → MemoryStream →
+  // stateless decode → watermarked event-time window aggregate
+  // (graft.streaming.DashboardStreams) — in three micro-batches plus a
+  // watermark-advancing flush. The oracle is the batch SQL over the
+  // batch pipeline's own e2e dump, so a hash match proves streaming ==
+  // batch END TO END: reader-side framing, decode, epoch-aligned window
+  // starts, exact fixed-point aggregate arithmetic, and Append-mode
+  // window-close semantics across batch boundaries.
   private def streamed(s: SparkSession)(
       shape: org.apache.spark.sql.Dataset[graft.etl.DecodedFrame] => DataFrame): DataFrame =
     graft.streaming.StreamingReplay.run(s, SyntheticRtcm.corpus(NMounts, NFrames), 3)(in =>

@@ -42,12 +42,15 @@ object Crc24q {
 
   /** Validate a complete frame: CRC over all but the trailing 3 bytes
     * must equal the trailing 24 bits. */
-  def frameValid(frame: Array[Byte]): Boolean = {
-    if (frame.length < 6) return false
-    val calc = compute(frame, 0, frame.length - 3)
-    val stored = ((frame(frame.length - 3) & 0xFF) << 16) |
-      ((frame(frame.length - 2) & 0xFF) << 8) |
-      (frame(frame.length - 1) & 0xFF)
+  def frameValid(frame: Array[Byte]): Boolean = frameValid(frame, 0, frame.length)
+
+  /** [[frameValid]] over the frame at bytes[from, until), in place. */
+  def frameValid(bytes: Array[Byte], from: Int, until: Int): Boolean = {
+    if (until - from < 6) return false
+    val calc = compute(bytes, from, until - 3)
+    val stored = ((bytes(until - 3) & 0xFF) << 16) |
+      ((bytes(until - 2) & 0xFF) << 8) |
+      (bytes(until - 1) & 0xFF)
     calc == stored
   }
 }

@@ -12,13 +12,14 @@ package graft.rtcm
   * 0xD3 preamble byte-aligned, peek the length, wait for the full
   * frame, CRC-check; on mismatch drop ONE byte and realign
   * (src/ntripclient.py:546-552). State is the residual buffer — kept
-  * bounded (maxBuffer) so per-key streaming state can't grow without
-  * limit at scale (SURVEY.md §7 risk 6).
+  * bounded (maxBuffer) so a connection's framing state can't grow
+  * without limit at scale (SURVEY.md §7 risk 6).
   *
   * Pure function of (state, chunk) → (state', frames), so one fold
-  * serves every front end: the NTRIP source's reader threads run it per
-  * connection as bytes arrive, `RtcmStreaming.frameStream` carries the
-  * state per mountpoint for other chunk streams, and
+  * serves every front end. Streams are framed where their bytes are
+  * read, one [[Framer]] per connection: the NTRIP source's reader
+  * threads, `NtripDurableLog.drain` and the replay harness
+  * (`StreamingReplay.run`) all hand Spark chunks of whole frames.
   * `RtcmPipeline.frameChunks` folds it over batch rows.
   */
 object RtcmFraming {
@@ -30,7 +31,7 @@ object RtcmFraming {
   }
   val emptyState: State = State(Array.emptyByteArray)
 
-  final val DefaultMaxBuffer: Int = 1 << 20 // 1 MiB per mountpoint
+  final val DefaultMaxBuffer: Int = 1 << 20 // 1 MiB per connection
 
   /** What one [[feedCounted]] call did: the new state, the complete
     * CRC-valid frames, how many candidate frames failed their CRC
@@ -76,9 +77,8 @@ object RtcmFraming {
         if (buf.length - start < frameLen) {
           done = true // incomplete frame: wait for more bytes
         } else {
-          val frame = java.util.Arrays.copyOfRange(buf, start, start + frameLen)
-          if (Crc24q.frameValid(frame)) {
-            frames += frame
+          if (Crc24q.frameValid(buf, start, start + frameLen)) {
+            frames += java.util.Arrays.copyOfRange(buf, start, start + frameLen)
             start += frameLen
           } else {
             start += 1 // CRC mismatch: drop one byte, realign
@@ -91,19 +91,68 @@ object RtcmFraming {
       if (start == 0) buf
       else java.util.Arrays.copyOfRange(buf, start, buf.length)
     // Bound the carried state: a hostile/garbled stream must not grow
-    // per-key state without limit. Keep the newest bytes.
+    // it without limit. Keep the newest bytes.
     val truncated = math.max(0, residual.length - maxBuffer)
     if (truncated > 0)
       residual = java.util.Arrays.copyOfRange(residual, truncated, residual.length)
     Fed(State(residual), frames.result(), crcRejects, truncated)
   }
 
+  /** What a [[Framer]] has kept and dropped so far: `frames` emitted,
+    * candidate frames that failed their CRC, `skippedBytes` read that
+    * are in no frame (noise, CRC rejects, truncation and residuals
+    * dropped by [[Framer.reset]]), and the part of those that the
+    * `maxBuffer` bound truncated. */
+  final case class Counts(frames: Long, crcRejects: Long, skippedBytes: Long,
+                          truncatedBytes: Long)
+
+  /** One connection's framing: [[feedCounted]] folded over its reads.
+    * [[push]] returns the CRC-valid frames a read completed, joined back
+    * to back into one chunk, so a chunk of whole frames carries the
+    * receive time of the read that completed them. One thread pushes;
+    * [[counts]] may be read from any. */
+  final class Framer(maxBuffer: Int = DefaultMaxBuffer) {
+    private var state = emptyState
+    @volatile private var counted = Counts(0L, 0L, 0L, 0L)
+
+    def counts: Counts = counted
+
+    /** The whole frames `read` completed, back to back, or None. */
+    def push(read: Array[Byte]): Option[Array[Byte]] = {
+      val fed = feedCounted(state, read, maxBuffer)
+      val frames = fed.frames
+      val frameBytes = frames.map(_.length.toLong).sum
+      val c = counted
+      counted = Counts(c.frames + frames.size, c.crcRejects + fed.crcRejects,
+        c.skippedBytes + state.size + read.length - fed.state.size - frameBytes,
+        c.truncatedBytes + fed.truncatedBytes)
+      state = fed.state
+      if (frames.isEmpty) None
+      else if (frames.size == 1) Some(frames.head)
+      else {
+        val all = new Array[Byte](frameBytes.toInt)
+        var at = 0
+        frames.foreach { f => System.arraycopy(f, 0, all, at, f.length); at += f.length }
+        Some(all)
+      }
+    }
+
+    /** Drop the unfinished residual, counting it as skipped: the
+      * connection ended, and its bytes could only fail a CRC against
+      * the next one. */
+    def reset(): Unit = {
+      val c = counted
+      counted = c.copy(skippedBytes = c.skippedBytes + state.size)
+      state = emptyState
+    }
+  }
+
   /** Convenience: extract all frames from a self-contained byte blob. */
   def frames(data: Array[Byte]): Vector[Array[Byte]] = feed(emptyState, data)._2
 
   /** The frames of `packed`, which holds whole frames back to back (as
-    * the NTRIP source's chunks do, [[feed]] having already checked their
-    * CRCs): each frame's extent comes from its 10-bit length header, with
+    * a [[Framer]]'s chunks do, having already checked their CRCs): each
+    * frame's extent comes from its 10-bit length header, with
     * no search and no CRC (see [[packedFrameEnd]]). A single frame
     * spanning all of `packed` is returned as `packed` itself, uncopied. */
   def splitPacked(packed: Array[Byte]): Iterator[Array[Byte]] = new Iterator[Array[Byte]] {
@@ -124,7 +173,7 @@ object RtcmFraming {
     * frames back to back), from its length header. A byte that is not a
     * preamble where a frame must start, or a length that runs past the
     * end, throws `IllegalArgumentException`: such input was not framed
-    * by [[feed]]. */
+    * by a [[Framer]]. */
   def packedFrameEnd(packed: Array[Byte], pos: Int): Int = {
     if (packed.length - pos < 6 || packed(pos) != Preamble)
       throw new IllegalArgumentException(

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.etl.{DecodedFrame, RawChunk, SyntheticRtcm}
+import graft.rtcm.RtcmFraming
 import org.apache.spark.sql.{DataFrame, Dataset, SQLContext, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -109,8 +110,12 @@ object DashboardStreams {
   * aggregation be value-checked against its batch twin (and by the
   * DuckDB gate) on identical input.
   *
-  * The corpus is fed in `nBatches` event-time-ordered slices (state —
-  * framing buffers, open windows — must survive every boundary), then
+  * The corpus is framed first, per mountpoint in `seq` order, as a
+  * reader frames its connection (an `RtcmFraming.Framer`): each chunk
+  * that completes frames becomes one chunk of them, with its receive
+  * time and seq. The framed chunks are fed in `nBatches`
+  * event-time-ordered slices (open windows must survive every
+  * boundary), then
   * one far-future frame on the [[FlushMount]] sentinel advances the
   * watermark past every real window so Append mode emits them all;
   * callers drop the sentinel's own rows by mountpoint. */
@@ -178,7 +183,7 @@ object StreamingReplay {
       // arrival order = event-time order (all mounts stream
       // concurrently); per-mount seq order is preserved because chunk
       // receive times increase with seq
-      val ordered = chunks.sortBy(c => (c.receiveMicros, c.mountPoint, c.seq))
+      val ordered = framed(chunks).sortBy(c => (c.receiveMicros, c.mountPoint, c.seq))
       ordered.grouped(math.max(1, ordered.size / nBatches + 1)).foreach { g =>
         input.addData(g)
         q.processAllAvailable()
@@ -198,6 +203,16 @@ object StreamingReplay {
       deleteRecursively(ckpt)
     }
   }
+
+  /** `chunks` framed per mountpoint in `seq` order, one
+    * `RtcmFraming.Framer` each, as a reader frames its connection: every
+    * chunk that completes frames becomes one chunk of them, keeping its
+    * receive time and seq. */
+  def framed(chunks: Seq[RawChunk]): Seq[RawChunk] =
+    chunks.groupBy(_.mountPoint).values.toSeq.flatMap { cs =>
+      val framer = new RtcmFraming.Framer
+      cs.sortBy(_.seq).flatMap(c => framer.push(c.data).map(f => c.copy(data = f)))
+    }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {
     import java.nio.file.Files

@@ -48,9 +48,9 @@ import javax.net.ssl.SSLContext
   * single sequential byte stream; concurrency comes from running one
   * client per mountpoint on the ingest host (or inside a streaming
   * source's reader thread), not from async IO. Framing/CRC happens in
-  * the caller (`NtripSource`'s reader threads, or the Spark pipeline
-  * for replayed chunks), decode in the Spark pipeline — this class only
-  * yields raw body chunks.
+  * the caller, one `RtcmFraming.Framer` per connection (`NtripSource`'s
+  * reader threads, `NtripDurableLog.drain`), decode in the Spark
+  * pipeline — this class only yields raw body chunks.
   */
 final class NtripClient(
     host: String,
@@ -240,22 +240,5 @@ final class NtripClient(
 
   override def close(): Unit = {
     if (socket != null && !socket.isClosed) socket.close()
-  }
-}
-
-object NtripClient {
-  /** Drain a mountpoint stream into RawChunk rows (receive time from
-    * the supplied clock, seq = arrival index) — the bridge from one
-    * live caster connection to the streaming pipeline's input rows.
-    * The test harness pushes these into a MemoryStream; production
-    * would do the same from a custom streaming source's partition
-    * reader or a message-bus producer. */
-  def drain(client: NtripClient, mountPoint: String, nowMicros: () => Long,
-            maxChunks: Int = Int.MaxValue): Iterator[graft.etl.RawChunk] = {
-    Iterator.from(0)
-      .take(maxChunks)
-      .map(i => client.readChunk().map(b => graft.etl.RawChunk(mountPoint, nowMicros(), i.toLong, b)))
-      .takeWhile(_.isDefined)
-      .map(_.get)
   }
 }

@@ -4,11 +4,12 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 import java.util.Base64
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.{col, unbase64}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, concat, lit, raise_error, unbase64, when}
 import org.apache.spark.sql.types._
 
 import graft.etl.RawChunk
+import graft.rtcm.RtcmFraming
 
 /** Durable-log bridge for the live NTRIP source: exactly-once replay.
   *
@@ -20,17 +21,21 @@ import graft.etl.RawChunk
   * no Spark needed) drains the `NtripClient` into atomically-renamed,
   * sequentially-rolled JSON-lines files, and Spark replays them with
   * its file streaming source, whose checkpointed file tracking plus a
-  * file sink is end-to-end exactly-once. The rest of the pipeline
-  * (framer → decode → sinks) is unchanged — it consumes the same
-  * `Dataset[RawChunk]`. Its chunks are raw reads, not whole frames, so
-  * `RtcmStreaming.decodeStream` frames them with the stateful
-  * `frameStream`.
+  * file sink is end-to-end exactly-once. The writer frames each
+  * connection's reads as the NTRIP source's reader threads do (an
+  * `RtcmFraming.Framer`), so a log line is a chunk of whole frames and
+  * the rest of the pipeline (decode → sinks) is unchanged: it consumes
+  * the same `Dataset[RawChunk]`, with the same stateless
+  * `RtcmStreaming.decodeStream` plan.
   *
-  * File format: one JSON object per chunk
-  * `{"mountPoint":…,"receiveMicros":…,"seq":…,"data":"<base64>"}`,
-  * rolled every `rollEvery` chunks. Files are written to a hidden temp
-  * name and atomically renamed into the watched directory, so the
-  * streaming source never lists a half-written file.
+  * File format: one JSON object per read that completed frames,
+  * `{"mountPoint":…,"receiveMicros":…,"seq":…,"frames":"<base64>"}`,
+  * with the frames back to back, rolled every `rollEvery` lines. A log
+  * written before framing moved into the writer holds raw reads in a
+  * `data` field; [[readStream]] and [[readBatch]] fail on its lines,
+  * naming the file. Files are written to a hidden temp name and
+  * atomically renamed into the watched directory, so the streaming
+  * source never lists a half-written file.
   */
 object NtripDurableLog {
 
@@ -39,7 +44,7 @@ object NtripDurableLog {
     StructField("mountPoint", StringType, nullable = false),
     StructField("receiveMicros", LongType, nullable = false),
     StructField("seq", LongType, nullable = false),
-    StructField("data", StringType, nullable = false)))
+    StructField("frames", StringType, nullable = false)))
 
   /** JSON string escape for the mountPoint field (a caster-supplied
     * name can contain quotes/backslashes/control chars; an unescaped
@@ -64,11 +69,13 @@ object NtripDurableLog {
     else safe + "x" + Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(mountPoint))
   }
 
-  /** Drain the client's open stream into rolled log files under `dir`.
-    * Returns the number of chunks written; `startSeq` continues a
-    * previous writer incarnation's numbering (the writer's own
-    * restart story: scan the directory for the last file's max seq).
-    * Blocks until the stream ends or `maxChunks` is reached. */
+  /** Drain the client's open stream into rolled log files under `dir`,
+    * one line per read that completed frames. Returns the number of
+    * lines written; `startSeq` continues a previous writer
+    * incarnation's numbering (the writer's own restart story: scan the
+    * directory for the last file's max seq). Blocks until the stream
+    * ends or `maxChunks` lines are written; the unfinished residual is
+    * dropped with the connection. */
   def drain(client: NtripClient, mountPoint: String, dir: Path,
             nowMicros: () => Long, rollEvery: Int = 256,
             startSeq: Long = 0L, maxChunks: Long = Long.MaxValue): Long = {
@@ -76,6 +83,7 @@ object NtripDurableLog {
     val b64 = Base64.getEncoder
     val mp = jsonEscape(mountPoint)
     val fp = fileSafe(mountPoint)
+    val framer = new RtcmFraming.Framer
     var seq = startSeq
     val batch = new StringBuilder
     var inBatch = 0
@@ -107,12 +115,15 @@ object NtripDurableLog {
     }
     var chunk = if (seq - startSeq >= maxChunks) None else client.readChunk()
     while (chunk.isDefined) {
-      val data = b64.encodeToString(chunk.get)
-      batch.append(s"""{"mountPoint":"$mp","receiveMicros":${nowMicros()},"seq":$seq,"data":"$data"}""")
-        .append('\n')
-      seq += 1
-      inBatch += 1
-      if (inBatch >= rollEvery) flush()
+      val micros = nowMicros()
+      framer.push(chunk.get).foreach { frames =>
+        val data = b64.encodeToString(frames)
+        batch.append(s"""{"mountPoint":"$mp","receiveMicros":$micros,"seq":$seq,"frames":"$data"}""")
+          .append('\n')
+        seq += 1
+        inBatch += 1
+        if (inBatch >= rollEvery) flush()
+      }
       chunk = if (seq - startSeq >= maxChunks) None else client.readChunk()
     }
     flush()
@@ -144,21 +155,23 @@ object NtripDurableLog {
   /** Streaming replay of a log directory as the pipeline's input rows.
     * With a checkpointLocation and a file (or other idempotent) sink,
     * delivery is exactly-once across restarts. */
-  def readStream(spark: SparkSession, dir: String): Dataset[RawChunk] = {
-    import spark.implicits._
-    spark.readStream.schema(FileSchema).json(dir)
-      .select(col("mountPoint"), col("receiveMicros"), col("seq"),
-        unbase64(col("data")).as("data"))
-      .as[RawChunk]
-  }
+  def readStream(spark: SparkSession, dir: String): Dataset[RawChunk] =
+    chunks(spark, spark.readStream.schema(FileSchema).json(dir))
 
   /** Batch read of the same log — the ground-truth twin a restart test
     * compares the streamed output against. */
-  def readBatch(spark: SparkSession, dir: String): Dataset[RawChunk] = {
+  def readBatch(spark: SparkSession, dir: String): Dataset[RawChunk] =
+    chunks(spark, spark.read.schema(FileSchema).json(dir))
+
+  /** Log lines as chunks; a line with no `frames` field fails the query
+    * with the name of its file. */
+  private def chunks(spark: SparkSession, lines: DataFrame): Dataset[RawChunk] = {
     import spark.implicits._
-    spark.read.schema(FileSchema).json(dir)
-      .select(col("mountPoint"), col("receiveMicros"), col("seq"),
-        unbase64(col("data")).as("data"))
+    lines.select(col("mountPoint"), col("receiveMicros"), col("seq"),
+      when(col("frames").isNull, raise_error(concat(
+        lit("durable-log line without a frames field (a log of raw reads, written before "
+          + "the writer framed them, cannot be replayed): "), col("_metadata.file_path"))))
+        .otherwise(unbase64(col("frames"))).as("data"))
       .as[RawChunk]
   }
 }

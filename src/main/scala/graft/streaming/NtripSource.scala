@@ -30,11 +30,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * One driver-side reader thread per mountpoint drains an NtripClient
   * (chunked/raw body reads) and frames the bytes as they arrive, as the
-  * reference's reader does (src/ntripclient.py:523-544): it folds
-  * `RtcmFraming.feed` over each connection's reads and buffers only
-  * whole frames. A buffered chunk is the CRC-valid frames that one read
-  * completed, back to back, stamped with that read's receive time; a
-  * read that completes no frame buffers nothing. On reconnect the
+  * reference's reader does (src/ntripclient.py:523-544): it pushes
+  * each connection's reads through an `RtcmFraming.Framer` and buffers
+  * only whole frames. A buffered chunk is the CRC-valid frames that one
+  * read completed, back to back, stamped with that read's receive time;
+  * a read that completes no frame buffers nothing. On reconnect the
   * unfinished residual is dropped (it could only fail CRC against the
   * new stream) and framing starts afresh. Because every chunk is whole
   * frames, `RtcmStreaming.decodeStream` decodes this source with no
@@ -63,9 +63,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Each micro-batch's progress reports, per mountpoint `M`, in
   * `StreamingQueryProgress.sources(i).metrics`: `M.frames` (frames
-  * buffered), `M.skippedBytes` (bytes read that are in no frame: noise,
-  * CRC rejects and residuals dropped at reconnect), `M.crcRejects`
-  * (candidate frames that failed their CRC), `M.reconnects`, and
+  * framed), `M.skippedBytes` (bytes read that are in no frame: noise,
+  * CRC rejects, truncation and residuals dropped at reconnect),
+  * `M.truncatedBytes` (the part of those that the framer's
+  * `maxBuffer` bound dropped), `M.crcRejects` (candidate frames that
+  * failed their CRC), `M.reconnects`, and
   * `M.lastReconnectCause` (class and message of the last error that
   * ended a connection; absent until one does).
   */
@@ -102,11 +104,10 @@ private final case class NtripOffset(n: Long) extends Offset {
   override def json(): String = n.toString
 }
 
-/** What one mountpoint's reader has framed and dropped so far. */
+/** One mountpoint's reader: its framer (reset at each reconnect) and
+  * its connection history. */
 private final class ReaderCounters {
-  val frames = new AtomicLong
-  val skippedBytes = new AtomicLong
-  val crcRejects = new AtomicLong
+  val framer = new RtcmFraming.Framer
   val reconnects = new AtomicLong
   @volatile var lastReconnectCause: Option[String] = None
 }
@@ -168,6 +169,7 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
   private val readers: Seq[Thread] = mounts.toIndexedSeq.map { mount =>
     val t = new Thread(() => {
       val count = counters(mount)
+      val framer = count.framer
       var seq = 0L
       var orderlyEnd = false
       // abnormal errors (caster drop, read timeout) RECONNECT with
@@ -177,38 +179,19 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
       var backoffMs = 1000L
       while (!stopped.get() && !orderlyEnd) {
         val client = new NtripClient(host, port, tls = tls)
-        // this connection's framing state: its residual dies with it
-        var framing = RtcmFraming.emptyState
         try {
           client.openStream(mount, user, passwd, nmeaGga = nmeaGga)
           backoffMs = 1000L
           var chunk = client.readChunk()
           while (chunk.isDefined && !stopped.get()) {
             val micros = System.currentTimeMillis() * 1000L
-            val read = chunk.get
-            val fed = RtcmFraming.feedCounted(framing, read)
-            val next = fed.state
-            val frames = fed.frames
-            val frameBytes = frames.map(_.length.toLong).sum
-            count.crcRejects.addAndGet(fed.crcRejects.toLong)
-            count.skippedBytes.addAndGet(framing.size + read.length - next.size - frameBytes)
-            framing = next
-            if (frames.nonEmpty) {
-              val data = if (frames.size == 1) frames.head else {
-                val all = new Array[Byte](frameBytes.toInt)
-                var at = 0
-                frames.foreach { f => System.arraycopy(f, 0, all, at, f.length); at += f.length }
-                all
-              }
+            framer.push(chunk.get).foreach { data =>
               buffer.synchronized {
                 // bound the buffer: block (and stop draining the socket)
                 // until the query consumes — natural TCP backpressure
                 while (buffer.length >= maxBuffered && !stopped.get())
                   buffer.wait(200L)
-                if (!stopped.get()) {
-                  buffer += RawChunk(mount, micros, seq, data)
-                  count.frames.addAndGet(frames.size.toLong)
-                }
+                if (!stopped.get()) buffer += RawChunk(mount, micros, seq, data)
               }
               seq += 1
             }
@@ -226,7 +209,8 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
             backoffMs = math.min(backoffMs * 2, 300000L) // cap 5 min (reference cap)
         } finally {
           client.close()
-          count.skippedBytes.addAndGet(framing.size.toLong)
+          // this connection's residual dies with it
+          framer.reset()
         }
       }
     }, s"ntrip-reader-$mount")
@@ -307,9 +291,11 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
   override def metrics(latestConsumedOffset: util.Optional[Offset]): util.Map[String, String] = {
     val m = new util.TreeMap[String, String]()
     counters.foreach { case (mount, c) =>
-      m.put(s"$mount.frames", c.frames.get.toString)
-      m.put(s"$mount.skippedBytes", c.skippedBytes.get.toString)
-      m.put(s"$mount.crcRejects", c.crcRejects.get.toString)
+      val framed = c.framer.counts
+      m.put(s"$mount.frames", framed.frames.toString)
+      m.put(s"$mount.skippedBytes", framed.skippedBytes.toString)
+      m.put(s"$mount.truncatedBytes", framed.truncatedBytes.toString)
+      m.put(s"$mount.crcRejects", framed.crcRejects.toString)
       m.put(s"$mount.reconnects", c.reconnects.get.toString)
       c.lastReconnectCause.foreach(m.put(s"$mount.lastReconnectCause", _))
     }

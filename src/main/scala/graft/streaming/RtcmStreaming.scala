@@ -1,91 +1,32 @@
 package graft.streaming
 
 import graft.etl.{EncodedFrame, RawChunk, RtcmPipeline}
-import graft.rtcm.RtcmFraming
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Union}
-import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
-/** Structured Streaming front-end of the ingest pipeline: raw chunk
-  * stream → frames → decoded rows (SURVEY.md §3.1 Spark retrace).
+/** Structured Streaming front-end of the ingest pipeline: chunk stream
+  * → decoded rows (SURVEY.md §3.1 Spark retrace).
   *
-  * Live NTRIP input needs no streaming state: the source's reader
-  * threads frame each connection's bytes as they arrive (as the
-  * reference's reader does, src/ntripclient.py:523-544), so every chunk
-  * it delivers holds whole frames, and [[decodeStream]] splits and
-  * decodes them in the source stage — one stateless stage per
-  * micro-batch. Any other chunk stream (durable-log replay, replay
-  * files, `MemoryStream`) has arbitrary chunk boundaries and goes
-  * through [[frameStream]], whose per-key state is ONE bounded residual
-  * byte buffer (≤ RtcmFraming.DefaultMaxBuffer) — constant memory per
-  * mountpoint regardless of stream length. A processing-time timeout
-  * evicts buffers of mountpoints that stopped transmitting (the
-  * reference's watchdog analog, src/ingestion.py:61-95).
+  * Chunks are framed where their bytes are read, once per connection,
+  * as the reference's reader does (src/ntripclient.py:523-544): the
+  * NTRIP source's reader threads, `NtripDurableLog.drain` and
+  * `StreamingReplay.run` each push their reads through an
+  * `RtcmFraming.Framer`, so every chunk a stream delivers holds whole
+  * CRC-valid frames. [[decodeStream]] therefore needs no streaming
+  * state: it splits and decodes each chunk in the source stage, one
+  * stateless stage per micro-batch, whatever the input.
   */
 object RtcmStreaming {
 
-  /** Per-mountpoint sequential framing as flatMapGroupsWithState, for
-    * chunk streams whose boundaries fall anywhere in a frame. Chunks
-    * inside a micro-batch are ordered by `seq` (arrival order); the
-    * residual buffer crosses micro-batch boundaries via state. It costs
-    * a hash exchange of the raw bytes, a second stage and a state-store
-    * commit per micro-batch; [[decodeStream]] skips it for the NTRIP
-    * source, whose chunks are already whole frames.
-    *
-    * `stateTimeout = Some(d)` evicts buffers of silent mountpoints
-    * after `d` of processing time (production hygiene; note a
-    * processing-time timeout makes the engine run timeout-only empty
-    * batches, so leave it None for replay/testing). */
-  def frameStream(chunks: Dataset[RawChunk],
-                  stateTimeout: Option[String] = None): Dataset[EncodedFrame] = {
+  /** Full streaming decode: chunks of whole frames → DecodedFrame rows,
+    * by the `DecodeFrames` node in the source stage — no state, no
+    * exchange, no second stage, for every input. A chunk that is not
+    * whole frames (raw reads that no `Framer` saw) fails the query,
+    * naming its mountpoint, receive time and byte offset. */
+  def decodeStream(chunks: Dataset[RawChunk]): Dataset[graft.etl.DecodedFrame] = {
     val spark = chunks.sparkSession
     import spark.implicits._
-    val timeoutConf = if (stateTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    chunks
-      .groupByKey(_.mountPoint)
-      .flatMapGroupsWithState[Array[Byte], EncodedFrame](
-        OutputMode.Append, timeoutConf) {
-        (mount: String, it: Iterator[RawChunk], state: GroupState[Array[Byte]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = RtcmFraming.State(state.getOption.getOrElse(Array.emptyByteArray))
-            val out = it.toSeq.sortBy(_.seq).flatMap { chunk =>
-              val (s2, frames) = RtcmFraming.feed(st, chunk.data)
-              st = s2
-              frames.map(fr => EncodedFrame(mount, chunk.receiveMicros, fr))
-            }
-            state.update(st.buffer)
-            stateTimeout.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
-      }
-  }
-
-  /** Full streaming decode: chunks → frames → DecodedFrame rows.
-    *
-    * The plan is chosen from `chunks`' analyzed plan. When it reads only
-    * the NTRIP source (see [[readsNtripChunksOnly]]), every chunk holds
-    * whole frames, and `DecodeFrames` splits and decodes them in the
-    * source stage: no state, no exchange, no second stage. Any other
-    * input is framed by [[frameStream]] first. */
-  def decodeStream(chunks: Dataset[RawChunk]): Dataset[graft.etl.DecodedFrame] =
-    if (readsNtripChunksOnly(chunks.queryExecution.analyzed)) {
-      val spark = chunks.sparkSession
-      import spark.implicits._
-      RtcmPipeline.decode(chunks.withColumnRenamed("data", "frame").as[EncodedFrame])
-    } else RtcmPipeline.decode(frameStream(chunks))
-
-  /** Whether every row of `plan` is a chunk the NTRIP source delivered,
-    * unchanged: it is one [[NtripSourceProvider]] relation or a union of
-    * them. Anything else keeps the stateful framer. */
-  private[streaming] def readsNtripChunksOnly(plan: LogicalPlan): Boolean = plan match {
-    case r: StreamingRelationV2 => r.table.isInstanceOf[NtripTable]
-    case u: Union => u.children.forall(readsNtripChunksOnly)
-    case _ => false
+    RtcmPipeline.decode(chunks.withColumnRenamed("data", "frame").as[EncodedFrame])
   }
 
   /** Land the decoded stream as partitioned parquet tables via

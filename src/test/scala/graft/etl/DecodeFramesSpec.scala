@@ -134,10 +134,31 @@ class DecodeFramesSpec extends AnyFunSuite {
     assert(messages.exists(_.contains("past the")), messages.mkString(" | "))
   }
 
+  test("decodeStream fails a query fed raw reads, naming mountpoint, receive time and offset") {
+    import spark.implicits._
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // a transport read no Framer saw: it starts with garbage
+    val raw = SyntheticRtcm.corpus(1, 8).head
+    val input = MemoryStream[RawChunk]
+    val q = graft.streaming.RtcmStreaming.decodeStream(input.toDS()).writeStream
+      .format("noop").start()
+    try {
+      input.addData(raw)
+      val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).toSeq
+      assert(messages.exists(m =>
+        m.contains(s"chunk of mountpoint ${raw.mountPoint} (receiveMicros ${raw.receiveMicros})") &&
+          m.contains(s"at byte 0 of a ${raw.data.length}-byte packed chunk")), messages.mkString(" | "))
+    } finally q.stop()
+  }
+
   test("decodeStream lands the same rows as the batch decode") {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val all = chunks
+    val all = graft.streaming.StreamingReplay.framed(chunks)
     val input = MemoryStream[RawChunk]
     val q = graft.streaming.RtcmStreaming.decodeStream(input.toDS()).writeStream
       .format("memory").queryName("decode_frames_parity")

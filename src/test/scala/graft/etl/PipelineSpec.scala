@@ -91,40 +91,12 @@ class PipelineSpec extends AnyFunSuite {
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  test("flatMapGroupsWithState framing matches batch framing across micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    val corpus = SyntheticRtcm.corpus(2, 48)
-    val input = MemoryStream[RawChunk]
-    val framed = graft.streaming.RtcmStreaming.frameStream(input.toDS())
-    val q = framed.writeStream
-      .format("memory").queryName("framed_out")
-      .outputMode(OutputMode.Append)
-      .start()
-    try {
-      // feed in three micro-batches, splitting mid-stream (partial
-      // frames must carry across batch boundaries via state)
-      val parts = corpus.grouped(math.max(1, corpus.size / 3 + 1)).toSeq
-      parts.foreach { p => input.addData(p); q.processAllAvailable() }
-      val got = spark.table("framed_out").count()
-      val expected = {
-        import spark.implicits._
-        RtcmPipeline.frameChunks(spark.createDataset(corpus)).count()
-      }
-      assert(got == expected)
-      assert(got == 96) // 2 mounts × 48 frames
-    } finally q.stop()
-  }
-
   test("watermarked streaming window aggregates equal the batch dashboard queries") {
     import graft.queries.Q
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     import spark.implicits._
-    // live path: chunks -> stateful framing -> decode -> watermarked
+    // live path: reader-side framing -> decode -> watermarked
     // event-time windows, replayed across four micro-batch boundaries;
     // batch path: the same corpus through the batch pipeline + Q.bucket.
     // 400 frames/mount ≈ 150 s of 0.5 s-cadence chunk time — several
@@ -189,7 +161,8 @@ class StreamingSpec extends AnyFunSuite {
     try {
       val maxT = corpus.map(_.receiveMicros).max
       // batch 1: the whole in-order corpus -> watermark = maxT - 2 min
-      input.addData(corpus.sortBy(c => (c.receiveMicros, c.mountPoint)))
+      input.addData(graft.streaming.StreamingReplay.framed(corpus)
+        .sortBy(c => (c.receiveMicros, c.mountPoint)))
       q.processAllAvailable()
       // batch 2: a frame 10 minutes OLDER than the watermark, on its
       // own mountpoint — its window closed long ago

@@ -128,6 +128,29 @@ class FramingSpec extends AnyFunSuite {
     assert(out.isEmpty)
     assert(s.size <= RtcmFraming.DefaultMaxBuffer)
   }
+
+  test("a Framer counts what its maxBuffer bound truncates") {
+    val f = someFrame(6)
+    // a preamble whose length header promises a 1029-byte frame, then 37 zeros
+    val promise = Array[Byte](RtcmFraming.Preamble, 0x03, 0xFF.toByte) ++ new Array[Byte](37)
+    val framer = new RtcmFraming.Framer(maxBuffer = 16)
+    assert(framer.push(promise).isEmpty)
+    assert(framer.counts == RtcmFraming.Counts(0L, 0L, 24L, 24L))
+    // the 16 kept bytes hold no preamble: the next read skips them
+    assert(framer.push(f).map(_.toSeq).contains(f.toSeq))
+    assert(framer.counts == RtcmFraming.Counts(1L, 0L, 40L, 24L))
+  }
+
+  test("a Framer joins the frames one read completes and drops its residual at reset") {
+    val Seq(f1, f2, f3) = Seq(7, 8, 9).map(someFrame)
+    val framer = new RtcmFraming.Framer
+    assert(framer.push(f1 ++ f2 ++ f3.take(5)).map(_.toSeq).contains((f1 ++ f2).toSeq))
+    framer.reset()
+    assert(framer.counts == RtcmFraming.Counts(2L, 0L, 5L, 0L))
+    // framing starts afresh: no CRC reject against the dropped residual
+    assert(framer.push(f3).map(_.toSeq).contains(f3.toSeq))
+    assert(framer.counts == RtcmFraming.Counts(3L, 0L, 5L, 0L))
+  }
 }
 
 class GnssTimeSpec extends AnyFunSuite {

@@ -9,14 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Properties of `RtcmFraming` over random byte streams: valid frames
   * of every message kind the encoder writes, interleaved with random
   * garbage (preamble bytes included) and cut at random chunk
-  * boundaries. The NTRIP source's reader threads fold `feed` over each
-  * connection's reads exactly like this, and `DecodeFrames` walks
-  * their chunks by the length headers `splitPacked` splits on
-  * (`packedFrameEnd`), so these properties are the live path's framing
-  * contract.
+  * boundaries. Every chunk stream is framed by pushing its reads
+  * through a `Framer`, which folds `feed` exactly like this, and
+  * `DecodeFrames` walks the chunks by the length headers `splitPacked`
+  * splits on (`packedFrameEnd`), so these properties are the streaming
+  * path's framing contract.
   *
   * Driven by `org.scalacheck.Test.check` from a fixed seed, without
-  * shrinking; the four properties take a few seconds together. */
+  * shrinking; the five properties take a few seconds together. */
 class FramingPropertiesSpec extends AnyFunSuite {
   import FramingPropertiesSpec.Stream
 
@@ -91,6 +91,20 @@ class FramingPropertiesSpec extends AnyFunSuite {
           fs
         }
         seqs(folded) == seqs(RtcmFraming.frames(s.bytes))
+    })
+  }
+
+  test("pushing any chunking through a Framer gives the frames and counts of the whole stream") {
+    check(Prop.forAllNoShrink(streamGen.flatMap(s => chunksGen(s.bytes).map(s -> _))) {
+      case (s, chunks) =>
+        val split = new RtcmFraming.Framer
+        val whole = new RtcmFraming.Framer
+        val pushed = chunks.flatMap(split.push).flatMap(RtcmFraming.splitPacked)
+        val once = whole.push(s.bytes).toSeq.flatMap(RtcmFraming.splitPacked)
+        split.reset()
+        whole.reset()
+        seqs(pushed) == seqs(RtcmFraming.frames(s.bytes)) && seqs(once) == seqs(pushed) &&
+          split.counts == whole.counts
     })
   }
 

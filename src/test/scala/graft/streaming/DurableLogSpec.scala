@@ -2,17 +2,19 @@ package graft.streaming
 
 import java.io.{BufferedReader, InputStreamReader}
 import java.net.ServerSocket
-import java.nio.charset.StandardCharsets.ISO_8859_1
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.nio.file.Files
 
-import graft.etl.{SparkTestSession, SyntheticRtcm}
+import graft.etl.{RtcmPipeline, SparkTestSession, SyntheticRtcm}
+import graft.rtcm.RtcmFraming
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Exactly-once live-source option: NtripClient → durable chunk log
-  * (atomically-rolled JSON files) → Spark file streaming source. The
-  * restart test kills the query mid-stream, appends more live data to
-  * the log, restarts from the same checkpoint, and asserts every frame
-  * landed exactly once — the delivery the raw TCP source cannot give. */
+/** Exactly-once live-source option: NtripClient → durable log of
+  * whole-frame chunks (atomically-rolled JSON files) → Spark file
+  * streaming source → the stateless decode. The restart tests kill the
+  * query mid-stream, append more live data to the log, restart from
+  * the same checkpoint, and assert every frame landed exactly once —
+  * the delivery the raw TCP source cannot give. */
 class DurableLogSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -43,18 +45,19 @@ class DurableLogSpec extends AnyFunSuite {
     t
   }
 
+  /** A receive clock that advances `stepMicros` per read. */
+  private final class Clock(var micros: Long, stepMicros: Long) extends (() => Long) {
+    def apply(): Long = { micros += stepMicros; micros }
+  }
+
   private def drainCasterToLog(frames: Seq[Array[Byte]], logDir: java.nio.file.Path,
-                               startSeq: Long,
-                               microsStart: Long = 1700000000000000L,
-                               stepMicros: Long = 1000L): Long = {
+                               startSeq: Long, clock: Clock): Long = {
     val server = new ServerSocket(0)
     try {
       serve(server, frames)
       val c = new NtripClient("127.0.0.1", server.getLocalPort)
       c.openStream("MNT0")
-      var micros = microsStart
-      val n = NtripDurableLog.drain(c, "MNT0", logDir,
-        () => { micros += stepMicros; micros }, rollEvery = 5, startSeq = startSeq)
+      val n = NtripDurableLog.drain(c, "MNT0", logDir, clock, rollEvery = 5, startSeq = startSeq)
       c.close()
       n
     } finally server.close()
@@ -71,9 +74,10 @@ class DurableLogSpec extends AnyFunSuite {
     val phase1 = SyntheticRtcm.framesFor("MNT0", 100, 40, 61L).map(_._2)
     val phase2 = SyntheticRtcm.framesFor("MNT0", 101, 20, 62L).map(_._2)
     assert((phase1 ++ phase2).map(_.toSeq).distinct.size == 60)
+    val clock = new Clock(1700000000000000L, 1000L)
 
     def runQuery(): Unit = {
-      val q = RtcmStreaming.frameStream(NtripDurableLog.readStream(spark, logDir.toString))
+      val q = RtcmStreaming.decodeStream(NtripDurableLog.readStream(spark, logDir.toString))
         .writeStream.format("parquet")
         .option("path", outDir).option("checkpointLocation", ckDir)
         .outputMode(OutputMode.Append).start()
@@ -81,7 +85,7 @@ class DurableLogSpec extends AnyFunSuite {
     }
 
     // phase 1: live data → log → query lands it, then "crashes" (stop)
-    val n1 = drainCasterToLog(phase1, logDir, startSeq = 0L)
+    val n1 = drainCasterToLog(phase1, logDir, startSeq = 0L, clock)
     assert(n1 > 0)
     runQuery()
     val afterPhase1 = spark.read.parquet(outDir).count()
@@ -91,21 +95,29 @@ class DurableLogSpec extends AnyFunSuite {
     // numbering from the directory (its own restart story)
     val resumeAt = NtripDurableLog.nextSeq(logDir, "MNT0")
     assert(resumeAt == n1)
-    drainCasterToLog(phase2, logDir, startSeq = resumeAt)
+    drainCasterToLog(phase2, logDir, startSeq = resumeAt, clock)
+
+    // the writer framed the frame-misaligned reads: each line is whole
+    // frames, and the lines in seq order are the served frames
+    val logged = NtripDurableLog.readBatch(spark, logDir.toString).collect().sortBy(_.seq)
+    assert(logged.map(_.seq).toSeq == logged.indices.map(_.toLong))
+    assert(logged.flatMap(c => RtcmFraming.splitPacked(c.data)).map(_.toSeq).toSeq ==
+      (phase1 ++ phase2).map(_.toSeq))
 
     // restart from the SAME checkpoint: only the new files replay
     runQuery()
-    val frames = spark.read.parquet(outDir)
-      .selectExpr("frame").as[Array[Byte]].collect().map(_.toSeq)
-    assert(frames.length == 60, s"expected 60 frames exactly once, got ${frames.length}")
-    assert(frames.toSet == (phase1 ++ phase2).map(_.toSeq).toSet)
+    val ids = spark.read.parquet(outDir).select("rtcm_package_id").as[Long].collect()
+    assert(ids.length == 60, s"expected 60 frames exactly once, got ${ids.length}")
+    val expected = RtcmPipeline.decode(RtcmPipeline.frameChunks(
+      NtripDurableLog.readBatch(spark, logDir.toString))).select("rtcm_package_id").as[Long]
+    assert(ids.sorted.toSeq == expected.collect().sorted.toSeq)
   }
 
   test("windowed dashboard aggregate survives a mid-stream restart exactly once") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.OutputMode
     // the full streaming-analytics loop under failure: durable log →
-    // stateful framing → decode → watermarked 30 s gap windows →
+    // stateless decode → watermarked 30 s gap windows →
     // parquet sink, killed between two live phases and restarted from
     // the same checkpoint; the landed windows must EQUAL the batch
     // recompute over the whole log — no lost, duplicated, or partial
@@ -115,8 +127,8 @@ class DurableLogSpec extends AnyFunSuite {
     val outDir = root.resolve("out").toString
     val ckDir = root.resolve("ck").toString
 
-    // 2 s of receive time per chunk → phases span several 30 s windows
-    val t0 = 1700000000000000L
+    // 2 s of receive time per read → phases span several 30 s windows
+    val clock = new Clock(1700000000000000L, 2000000L)
     val phase1 = SyntheticRtcm.framesFor("MNT0", 100, 40, 71L).map(_._2)
     val phase2 = SyntheticRtcm.framesFor("MNT0", 101, 40, 72L).map(_._2)
 
@@ -130,24 +142,22 @@ class DurableLogSpec extends AnyFunSuite {
       try q.processAllAvailable() finally q.stop()
     }
 
-    val n1 = drainCasterToLog(phase1, logDir, startSeq = 0L,
-      microsStart = t0, stepMicros = 2000000L)
+    val n1 = drainCasterToLog(phase1, logDir, startSeq = 0L, clock)
     runQuery() // "crash" with windows open
     val resumeAt = NtripDurableLog.nextSeq(logDir, "MNT0")
     assert(resumeAt == n1)
-    val n2 = drainCasterToLog(phase2, logDir, startSeq = resumeAt,
-      microsStart = t0 + n1 * 2000000L, stepMicros = 2000000L)
+    val n2 = drainCasterToLog(phase2, logDir, startSeq = resumeAt, clock)
     // watermark flush: one frame far past everything
-    drainCasterToLog(phase1.take(1), logDir, startSeq = resumeAt + n2,
-      microsStart = t0 + (n1 + n2) * 2000000L + 600000000L, stepMicros = 2000000L)
+    clock.micros += 600000000L
+    drainCasterToLog(phase1.take(1), logDir, startSeq = resumeAt + n2, clock)
     runQuery() // restart from the same checkpoint
 
     // ground truth: the batch pipeline over the SAME durable log,
     // minus windows the flush could not close (≥ watermark horizon)
     val allChunks = NtripDurableLog.readBatch(spark, logDir.toString)
-    val batchPkgs = graft.etl.RtcmPipeline.packages(
-      graft.etl.RtcmPipeline.decode(graft.etl.RtcmPipeline.frameChunks(allChunks)))
-    val horizon = (t0 + (n1 + n2) * 2000000L + 600000000L) / 1000000L - 120
+    val batchPkgs = RtcmPipeline.packages(RtcmPipeline.decode(RtcmPipeline.frameChunks(allChunks)))
+    // the watermark the flush frame's receive time sets
+    val horizon = clock.micros / 1000000L - 120
     val expected = batchPkgs
       .filter(col("rtcm_obs_epoch").isNotNull)
       .groupBy(graft.queries.Q.bucket(col("receive_time"), 30).as("bucket"),
@@ -163,5 +173,26 @@ class DurableLogSpec extends AnyFunSuite {
     // exactly-once: no duplicate (bucket, mountpoint) rows landed
     val all = spark.read.parquet(outDir).collect()
     assert(all.map(r => (r.getLong(0), r.getString(1))).distinct.length == all.length)
+  }
+
+  test("a log of raw reads, written before the writer framed them, fails naming its file") {
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    val logDir = Files.createTempDirectory("graft-durable-raw")
+    val read = SyntheticRtcm.framesFor("MNT0", 100, 1, 63L).head._2.take(10)
+    val old = logDir.resolve("MNT0-000000000000.json")
+    Files.write(old, (s"""{"mountPoint":"MNT0","receiveMicros":1,"seq":0,"data":"""" +
+      java.util.Base64.getEncoder.encodeToString(read) + "\"}\n").getBytes(UTF_8))
+    def names(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(x => String.valueOf(x.getMessage))
+        .exists(m => m.contains("without a frames field") && m.contains(old.getFileName.toString))
+
+    val batchErr = intercept[Exception](NtripDurableLog.readBatch(spark, logDir.toString).collect())
+    assert(names(batchErr), batchErr)
+    val q = RtcmStreaming.decodeStream(NtripDurableLog.readStream(spark, logDir.toString))
+      .writeStream.format("noop").start()
+    try {
+      val streamErr = intercept[StreamingQueryException](q.processAllAvailable())
+      assert(names(streamErr), streamErr)
+    } finally q.stop()
   }
 }

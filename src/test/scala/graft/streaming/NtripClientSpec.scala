@@ -10,10 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Live-socket NTRIP path: a localhost caster serving a chunked
   * HTTP body (the reference's transfer mode, ntripclient.py:437-455)
-  * feeds the client → source reader (which frames as bytes arrive) →
-  * stateless decode, and the client → RawChunk bridge → stateful
-  * streaming framer — the byte-level contract end-to-end over a real
-  * TCP connection. */
+  * feeds the client → `RtcmFraming.Framer` (in the source's reader
+  * threads, as bytes arrive) → stateless decode — the byte-level
+  * contract end-to-end over a real TCP connection. */
 class NtripClientSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -102,6 +101,7 @@ class NtripClientSpec extends AnyFunSuite {
   }
 
   test("DataSourceV2 micro-batch source: live caster → readStream → framer") {
+    import graft.etl.RtcmPipeline
     import org.apache.spark.sql.streaming.OutputMode
     import spark.implicits._
     val frames = Map(
@@ -116,17 +116,18 @@ class NtripClientSpec extends AnyFunSuite {
         .option("mountpoints", "MNT0,MNT1")
         .load()
         .as[RawChunk]
-      val q = RtcmStreaming.frameStream(chunks)
+      val q = chunks
         .writeStream.format("memory").queryName("ntrip_dsv2_out")
         .outputMode(OutputMode.Append).start()
       try {
+        // the batch framer over the landed chunks finds their frames
+        def framed = RtcmPipeline.frameChunks(spark.table("ntrip_dsv2_out").as[RawChunk])
         val deadline = System.currentTimeMillis() + 30000
-        def landed(): Long = spark.table("ntrip_dsv2_out").count()
-        while (landed() < 60 && System.currentTimeMillis() < deadline) {
+        while (framed.count() < 60 && System.currentTimeMillis() < deadline) {
           Thread.sleep(200)
           q.processAllAvailable()
         }
-        val got = spark.table("ntrip_dsv2_out")
+        val got = framed
           .selectExpr("mountPoint", "frame").collect()
           .map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq)
           .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -252,12 +253,7 @@ class NtripClientSpec extends AnyFunSuite {
     } finally server.close()
   }
 
-  test("chunked live stream → client → RawChunk bridge → streaming framer") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
+  test("chunked live stream → client → Framer: whole frames") {
     val frames = SyntheticRtcm.framesFor("MNT0", 100, 40, 42L).map(_._2)
     val server = new ServerSocket(0)
     try {
@@ -268,26 +264,17 @@ class NtripClientSpec extends AnyFunSuite {
       val client = new NtripClient("127.0.0.1", server.getLocalPort)
       client.openStream("MNT0", user = Some("u"), passwd = Some("p"))
       assert(client.chunked, client.responseHeader.mkString("|"))
-      var micros = 1700000000000000L
-      val chunks = NtripClient.drain(client, "MNT0",
-        () => { micros += 1000; micros }).toVector
+      val reads = Iterator.continually(client.readChunk()).takeWhile(_.isDefined).map(_.get).toVector
       client.close()
-      assert(chunks.map(_.data.length).sum == frames.map(_.length).sum)
+      assert(reads.map(_.length).sum == frames.map(_.length).sum)
 
-      val input = MemoryStream[RawChunk]
-      val q = RtcmStreaming.frameStream(input.toDS())
-        .writeStream.format("memory").queryName("ntrip_live_out")
-        .outputMode(OutputMode.Append).start()
-      try {
-        // two batches: state must carry a partial frame across
-        chunks.grouped(math.max(1, chunks.size / 2)).foreach { part =>
-          input.addData(part); q.processAllAvailable()
-        }
-        val got = spark.table("ntrip_live_out")
-          .selectExpr("frame").as[Array[Byte]].collect().map(_.toSeq).toSet
-        assert(got == frames.map(_.toSeq).toSet)
-        assert(got.size == 40)
-      } finally q.stop()
+      // the framer carries each partial frame to the read that ends it
+      val framer = new RtcmFraming.Framer
+      val chunks = reads.flatMap(framer.push)
+      assert(chunks.size < reads.size)
+      assert(chunks.flatMap(RtcmFraming.splitPacked).map(_.toSeq) == frames.map(_.toSeq))
+      framer.reset()
+      assert(framer.counts == RtcmFraming.Counts(40L, 0L, 0L, 0L))
     } finally server.close()
   }
 
@@ -510,6 +497,7 @@ class NtripClientSpec extends AnyFunSuite {
         val m = metrics
         assert(m("MNT0.frames") == expected.size.toString, m)
         assert(m("MNT0.skippedBytes") == skipped.toString, m)
+        assert(m("MNT0.truncatedBytes") == "0", m)
         assert(m("MNT0.crcRejects") == crcRejects.toString, m)
         assert(m("MNT0.reconnects") == "1", m)
         assert(m("MNT0.lastReconnectCause").matches("java\\.[\\w.]+Exception: .+"), m)
@@ -630,7 +618,7 @@ class NtripClientSpec extends AnyFunSuite {
     } finally server.close()
   }
 
-  test("decodeStream keeps the stateful framer for any input that is not the NTRIP source alone") {
+  test("decodeStream is one stateless DecodeFrames plan for every input") {
     import graft.plans.DecodeFrames
     import org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -638,14 +626,17 @@ class NtripClientSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // planning only: no query starts, so the source never connects
     val ntrip = ntripChunks(1, "MNT0")
-    def stateful(ds: org.apache.spark.sql.Dataset[graft.etl.DecodedFrame]): Boolean =
-      ds.queryExecution.analyzed.exists(_.isInstanceOf[FlatMapGroupsWithState])
-    val live = RtcmStreaming.decodeStream(ntrip)
-    assert(!stateful(live))
-    assert(live.queryExecution.analyzed.exists(_.isInstanceOf[DecodeFrames]))
-    assert(!stateful(RtcmStreaming.decodeStream(ntrip.union(ntripChunks(1, "MNT1")))))
-    assert(stateful(RtcmStreaming.decodeStream(ntrip.union(MemoryStream[RawChunk].toDS()))))
-    assert(stateful(RtcmStreaming.decodeStream(MemoryStream[RawChunk].toDS())))
-    assert(stateful(RtcmStreaming.decodeStream(ntrip.map(c => c.copy(data = c.data.drop(1))))))
+    val logDir = java.nio.file.Files.createTempDirectory("graft-durable-plan").toString
+    val inputs = Map(
+      "NTRIP source" -> ntrip,
+      "union of sources" -> ntrip.union(ntripChunks(1, "MNT1")),
+      "MemoryStream" -> MemoryStream[RawChunk].toDS(),
+      "map over the source" -> ntrip.map(c => c.copy(data = c.data.drop(1))),
+      "durable-log replay" -> NtripDurableLog.readStream(spark, logDir))
+    inputs.foreach { case (name, chunks) =>
+      val plan = RtcmStreaming.decodeStream(chunks).queryExecution.analyzed
+      assert(plan.exists(_.isInstanceOf[DecodeFrames]), name)
+      assert(!plan.exists(_.isInstanceOf[FlatMapGroupsWithState]), name)
+    }
   }
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{lit, timestamp_micros}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** End-to-end streaming landing: chunk stream → stateful framing →
-  * decode → foreachBatch parquet sink (packages + constellation-
+/** End-to-end streaming landing: stream of framed chunks → decode →
+  * foreachBatch parquet sink (packages + constellation-
   * partitioned observations + coordinate log), across several
   * micro-batches with checkpointing.
   */
@@ -20,11 +20,12 @@ class SinkSpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
 
     val corpus = SyntheticRtcm.corpus(2, 64)
+    val framed = StreamingReplay.framed(corpus)
     val input = MemoryStream[RawChunk]
     val q = RtcmStreaming.startParquetSink(
       RtcmStreaming.decodeStream(input.toDS()), out, ckpt)
     try {
-      corpus.grouped(corpus.size / 3 + 1).foreach { part =>
+      framed.grouped(framed.size / 3 + 1).foreach { part =>
         input.addData(part)
         q.processAllAvailable()
       }
@@ -88,11 +89,12 @@ class SinkSpec extends AnyFunSuite {
       }
     }
     spark.sparkContext.addSparkListener(listener)
+    val framed = StreamingReplay.framed(corpus)
     val input = MemoryStream[RawChunk]
     val q = RtcmStreaming.startJdbcSink(
       RtcmStreaming.decodeStream(input.toDS()), new RecordingJdbc.Factory, ckpt)
     try {
-      corpus.grouped(corpus.size / 2 + 1).foreach { part =>
+      framed.grouped(framed.size / 2 + 1).foreach { part =>
         input.addData(part)
         q.processAllAvailable()
       }
