@@ -155,26 +155,23 @@ object Sinks {
   }
 
   /** Appends one partition's frames (rows with the `LandedFrameColumns`)
-    * with single-row prepared INSERTs. Frames go in groups of `BatchRows`: a
-    * group's package rows are executed first, then its observation rows,
-    * so an observation row never executes before the package row it
-    * references, and every `executeBatch` carries at most `BatchRows`
-    * rows. Binds the value types Spark's `Row` conversion yields (boxed
-    * numbers, String, `java.sql.Timestamp`, null for null), in
+    * with single-row prepared INSERTs, binding each frame while its row
+    * is current (the row iterator reuses its row, so nothing is kept or
+    * copied). Package and observation rows go into two JDBC batches of
+    * at most `BatchRows` rows each. The pending package batch is executed
+    * before every observation `executeBatch`, and first at the end, so an
+    * observation row never executes before the package row it
+    * references. Binds the value types Spark's `Row` conversion yields
+    * (boxed numbers, String, `java.sql.Timestamp`, null for null), in
     * `PackagesColumns` / `ObservationsColumns` order; a frame's
     * observations share their epoch, so consecutive equal epochs bind
-    * one `Timestamp`. Returns the partition's latest ARP fix per
-    * mountpoint. */
+    * one `Timestamp`, and strings come from a [[StringCache]]. Returns
+    * the partition's latest ARP fix per mountpoint. */
   private def appendPartition(rows: Iterator[InternalRow], fields: FrameFields,
                               factory: ConnectionFactory): Iterator[DecodedFrame] = {
     if (!rows.hasNext) return Iterator.empty
     def ts(micros: Long): java.sql.Timestamp = DateTimeUtils.toJavaTimestamp(micros)
-    val strings = new java.util.HashMap[UTF8String, String]()
-    def str(u: UTF8String): String = {
-      var s = strings.get(u)
-      if (s == null) { s = u.toString; strings.put(u.clone(), s) }
-      s
-    }
+    val strings = new StringCache
     val Seq(fId, fMount, fMicros, fType, fSize, fSats, fEpoch, fConstellation, fObs, fCoord) =
       fields.top
     val Seq(oEpoch, oSat, oSignal, oCode, oPhase, oDoppler, oSnr, oLock) = fields.obs
@@ -192,60 +189,89 @@ object Sinks {
       try {
         val obs = conn.prepareStatement(insertSql("observations", ObservationsColumns, 1))
         try {
+          var pendingPk = 0
           var pendingObs = 0
-          // the row iterator reuses its row: buffer copies
-          rows.map(_.copy()).grouped(BatchRows).foreach { group =>
-            group.foreach { f =>
-              pk.setObject(1, Long.box(f.getLong(fId)))
-              pk.setObject(2, ts(f.getLong(fMicros)))
-              pk.setObject(3, str(f.getUTF8String(fMount)))
-              pk.setObject(4, if (f.isNullAt(fEpoch)) null else ts(f.getLong(fEpoch)))
-              pk.setObject(5, Int.box(f.getInt(fType)))
-              pk.setObject(6, Int.box(f.getInt(fSize)))
-              pk.setObject(7, if (f.isNullAt(fSats)) null else Int.box(f.getInt(fSats)))
-              pk.addBatch()
+          def executePackages(): Unit = if (pendingPk > 0) { pk.executeBatch(); pendingPk = 0 }
+          def executeObservations(): Unit = if (pendingObs > 0) {
+            executePackages()
+            obs.executeBatch()
+            pendingObs = 0
+          }
+          rows.foreach { f =>
+            val id = Long.box(f.getLong(fId))
+            val mount = strings(f.getUTF8String(fMount))
+            pk.setObject(1, id)
+            pk.setObject(2, ts(f.getLong(fMicros)))
+            pk.setObject(3, mount)
+            pk.setObject(4, if (f.isNullAt(fEpoch)) null else ts(f.getLong(fEpoch)))
+            pk.setObject(5, Int.box(f.getInt(fType)))
+            pk.setObject(6, Int.box(f.getInt(fSize)))
+            pk.setObject(7, if (f.isNullAt(fSats)) null else Int.box(f.getInt(fSats)))
+            pk.addBatch()
+            pendingPk += 1
+            if (pendingPk >= BatchRows) executePackages()
+            val constellation = strings(f.getUTF8String(fConstellation))
+            val cells = f.getArray(fObs)
+            var i = 0
+            while (i < cells.numElements()) {
+              val o = cells.getStruct(i, fields.obsFields)
+              obs.setObject(1, id)
+              obs.setObject(2, mount)
+              obs.setObject(3, constellation)
+              obs.setObject(4, epochTs(o.getLong(oEpoch)))
+              obs.setObject(5, strings(o.getUTF8String(oSat)))
+              obs.setObject(6, strings(o.getUTF8String(oSignal)))
+              obs.setObject(7, Double.box(o.getDouble(oCode)))
+              obs.setObject(8, Double.box(o.getDouble(oPhase)))
+              obs.setObject(9, Double.box(o.getDouble(oDoppler)))
+              obs.setObject(10, Double.box(o.getDouble(oSnr)))
+              obs.setObject(11, Int.box(o.getInt(oLock)))
+              obs.addBatch()
+              pendingObs += 1
+              if (pendingObs >= BatchRows) executeObservations()
+              i += 1
             }
-            pk.executeBatch()
-            group.foreach { f =>
-              val id = Long.box(f.getLong(fId))
-              val mount = str(f.getUTF8String(fMount))
-              val constellation = str(f.getUTF8String(fConstellation))
-              val cells = f.getArray(fObs)
-              var i = 0
-              while (i < cells.numElements()) {
-                val o = cells.getStruct(i, fields.obsFields)
-                obs.setObject(1, id)
-                obs.setObject(2, mount)
-                obs.setObject(3, constellation)
-                obs.setObject(4, epochTs(o.getLong(oEpoch)))
-                obs.setObject(5, str(o.getUTF8String(oSat)))
-                obs.setObject(6, str(o.getUTF8String(oSignal)))
-                obs.setObject(7, Double.box(o.getDouble(oCode)))
-                obs.setObject(8, Double.box(o.getDouble(oPhase)))
-                obs.setObject(9, Double.box(o.getDouble(oDoppler)))
-                obs.setObject(10, Double.box(o.getDouble(oSnr)))
-                obs.setObject(11, Int.box(o.getInt(oLock)))
-                obs.addBatch()
-                pendingObs += 1
-                if (pendingObs >= BatchRows) { obs.executeBatch(); pendingObs = 0 }
-                i += 1
-              }
-              if (!f.isNullAt(fCoord)) {
-                // only the fields laterFix and upsertCoordinates read
-                val c = f.getStruct(fCoord, fields.coordFields)
-                val fix = DecodedFrame(f.getLong(fId), mount, f.getLong(fMicros), f.getInt(fType),
-                  f.getInt(fSize), None, None, constellation, Nil,
-                  Some(CoordOut(c.getDouble(cX), c.getDouble(cY), c.getDouble(cZ),
-                    if (c.isNullAt(cHeight)) None else Some(c.getDouble(cHeight)))), None)
-                latest(mount) = latest.get(mount).fold(fix)(RtcmPipeline.laterFix(fix, _))
-              }
+            if (!f.isNullAt(fCoord)) {
+              // only the fields laterFix and upsertCoordinates read
+              val c = f.getStruct(fCoord, fields.coordFields)
+              val fix = DecodedFrame(f.getLong(fId), mount, f.getLong(fMicros), f.getInt(fType),
+                f.getInt(fSize), None, None, constellation, Nil,
+                Some(CoordOut(c.getDouble(cX), c.getDouble(cY), c.getDouble(cZ),
+                  if (c.isNullAt(cHeight)) None else Some(c.getDouble(cHeight)))), None)
+              latest(mount) = latest.get(mount).fold(fix)(RtcmPipeline.laterFix(fix, _))
             }
           }
-          if (pendingObs > 0) obs.executeBatch()
+          executePackages()
+          executeObservations()
         } finally obs.close()
       } finally pk.close()
     } finally conn.close()
     latest.valuesIterator
+  }
+
+  /** The `String` of each distinct `UTF8String` a partition binds
+    * (mountpoints, constellations, satellite ids, signal names: a few
+    * dozen values over millions of cells). A string of at most 7 bytes,
+    * as all of these are, is keyed by its bytes and length packed into
+    * one `Long` (`getPrefix` holds the first bytes, the length fills the
+    * low byte that a string this short leaves zero), so a lookup neither
+    * hashes nor compares the bytes; a longer one is keyed by a copy of
+    * itself. */
+  private final class StringCache {
+    private val short = mutable.LongMap.empty[String]
+    private val long = new java.util.HashMap[UTF8String, String]()
+
+    def apply(u: UTF8String): String =
+      if (u.numBytes <= 7) {
+        val key = u.getPrefix | u.numBytes
+        var s = short.getOrNull(key)
+        if (s == null) { s = u.toString; short.update(key, s) }
+        s
+      } else {
+        var s = long.get(u)
+        if (s == null) { s = u.toString; long.put(u.clone(), s) }
+        s
+      }
   }
 
   /** Driver-side upsert of the latest fix per mountpoint — the

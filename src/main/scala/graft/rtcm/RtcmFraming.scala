@@ -15,12 +15,16 @@ package graft.rtcm
   * bounded (maxBuffer) so a connection's framing state can't grow
   * without limit at scale (SURVEY.md §7 risk 6).
   *
-  * Pure function of (state, chunk) → (state', frames), so one fold
-  * serves every front end. Streams are framed where their bytes are
-  * read, one [[Framer]] per connection: the NTRIP source's reader
-  * threads, `NtripDurableLog.drain` and the replay harness
+  * One core ([[scan]]) serves both front ends. It checks each
+  * candidate's CRC where it lies, in the buffer, and only records where
+  * the valid frames start; nothing is copied until a frame is known
+  * good. [[feed]] is the pure function of (state, chunk) →
+  * (state', frames) that `RtcmPipeline.frameChunks` folds over batch
+  * rows. Streams are framed where their bytes are read, one [[Framer]]
+  * per connection, which runs the same core in place over one growable
+  * residual buffer: the NTRIP source's reader threads,
+  * `NtripDurableLog.drain` and the replay harness
   * (`StreamingReplay.run`) all hand Spark chunks of whole frames.
-  * `RtcmPipeline.frameChunks` folds it over batch rows.
   */
 object RtcmFraming {
   final val Preamble: Byte = 0xD3.toByte
@@ -50,7 +54,7 @@ object RtcmFraming {
 
   /** [[feed]], also counting CRC rejects and `maxBuffer` truncation. */
   def feedCounted(state: State, chunk: Array[Byte], maxBuffer: Int = DefaultMaxBuffer): Fed = {
-    var buf =
+    val buf =
       if (state.buffer.isEmpty) chunk
       else {
         val b = new Array[Byte](state.buffer.length + chunk.length)
@@ -58,44 +62,82 @@ object RtcmFraming {
         System.arraycopy(chunk, 0, b, state.buffer.length, chunk.length)
         b
       }
-    val frames = Vector.newBuilder[Array[Byte]]
-    var start = 0
+    val found = new Found
+    val start = scan(buf, buf.length, found)
+    val frames = Vector.tabulate(found.count) { i =>
+      val s = found.starts(i)
+      java.util.Arrays.copyOfRange(buf, s, s + frameLength(buf, s))
+    }
+    val keep = residualStart(start, buf.length, maxBuffer)
+    val residual = if (keep == 0) buf else java.util.Arrays.copyOfRange(buf, keep, buf.length)
+    Fed(State(residual), frames, found.crcRejects, keep - start)
+  }
+
+  /** The length of the frame whose preamble is at `bytes(start)`, from
+    * its 10-bit length header. */
+  private def frameLength(bytes: Array[Byte], start: Int): Int =
+    (((bytes(start + 1) & 0x03) << 8) | (bytes(start + 2) & 0xFF)) + 6
+
+  /** Where the carried residual starts: at `start`, the first byte no
+    * frame consumed, unless the `maxBuffer` bound keeps only the newest
+    * bytes of `len`. */
+  private def residualStart(start: Int, len: Int, maxBuffer: Int): Int =
+    math.max(start, len - maxBuffer)
+
+  /** The CRC-valid frames one [[scan]] found, by start offset, and its
+    * CRC rejects. */
+  private final class Found {
+    var starts = new Array[Int](64)
+    var count = 0
+    var bytes = 0
     var crcRejects = 0
 
-    def scanPreamble(): Unit = {
-      while (start < buf.length && buf(start) != Preamble) start += 1
+    def clear(): Unit = { count = 0; bytes = 0; crcRejects = 0 }
+
+    def add(start: Int, len: Int): Unit = {
+      if (count == starts.length) starts = java.util.Arrays.copyOf(starts, count * 2)
+      starts(count) = start
+      count += 1
+      bytes += len
     }
 
-    var done = false
-    while (!done) {
-      scanPreamble()
-      if (buf.length - start < 6) {
-        done = true // not enough bytes for header+CRC
+    /** The found frames of `buf`, copied back to back into one array. */
+    def joined(buf: Array[Byte]): Array[Byte] = {
+      val out = new Array[Byte](bytes)
+      var at = 0
+      var i = 0
+      while (i < count) {
+        val len = frameLength(buf, starts(i))
+        System.arraycopy(buf, starts(i), out, at, len)
+        at += len
+        i += 1
+      }
+      out
+    }
+  }
+
+  /** The framing core: scans `buf[0, len)` for the preamble
+    * byte-aligned, waits for a whole candidate frame, and checks its CRC
+    * where it lies. A valid frame is recorded in `found` and skipped
+    * whole; a mismatch drops ONE byte and realigns. Returns the offset
+    * of the first byte not consumed, where an unfinished candidate (or
+    * fewer than 6 bytes) starts. */
+  private def scan(buf: Array[Byte], len: Int, found: Found): Int = {
+    var start = 0
+    while (true) {
+      while (start < len && buf(start) != Preamble) start += 1
+      if (len - start < 6) return start // not enough bytes for header+CRC
+      val frameLen = frameLength(buf, start)
+      if (len - start < frameLen) return start // incomplete frame: wait for more bytes
+      if (Crc24q.frameValid(buf, start, start + frameLen)) {
+        found.add(start, frameLen)
+        start += frameLen
       } else {
-        val payloadLen = ((buf(start + 1) & 0x03) << 8) | (buf(start + 2) & 0xFF)
-        val frameLen = payloadLen + 6
-        if (buf.length - start < frameLen) {
-          done = true // incomplete frame: wait for more bytes
-        } else {
-          if (Crc24q.frameValid(buf, start, start + frameLen)) {
-            frames += java.util.Arrays.copyOfRange(buf, start, start + frameLen)
-            start += frameLen
-          } else {
-            start += 1 // CRC mismatch: drop one byte, realign
-            crcRejects += 1
-          }
-        }
+        start += 1 // CRC mismatch: drop one byte, realign
+        found.crcRejects += 1
       }
     }
-    var residual =
-      if (start == 0) buf
-      else java.util.Arrays.copyOfRange(buf, start, buf.length)
-    // Bound the carried state: a hostile/garbled stream must not grow
-    // it without limit. Keep the newest bytes.
-    val truncated = math.max(0, residual.length - maxBuffer)
-    if (truncated > 0)
-      residual = java.util.Arrays.copyOfRange(residual, truncated, residual.length)
-    Fed(State(residual), frames.result(), crcRejects, truncated)
+    start
   }
 
   /** What a [[Framer]] has kept and dropped so far: `frames` emitted,
@@ -106,35 +148,42 @@ object RtcmFraming {
   final case class Counts(frames: Long, crcRejects: Long, skippedBytes: Long,
                           truncatedBytes: Long)
 
-  /** One connection's framing: [[feedCounted]] folded over its reads.
-    * [[push]] returns the CRC-valid frames a read completed, joined back
-    * to back into one chunk, so a chunk of whole frames carries the
-    * receive time of the read that completed them. One thread pushes;
-    * [[counts]] may be read from any. */
+  /** One connection's framing: [[feedCounted]]'s core run over its
+    * reads, in place. [[push]] appends a read to one growable residual
+    * buffer, checks each candidate's CRC where it lies, and copies the
+    * CRC-valid frames the read completed once, back to back, into the
+    * chunk it returns, so a chunk of whole frames carries the receive
+    * time of the read that completed them. The residual (an unfinished
+    * candidate, shorter than the longest frame, 1029 bytes, unless
+    * `maxBuffer` is smaller) moves to the front of the buffer. One
+    * thread pushes; [[counts]] may be read from any. */
   final class Framer(maxBuffer: Int = DefaultMaxBuffer) {
-    private var state = emptyState
+    private var buf = new Array[Byte](8192)
+    private var len = 0
+    private val found = new Found
     @volatile private var counted = Counts(0L, 0L, 0L, 0L)
 
     def counts: Counts = counted
 
     /** The whole frames `read` completed, back to back, or None. */
-    def push(read: Array[Byte]): Option[Array[Byte]] = {
-      val fed = feedCounted(state, read, maxBuffer)
-      val frames = fed.frames
-      val frameBytes = frames.map(_.length.toLong).sum
+    def push(read: Array[Byte]): Option[Array[Byte]] = push(read, read.length)
+
+    /** The whole frames `read[0, n)` completed, back to back, or None. */
+    def push(read: Array[Byte], n: Int): Option[Array[Byte]] = {
+      if (buf.length - len < n) buf = java.util.Arrays.copyOf(buf, math.max(len + n, buf.length * 2))
+      System.arraycopy(read, 0, buf, len, n)
+      val before = len
+      len += n
+      found.clear()
+      val start = scan(buf, len, found)
+      val chunk = if (found.count == 0) None else Some(found.joined(buf))
+      val keep = residualStart(start, len, maxBuffer)
+      System.arraycopy(buf, keep, buf, 0, len - keep)
+      len -= keep
       val c = counted
-      counted = Counts(c.frames + frames.size, c.crcRejects + fed.crcRejects,
-        c.skippedBytes + state.size + read.length - fed.state.size - frameBytes,
-        c.truncatedBytes + fed.truncatedBytes)
-      state = fed.state
-      if (frames.isEmpty) None
-      else if (frames.size == 1) Some(frames.head)
-      else {
-        val all = new Array[Byte](frameBytes.toInt)
-        var at = 0
-        frames.foreach { f => System.arraycopy(f, 0, all, at, f.length); at += f.length }
-        Some(all)
-      }
+      counted = Counts(c.frames + found.count, c.crcRejects + found.crcRejects,
+        c.skippedBytes + before + n - len - found.bytes, c.truncatedBytes + keep - start)
+      chunk
     }
 
     /** Drop the unfinished residual, counting it as skipped: the
@@ -142,8 +191,8 @@ object RtcmFraming {
       * the next one. */
     def reset(): Unit = {
       val c = counted
-      counted = c.copy(skippedBytes = c.skippedBytes + state.size)
-      state = emptyState
+      counted = c.copy(skippedBytes = c.skippedBytes + len)
+      len = 0
     }
   }
 
@@ -178,7 +227,7 @@ object RtcmFraming {
     if (packed.length - pos < 6 || packed(pos) != Preamble)
       throw new IllegalArgumentException(
         s"requirement failed: no whole RTCM frame at byte $pos of a ${packed.length}-byte packed chunk")
-    val end = pos + (((packed(pos + 1) & 0x03) << 8) | (packed(pos + 2) & 0xFF)) + 6
+    val end = pos + frameLength(packed, pos)
     if (end > packed.length)
       throw new IllegalArgumentException(
         s"requirement failed: RTCM frame at byte $pos runs to byte $end, past the ${packed.length}-byte packed chunk")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.io.{BufferedInputStream, InputStream, OutputStream}
+import java.io.{EOFException, IOException, InputStream, OutputStream}
 import java.net.{InetSocketAddress, Socket}
 import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.time.{ZoneOffset, ZonedDateTime}
@@ -38,11 +38,24 @@ import javax.net.ssl.SSLContext
   *    self-signed localhost caster;
   *  - response = header lines to the first blank line; status must be
   *    200 (ntripclient.py:262-332);
-  *  - `Transfer-Encoding: chunked` switches body reads to
-  *    hex-length-line + exactly length+2 bytes (ntripclient.py:295-300,
-  *    437-455); otherwise raw bounded reads (ntripclient.py:500-558);
+  *  - `Transfer-Encoding: chunked` (ntripclient.py:295-300,437-455)
+  *    is undone by [[read]]: the payload of the HTTP chunks, without
+  *    their size lines and CRLFs; otherwise the body is read raw
+  *    (ntripclient.py:500-558);
   *  - sourcetable = text lines until `ENDSOURCETABLE`
   *    (ntripclient.py:379-401).
+  *
+  * A [[read]] returns the body bytes the connection already holds, up
+  * to the caller's array ([[NtripClient.ReadSize]], 4096 bytes, in the
+  * NTRIP source and the durable log): it blocks only until it has one
+  * byte, and it reads across HTTP chunk boundaries, so a backlog comes
+  * in full arrays whatever chunk sizes the caster writes, and a live
+  * frame is returned as soon as it arrives. Chunk size lines are
+  * untrusted input: a chunk of any size is read in bounded pieces into
+  * the caller's array, nothing is allocated by a caster-supplied
+  * length, and a size line that is not hex, or that is longer than 1024
+  * characters or over 2^31 − 3, throws an `IOException` naming the
+  * line, which ends the connection like any other read error.
   *
   * Blocking JVM sockets on purpose: one caster connection is a
   * single sequential byte stream; concurrency comes from running one
@@ -50,7 +63,7 @@ import javax.net.ssl.SSLContext
   * source's reader thread), not from async IO. Framing/CRC happens in
   * the caller, one `RtcmFraming.Framer` per connection (`NtripSource`'s
   * reader threads, `NtripDurableLog.drain`), decode in the Spark
-  * pipeline — this class only yields raw body chunks.
+  * pipeline — this class only yields raw body bytes.
   */
 final class NtripClient(
     host: String,
@@ -62,7 +75,7 @@ final class NtripClient(
     sslContext: Option[SSLContext] = None) extends AutoCloseable {
 
   private var socket: Socket = _
-  private var in: BufferedInputStream = _
+  private var in: ResponseReader = _
   private var out: OutputStream = _
 
   /** Response header lines of the last request. */
@@ -87,7 +100,7 @@ final class NtripClient(
     }
     socket.connect(new InetSocketAddress(host, port), connectTimeoutMs)
     socket.setSoTimeout(readTimeoutMs)
-    in = new BufferedInputStream(socket.getInputStream)
+    in = new ResponseReader(socket.getInputStream)
     out = socket.getOutputStream
   }
 
@@ -153,20 +166,8 @@ final class NtripClient(
     }
   }
 
-  /** One ISO-8859-1 line (up to and excluding CRLF/LF); null at EOF. */
-  private def readLine(): String = {
-    val sb = new StringBuilder
-    var b = in.read()
-    if (b < 0) return null
-    while (b >= 0 && b != '\n') {
-      if (b != '\r') sb.append(b.toChar)
-      b = in.read()
-    }
-    sb.toString
-  }
-
   private def readHeaderAndStatus(): Unit = {
-    val lines = Iterator.continually(readLine())
+    val lines = Iterator.continually(in.readLine())
       .takeWhile(l => l != null && l.nonEmpty).toSeq
     responseHeader = lines
     chunked = lines.exists(_.equalsIgnoreCase("Transfer-Encoding: chunked"))
@@ -195,7 +196,7 @@ final class NtripClient(
     out.write(requestHeader("/", user, passwd, ntripVersion = 2, nmeaGga = None))
     out.flush()
     readHeaderAndStatus()
-    val body = Iterator.continually(readLine())
+    val body = Iterator.continually(in.readLine())
       .takeWhile(l => l != null)
       .span(l => l != "ENDSOURCETABLE") match {
         case (pre, post) => (pre ++ post.take(1)).toSeq
@@ -204,41 +205,134 @@ final class NtripClient(
     body
   }
 
-  private def readExactly(n: Int): Array[Byte] = {
-    val buf = new Array[Byte](n)
-    var off = 0
-    while (off < n) {
-      val r = in.read(buf, off, n - off)
-      if (r < 0) throw new java.io.EOFException(s"stream closed at $off/$n")
-      off += r
-    }
-    buf
-  }
-
-  /** Next body chunk: a full chunked-transfer block (hex length line,
-    * then length+2 bytes, CRLF stripped), or a bounded raw read.
-    * None = orderly end of stream (terminal 0-length chunk or EOF). */
-  def readChunk(rawBufSize: Int = 4096): Option[Array[Byte]] = {
-    if (chunked) {
-      var lenLine = readLine()
-      while (lenLine != null && lenLine.trim.isEmpty) lenLine = readLine()
-      if (lenLine == null) return None
-      // RFC 9112 §7.1: the length may carry chunk extensions (";ext")
-      val len = Integer.parseInt(lenLine.trim.takeWhile(_ != ';').trim, 16)
-      if (len == 0) { readLine(); None } // trailing CRLF after last chunk
-      else {
-        val body = readExactly(len + 2) // payload + CRLF (ntripclient.py:449)
-        Some(java.util.Arrays.copyOfRange(body, 0, len))
-      }
-    } else {
-      val buf = new Array[Byte](rawBufSize)
-      val r = in.read(buf)
-      if (r < 0) None
-      else Some(java.util.Arrays.copyOfRange(buf, 0, r))
-    }
-  }
+  /** Reads the next body bytes into `into`: at least one, at most
+    * `into.length`, and only as many as arrive without waiting once one
+    * has (see the class doc). Returns their number, or -1 at the orderly
+    * end of the stream (a terminal 0-length chunk, or EOF where a chunk
+    * could start). A connection that ends inside a chunk throws
+    * `EOFException`; a bad chunk size line throws `IOException`. */
+  def read(into: Array[Byte]): Int = in.read(into, chunked)
 
   override def close(): Unit = {
     if (socket != null && !socket.isClosed) socket.close()
+  }
+}
+
+object NtripClient {
+  /** Body bytes per read in the NTRIP source and the durable log. */
+  final val ReadSize = 4096
+  /** The largest HTTP chunk size accepted, 2^31 − 3: a chunk's payload
+    * and its CRLF still count in an `Int`. A larger size line is noise. */
+  private[streaming] final val MaxChunkSize = Int.MaxValue - 2
+  /** The longest chunk size line accepted, extensions included. */
+  private[streaming] final val MaxSizeLine = 1024
+}
+
+/** One connection's response bytes through one buffer: header lines
+  * (`readLine`), then the body (`read`), de-chunked or raw. Not
+  * synchronized: one thread reads a connection. */
+private[streaming] final class ResponseReader(in: InputStream) {
+  import NtripClient.{MaxChunkSize, MaxSizeLine}
+
+  private val buf = new Array[Byte](8192)
+  private var pos = 0
+  private var lim = 0
+  /** Payload bytes left in the current HTTP chunk. */
+  private var chunkLeft = 0
+  /** The terminal chunk (or EOF where a chunk could start) was read. */
+  private var ended = false
+
+  /** Refills the empty buffer with one read of `in`, which blocks until
+    * a byte arrives; false at EOF. */
+  private def fill(): Boolean = {
+    pos = 0
+    lim = 0
+    val r = in.read(buf, 0, buf.length)
+    if (r > 0) lim = r
+    r >= 0
+  }
+
+  /** One ISO-8859-1 line (up to and excluding CRLF/LF, CRs dropped);
+    * null at EOF before any byte. A line longer than `max` characters
+    * throws `IOException`. */
+  def readLine(max: Int = Int.MaxValue): String = {
+    val sb = new java.lang.StringBuilder
+    var any = false
+    while (true) {
+      if (pos == lim && !fill()) return if (any) sb.toString else null
+      any = true
+      val b = buf(pos)
+      pos += 1
+      if (b == '\n') return sb.toString
+      if (b != '\r') {
+        if (sb.length >= max)
+          throw new IOException(s"line longer than $max characters: \"${sb.substring(0, 64)}...\"")
+        sb.append((b & 0xFF).toChar)
+      }
+    }
+    null
+  }
+
+  /** The next body bytes into `into` (see `NtripClient.read`). */
+  def read(into: Array[Byte], chunked: Boolean): Int =
+    if (!chunked) {
+      if (pos < lim) {
+        val k = math.min(into.length, lim - pos)
+        System.arraycopy(buf, pos, into, 0, k)
+        pos += k
+        k
+      } else in.read(into, 0, into.length)
+    } else {
+      var n = 0
+      while (n < into.length && !ended) {
+        if (chunkLeft == 0) {
+          // a size line that has not fully arrived is left for the next read
+          if (n > 0 && !sizeLineBuffered) return n
+          nextChunk()
+        } else {
+          if (pos == lim) {
+            if (n > 0 && in.available() <= 0) return n
+            if (!fill())
+              throw new EOFException(s"stream closed with $chunkLeft bytes of an HTTP chunk unread")
+          }
+          val k = math.min(math.min(into.length - n, chunkLeft), lim - pos)
+          System.arraycopy(buf, pos, into, n, k)
+          pos += k
+          n += k
+          chunkLeft -= k
+        }
+      }
+      if (n == 0 && ended) -1 else n
+    }
+
+  /** Whether the buffer holds the whole next non-blank line. */
+  private def sizeLineBuffered: Boolean = {
+    var blank = true
+    var i = pos
+    while (i < lim) {
+      val b = buf(i) & 0xFF
+      if (b == '\n') { if (!blank) return true }
+      else if (b > ' ') blank = false
+      i += 1
+    }
+    false
+  }
+
+  /** Reads the next chunk's size line, past the CRLF that ends the
+    * previous chunk's payload. The terminal 0-length chunk ends the
+    * body; its trailer is not read. */
+  private def nextChunk(): Unit = {
+    var line = readLine(MaxSizeLine)
+    while (line != null && line.trim.isEmpty) line = readLine(MaxSizeLine)
+    if (line == null) ended = true
+    else {
+      // RFC 9112 §7.1: the size may carry chunk extensions (";ext")
+      val hex = line.takeWhile(_ != ';').trim
+      if (hex.isEmpty || hex.length > 15 || !hex.forall(Character.digit(_, 16) >= 0) ||
+        java.lang.Long.parseLong(hex, 16) > MaxChunkSize)
+        throw new IOException(s"bad HTTP chunk size line: \"$line\"")
+      chunkLeft = java.lang.Long.parseLong(hex, 16).toInt
+      if (chunkLeft == 0) ended = true
+    }
   }
 }

@@ -69,16 +69,22 @@ object NtripDurableLog {
     else safe + "x" + Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(mountPoint))
   }
 
+  /** What one [[drain]] wrote and what its framing dropped: `lines`
+    * log lines, and the framer's counts over the connection (its
+    * unfinished residual included in `skippedBytes`). */
+  final case class Drained(lines: Long, framing: RtcmFraming.Counts)
+
   /** Drain the client's open stream into rolled log files under `dir`,
     * one line per read that completed frames. Returns the number of
-    * lines written; `startSeq` continues a previous writer
-    * incarnation's numbering (the writer's own restart story: scan the
-    * directory for the last file's max seq). Blocks until the stream
-    * ends or `maxChunks` lines are written; the unfinished residual is
-    * dropped with the connection. */
+    * lines written and the framing counts, the same ones the NTRIP
+    * source reports per mountpoint; `startSeq` continues a previous
+    * writer incarnation's numbering (the writer's own restart story:
+    * scan the directory for the last file's max seq). Blocks until the
+    * stream ends or `maxChunks` lines are written; the unfinished
+    * residual is dropped with the connection. */
   def drain(client: NtripClient, mountPoint: String, dir: Path,
             nowMicros: () => Long, rollEvery: Int = 256,
-            startSeq: Long = 0L, maxChunks: Long = Long.MaxValue): Long = {
+            startSeq: Long = 0L, maxChunks: Long = Long.MaxValue): Drained = {
     Files.createDirectories(dir)
     val b64 = Base64.getEncoder
     val mp = jsonEscape(mountPoint)
@@ -113,10 +119,11 @@ object NtripDurableLog {
       batch.clear()
       inBatch = 0
     }
-    var chunk = if (seq - startSeq >= maxChunks) None else client.readChunk()
-    while (chunk.isDefined) {
+    val read = new Array[Byte](NtripClient.ReadSize)
+    var n = if (seq - startSeq >= maxChunks) -1 else client.read(read)
+    while (n >= 0) {
       val micros = nowMicros()
-      framer.push(chunk.get).foreach { frames =>
+      framer.push(read, n).foreach { frames =>
         val data = b64.encodeToString(frames)
         batch.append(s"""{"mountPoint":"$mp","receiveMicros":$micros,"seq":$seq,"frames":"$data"}""")
           .append('\n')
@@ -124,10 +131,11 @@ object NtripDurableLog {
         inBatch += 1
         if (inBatch >= rollEvery) flush()
       }
-      chunk = if (seq - startSeq >= maxChunks) None else client.readChunk()
+      n = if (seq - startSeq >= maxChunks) -1 else client.read(read)
     }
     flush()
-    seq - startSeq
+    framer.reset()
+    Drained(seq - startSeq, framer.counts)
   }
 
   /** Max seq already present in `dir` for `mountPoint` + 1 — the

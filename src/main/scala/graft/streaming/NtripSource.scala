@@ -29,24 +29,33 @@ import org.apache.spark.unsafe.types.UTF8String
   * ```
   *
   * One driver-side reader thread per mountpoint drains an NtripClient
-  * (chunked/raw body reads) and frames the bytes as they arrive, as the
-  * reference's reader does (src/ntripclient.py:523-544): it pushes
-  * each connection's reads through an `RtcmFraming.Framer` and buffers
-  * only whole frames. A buffered chunk is the CRC-valid frames that one
-  * read completed, back to back, stamped with that read's receive time;
-  * a read that completes no frame buffers nothing. On reconnect the
-  * unfinished residual is dropped (it could only fail CRC against the
-  * new stream) and framing starts afresh. Because every chunk is whole
-  * frames, `RtcmStreaming.decodeStream` decodes this source with no
-  * streaming state.
+  * and frames the bytes as they arrive, as the reference's reader does
+  * (src/ntripclient.py:523-544): it pushes each connection's reads
+  * through an `RtcmFraming.Framer` and buffers only whole frames. A
+  * read is `NtripClient.read` into one 4096-byte array
+  * (`NtripClient.ReadSize`): the body bytes the socket already holds,
+  * de-chunked, so a backlog arrives in full arrays and a live frame as
+  * soon as it is sent. A buffered chunk is the CRC-valid frames that
+  * one such bounded read completed, back to back, stamped with that
+  * read's receive time; a read that completes no frame buffers nothing.
+  * On reconnect the unfinished residual is dropped (it could only fail
+  * CRC against the new stream) and framing starts afresh. Because every
+  * chunk is whole frames, `RtcmStreaming.decodeStream` decodes this
+  * source with no streaming state.
   *
   * The buffer is BOUNDED (`maxBufferedChunks`; readers block when full,
-  * pushing backpressure to the caster via TCP flow control); offsets
+  * pushing backpressure to the caster via TCP flow control), and so is
+  * each chunk: the frames one read completes end in that read's at most
+  * 4096 bytes, and only the first of them can begin before it, in the
+  * carried residual, which is shorter than the longest frame (1029
+  * bytes). A chunk is therefore at most 4096 + 1028 = 5124 bytes, and
+  * the buffer at most `maxBufferedChunks` × 5124 bytes (about 320 MiB at
+  * the default 65536), whatever HTTP chunk sizes the caster sends. Offsets
   * are the global count of buffered chunks and micro-batches read
   * buffer slices — the same driver-buffered design as Spark's own
   * socket source. A micro-batch is planned as one input partition per
-  * mountpoint present in its slice, each packed into primitive arrays
-  * in arrival order (see [[NtripInputPartition]]). The same delivery
+  * mountpoint present in its slice, each holding that mountpoint's
+  * chunks in arrival order (see [[NtripInputPartition]]). The same delivery
   * caveat applies: a live TCP byte stream is
   * not replayable, so this source is at-least-once across driver
   * restarts (the reference's ingest makes the identical trade; the
@@ -170,22 +179,23 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
     val t = new Thread(() => {
       val count = counters(mount)
       val framer = count.framer
+      val read = new Array[Byte](NtripClient.ReadSize)
       var seq = 0L
       var orderlyEnd = false
       // abnormal errors (caster drop, read timeout) RECONNECT with
       // backoff — the reference client's infinite-retry behavior
       // (src/ingestion.py:119-132); an orderly end of stream (terminal
-      // 0-length chunk / clean EOF → readChunk None) ends the reader
+      // 0-length chunk / clean EOF → read -1) ends the reader
       var backoffMs = 1000L
       while (!stopped.get() && !orderlyEnd) {
         val client = new NtripClient(host, port, tls = tls)
         try {
           client.openStream(mount, user, passwd, nmeaGga = nmeaGga)
           backoffMs = 1000L
-          var chunk = client.readChunk()
-          while (chunk.isDefined && !stopped.get()) {
+          var n = client.read(read)
+          while (n >= 0 && !stopped.get()) {
             val micros = System.currentTimeMillis() * 1000L
-            framer.push(chunk.get).foreach { data =>
+            framer.push(read, n).foreach { data =>
               buffer.synchronized {
                 // bound the buffer: block (and stop draining the socket)
                 // until the query consumes — natural TCP backpressure
@@ -195,9 +205,9 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
               }
               seq += 1
             }
-            chunk = if (stopped.get()) None else client.readChunk()
+            n = if (stopped.get()) -1 else client.read(read)
           }
-          orderlyEnd = chunk.isEmpty && !stopped.get()
+          orderlyEnd = n < 0 && !stopped.get()
         } catch {
           // stop() interrupts the reader; InterruptedException is not NonFatal
           case e if stopped.get() && (NonFatal(e) || e.isInstanceOf[InterruptedException]) =>
@@ -272,7 +282,7 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
       private val mount = UTF8String.fromString(p.mount)
       private var i = -1
       override def next(): Boolean = { i += 1; i < p.size }
-      override def get(): InternalRow = InternalRow(mount, p.micros(i), p.seqs(i), p.bytes(i))
+      override def get(): InternalRow = InternalRow(mount, p.micros(i), p.seqs(i), p.data(i))
       override def close(): Unit = ()
     }
 
@@ -311,46 +321,32 @@ private final class NtripMicroBatchStream(options: CaseInsensitiveStringMap)
   }
 }
 
-/** One mountpoint's chunks of a micro-batch, in arrival order, packed
-  * into primitive arrays: chunk `i` is `data[offsets(i), offsets(i + 1))`,
-  * received at `micros(i)` with reader sequence number `seqs(i)`. The
-  * driver serializes a partition as five flat values, not as one object
-  * graph per chunk. */
+/** One mountpoint's chunks of a micro-batch, in arrival order: chunk
+  * `i` holds the bytes `data(i)`, received at `micros(i)` with reader
+  * sequence number `seqs(i)`. The driver serializes a partition as
+  * primitive arrays and the chunks' own byte arrays, with no object per
+  * chunk around them, and the partition reader hands those arrays to
+  * Spark uncopied. */
 private final class NtripInputPartition(
     val mount: String,
     val micros: Array[Long],
     val seqs: Array[Long],
-    val offsets: Array[Int],
-    val data: Array[Byte]) extends InputPartition {
+    val data: Array[Array[Byte]]) extends InputPartition {
   def size: Int = micros.length
-  def bytes(i: Int): Array[Byte] = util.Arrays.copyOfRange(data, offsets(i), offsets(i + 1))
   def chunks: IndexedSeq[RawChunk] =
-    (0 until size).map(i => RawChunk(mount, micros(i), seqs(i), bytes(i)))
+    (0 until size).map(i => RawChunk(mount, micros(i), seqs(i), data(i)))
 }
 
 private object NtripInputPartition {
   /** One partition per mountpoint present in `chunks` (ordered by
     * mountpoint), each keeping its chunks' order in `chunks`. */
   def perMountpoint(chunks: IndexedSeq[RawChunk]): Array[InputPartition] =
-    chunks.groupBy(_.mountPoint).toArray.sortBy(_._1).map { case (mount, cs) =>
-      val offsets = new Array[Int](cs.length + 1)
-      var total = 0L
-      var i = 0
-      while (i < cs.length) {
-        total += cs(i).data.length
-        require(total <= Int.MaxValue,
-          s"mountpoint $mount buffered over 2 GiB in one micro-batch; lower maxChunksPerTrigger")
-        offsets(i + 1) = total.toInt
-        i += 1
-      }
-      val data = new Array[Byte](total.toInt)
-      i = 0
-      while (i < cs.length) {
-        System.arraycopy(cs(i).data, 0, data, offsets(i), cs(i).data.length)
-        i += 1
-      }
+    chunks.iterator.map(_.mountPoint).distinct.toArray.sorted.map { mount =>
+      val cs = chunks.filter(_.mountPoint == mount)
+      require(cs.iterator.map(_.data.length.toLong).sum <= Int.MaxValue,
+        s"mountpoint $mount buffered over 2 GiB in one micro-batch; lower maxChunksPerTrigger")
       new NtripInputPartition(mount, cs.map(_.receiveMicros).toArray, cs.map(_.seq).toArray,
-        offsets, data)
+        cs.map(_.data).toArray)
     }
 }
 

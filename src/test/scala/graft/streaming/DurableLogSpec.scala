@@ -45,21 +45,19 @@ class DurableLogSpec extends AnyFunSuite {
     t
   }
 
-  /** A receive clock that advances `stepMicros` per read. */
-  private final class Clock(var micros: Long, stepMicros: Long) extends (() => Long) {
-    def apply(): Long = { micros += stepMicros; micros }
-  }
-
+  /** Drains one caster connection serving `frames` into the log, every
+    * read stamped `receiveMicros`. */
   private def drainCasterToLog(frames: Seq[Array[Byte]], logDir: java.nio.file.Path,
-                               startSeq: Long, clock: Clock): Long = {
+                               startSeq: Long, receiveMicros: Long): NtripDurableLog.Drained = {
     val server = new ServerSocket(0)
     try {
       serve(server, frames)
       val c = new NtripClient("127.0.0.1", server.getLocalPort)
       c.openStream("MNT0")
-      val n = NtripDurableLog.drain(c, "MNT0", logDir, clock, rollEvery = 5, startSeq = startSeq)
+      val drained = NtripDurableLog.drain(c, "MNT0", logDir, () => receiveMicros, rollEvery = 5,
+        startSeq = startSeq)
       c.close()
-      n
+      drained
     } finally server.close()
   }
 
@@ -74,7 +72,6 @@ class DurableLogSpec extends AnyFunSuite {
     val phase1 = SyntheticRtcm.framesFor("MNT0", 100, 40, 61L).map(_._2)
     val phase2 = SyntheticRtcm.framesFor("MNT0", 101, 20, 62L).map(_._2)
     assert((phase1 ++ phase2).map(_.toSeq).distinct.size == 60)
-    val clock = new Clock(1700000000000000L, 1000L)
 
     def runQuery(): Unit = {
       val q = RtcmStreaming.decodeStream(NtripDurableLog.readStream(spark, logDir.toString))
@@ -85,8 +82,10 @@ class DurableLogSpec extends AnyFunSuite {
     }
 
     // phase 1: live data → log → query lands it, then "crashes" (stop)
-    val n1 = drainCasterToLog(phase1, logDir, startSeq = 0L, clock)
+    val d1 = drainCasterToLog(phase1, logDir, startSeq = 0L, 1700000000000000L)
+    val n1 = d1.lines
     assert(n1 > 0)
+    assert(d1.framing == RtcmFraming.Counts(40L, 0L, 0L, 0L))
     runQuery()
     val afterPhase1 = spark.read.parquet(outDir).count()
     assert(afterPhase1 == 40, s"phase 1 landed $afterPhase1")
@@ -95,7 +94,7 @@ class DurableLogSpec extends AnyFunSuite {
     // numbering from the directory (its own restart story)
     val resumeAt = NtripDurableLog.nextSeq(logDir, "MNT0")
     assert(resumeAt == n1)
-    drainCasterToLog(phase2, logDir, startSeq = resumeAt, clock)
+    drainCasterToLog(phase2, logDir, startSeq = resumeAt, 1700000100000000L)
 
     // the writer framed the frame-misaligned reads: each line is whole
     // frames, and the lines in seq order are the served frames
@@ -127,8 +126,14 @@ class DurableLogSpec extends AnyFunSuite {
     val outDir = root.resolve("out").toString
     val ckDir = root.resolve("ck").toString
 
-    // 2 s of receive time per read → phases span several 30 s windows
-    val clock = new Clock(1700000000000000L, 2000000L)
+    // one connection per frame, 5 s of receive time apart → each phase
+    // spans several 30 s windows, however the bytes are read
+    var micros = 1700000000000000L
+    def drainEach(frames: Seq[Array[Byte]], startSeq: Long): Long =
+      frames.foldLeft(startSeq) { (seq, f) =>
+        micros += 5000000L
+        seq + drainCasterToLog(Seq(f), logDir, seq, micros).lines
+      } - startSeq
     val phase1 = SyntheticRtcm.framesFor("MNT0", 100, 40, 71L).map(_._2)
     val phase2 = SyntheticRtcm.framesFor("MNT0", 101, 40, 72L).map(_._2)
 
@@ -142,14 +147,15 @@ class DurableLogSpec extends AnyFunSuite {
       try q.processAllAvailable() finally q.stop()
     }
 
-    val n1 = drainCasterToLog(phase1, logDir, startSeq = 0L, clock)
+    val n1 = drainEach(phase1, 0L)
+    assert(n1 == 40) // a frame is completed by one read: one line
     runQuery() // "crash" with windows open
     val resumeAt = NtripDurableLog.nextSeq(logDir, "MNT0")
     assert(resumeAt == n1)
-    val n2 = drainCasterToLog(phase2, logDir, startSeq = resumeAt, clock)
+    val n2 = drainEach(phase2, resumeAt)
     // watermark flush: one frame far past everything
-    clock.micros += 600000000L
-    drainCasterToLog(phase1.take(1), logDir, startSeq = resumeAt + n2, clock)
+    micros += 600000000L
+    drainCasterToLog(phase1.take(1), logDir, startSeq = resumeAt + n2, micros)
     runQuery() // restart from the same checkpoint
 
     // ground truth: the batch pipeline over the SAME durable log,
@@ -157,7 +163,7 @@ class DurableLogSpec extends AnyFunSuite {
     val allChunks = NtripDurableLog.readBatch(spark, logDir.toString)
     val batchPkgs = RtcmPipeline.packages(RtcmPipeline.decode(RtcmPipeline.frameChunks(allChunks)))
     // the watermark the flush frame's receive time sets
-    val horizon = clock.micros / 1000000L - 120
+    val horizon = micros / 1000000L - 120
     val expected = batchPkgs
       .filter(col("rtcm_obs_epoch").isNotNull)
       .groupBy(graft.queries.Q.bucket(col("receive_time"), 30).as("bucket"),
@@ -173,6 +179,52 @@ class DurableLogSpec extends AnyFunSuite {
     // exactly-once: no duplicate (bucket, mountpoint) rows landed
     val all = spark.read.parquet(outDir).collect()
     assert(all.map(r => (r.getLong(0), r.getString(1))).distinct.length == all.length)
+  }
+
+  test("the drain reports the framing counts the NTRIP source reports for the same bytes") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    // garbage with preambles, a frame with a broken CRC, noise between
+    // frames, and a last frame cut short: every count is exercised
+    val rnd = new java.util.Random(65L)
+    val frames = SyntheticRtcm.framesFor("MNT0", 100, 30, 66L).map(_._2)
+    val body = scala.collection.mutable.ArrayBuffer.empty[Byte]
+    frames.zipWithIndex.foreach { case (f, i) =>
+      val g = new Array[Byte](rnd.nextInt(12))
+      rnd.nextBytes(g)
+      if (g.nonEmpty && i % 3 == 0) g(0) = RtcmFraming.Preamble
+      body ++= g
+      body ++= (if (i == 7) f.updated(f.length - 2, (f(f.length - 2) ^ 0x21).toByte) else f)
+    }
+    body ++= frames.head.take(25)
+    val bytes = body.toArray
+
+    val drained = drainCasterToLog(Seq(bytes), Files.createTempDirectory("graft-durable-counts"),
+      startSeq = 0L, 1700000000000000L)
+    val whole = RtcmFraming.feedCounted(RtcmFraming.emptyState, bytes)
+    assert(drained.framing == RtcmFraming.Counts(whole.frames.size.toLong, whole.crcRejects.toLong,
+      bytes.length - whole.frames.map(_.length.toLong).sum, 0L))
+    assert(drained.framing.crcRejects >= 1 && drained.framing.skippedBytes > 25, drained)
+
+    val server = new ServerSocket(0)
+    try {
+      serve(server, Seq(bytes))
+      val stream = new NtripMicroBatchStream(new CaseInsensitiveStringMap(Map(
+        "host" -> "127.0.0.1", "port" -> server.getLocalPort.toString,
+        "mountpoints" -> "MNT0").asJava))
+      try {
+        // the reader drops its residual when the stream ends
+        def reported: RtcmFraming.Counts = {
+          val m = stream.metrics(java.util.Optional.empty()).asScala
+          RtcmFraming.Counts(m("MNT0.frames").toLong, m("MNT0.crcRejects").toLong,
+            m("MNT0.skippedBytes").toLong, m("MNT0.truncatedBytes").toLong)
+        }
+        val deadline = System.currentTimeMillis() + 10000
+        while (reported != drained.framing && System.currentTimeMillis() < deadline)
+          Thread.sleep(20)
+        assert(reported == drained.framing)
+      } finally stream.stop()
+    } finally server.close()
   }
 
   test("a log of raw reads, written before the writer framed them, fails naming its file") {

@@ -16,6 +16,19 @@ import org.scalatest.funsuite.AnyFunSuite
 class NtripClientSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
+  /** The largest chunk a reader buffers: the frames one read of
+    * `NtripClient.ReadSize` bytes completes, the first of which may
+    * start in the residual, which is shorter than a 1029-byte frame. */
+  private val MaxChunkBytes = NtripClient.ReadSize + 1028
+
+  /** Every read of the client's open stream, each copied out of the
+    * `NtripClient.ReadSize` array it was read into. */
+  private def readAll(c: NtripClient): Vector[Array[Byte]] = {
+    val read = new Array[Byte](NtripClient.ReadSize)
+    Iterator.continually(c.read(read)).takeWhile(_ >= 0)
+      .map(n => java.util.Arrays.copyOf(read, n)).toVector
+  }
+
   /** One-shot caster: handles a single connection. Chunked RTCM body
     * split at deliberately frame-misaligned boundaries. Captures the
     * request header lines for wire-format assertions. */
@@ -139,7 +152,11 @@ class NtripClientSpec extends AnyFunSuite {
   test("maxChunksPerTrigger bounds each micro-batch (admission control)") {
     import org.apache.spark.sql.streaming.OutputMode
     import spark.implicits._
-    val frames = Map("MNT0" -> SyntheticRtcm.framesFor("MNT0", 100, 40, 44L).map(_._2))
+    // a read returns up to ReadSize bytes whatever the HTTP chunks, so
+    // the body must outgrow 7 of the largest chunks a read can complete
+    // for the stream to need more than one 7-chunk batch
+    val frames = Map("MNT0" -> SyntheticRtcm.framesFor("MNT0", 100, 400, 44L).map(_._2))
+    assert(frames("MNT0").map(_.length).sum > 7 * MaxChunkBytes)
     val server = new ServerSocket(0)
     try {
       serveMany(server, frames)
@@ -246,9 +263,8 @@ class NtripClientSpec extends AnyFunSuite {
         tls = true, sslContext = Some(clientCtx))
       c.openStream("MNT0")
       assert(c.chunked, c.responseHeader.mkString("|"))
-      val got = Iterator.continually(c.readChunk()).takeWhile(_.isDefined)
-        .flatMap(_.get).toArray
-      assert(got.toSeq == frames.flatMap(_.toSeq))
+      val got = readAll(c).flatten
+      assert(got == frames.flatMap(_.toSeq))
       c.close()
     } finally server.close()
   }
@@ -264,14 +280,15 @@ class NtripClientSpec extends AnyFunSuite {
       val client = new NtripClient("127.0.0.1", server.getLocalPort)
       client.openStream("MNT0", user = Some("u"), passwd = Some("p"))
       assert(client.chunked, client.responseHeader.mkString("|"))
-      val reads = Iterator.continually(client.readChunk()).takeWhile(_.isDefined).map(_.get).toVector
+      val reads = readAll(client)
       client.close()
-      assert(reads.map(_.length).sum == frames.map(_.length).sum)
+      // the reads are the de-chunked body, each at most one array
+      assert(reads.forall(r => r.nonEmpty && r.length <= NtripClient.ReadSize))
+      assert(reads.flatten == frames.flatMap(_.toSeq))
 
       // the framer carries each partial frame to the read that ends it
       val framer = new RtcmFraming.Framer
       val chunks = reads.flatMap(framer.push)
-      assert(chunks.size < reads.size)
       assert(chunks.flatMap(RtcmFraming.splitPacked).map(_.toSeq) == frames.map(_.toSeq))
       framer.reset()
       assert(framer.counts == RtcmFraming.Counts(40L, 0L, 0L, 0L))
@@ -354,8 +371,10 @@ class NtripClientSpec extends AnyFunSuite {
   }
 
   test("maxBufferedChunks bounds driver memory while the query stalls, then resumes") {
-    val frames = SyntheticRtcm.framesFor("MNT0", 100, 200, 47L).map(_._2)
+    val frames = SyntheticRtcm.framesFor("MNT0", 100, 400, 47L).map(_._2)
     val bodyBytes = frames.map(_.length.toLong).sum
+    // more than 8 of the largest chunks: the reader must hit the cap
+    assert(bodyBytes > 8 * MaxChunkBytes)
     val server = new ServerSocket(0)
     try {
       serveMany(server, Map("MNT0" -> frames))
@@ -370,7 +389,7 @@ class NtripClientSpec extends AnyFunSuite {
           Thread.sleep(25)
         }
         assert(maxSeen <= 8, s"buffer grew past cap: $maxSeen")
-        assert(maxSeen > 0, "caster never delivered")
+        assert(maxSeen == 8, s"the reader stopped at $maxSeen chunks, short of the cap")
         // resume: the stalled stream must still deliver every byte
         val total = bytes(drainAll(stream, 0L, bodyBytes))
         assert(total == bodyBytes, s"$total != $bodyBytes")
@@ -408,8 +427,9 @@ class NtripClientSpec extends AnyFunSuite {
 
   /** Caster serving one body per connection, in order, each as HTTP
     * chunks of frame-misaligned lengths. A body marked `cut` ends with a
-    * chunk that promises 64 bytes, sends 10 and closes the socket: the
-    * client sees a connection dropped mid-frame, and never the 10 bytes. */
+    * chunk that promises 64 bytes, sends 10 zeros and closes the socket:
+    * the client reads the 10 bytes, which are in no frame, and then sees
+    * the connection drop mid-frame. */
   private def serveConnections(server: ServerSocket, bodies: Seq[(Array[Byte], Boolean)]): Thread = {
     val t = new Thread(() => {
       try {
@@ -464,18 +484,23 @@ class NtripClientSpec extends AnyFunSuite {
     // serves the whole body
     val cutAt = starts(30) + 20
     val first = whole.take(cutAt)
+    val delivered = first ++ new Array[Byte](10) // and the cut chunk's zeros
     val expected = good.filter(_ < 30).map(frames) ++ good.map(frames)
     def key(fs: Seq[Array[Byte]]) = fs.map(_.toSeq)
     // the batch framer over each connection's delivered bytes agrees
-    assert(key(RtcmFraming.frames(first) ++ RtcmFraming.frames(whole)) ==
+    assert(key(RtcmFraming.frames(delivered) ++ RtcmFraming.frames(whole)) ==
       key(expected))
     val noiseBeforeCut = frames.indices.filter(i => i % 5 == 1 && i < 30).map(i => 1 + i % 4).sum
-    val skipped = (prefix.length + noiseBeforeCut + frames(3).length + 20) +
+    val skipped = (prefix.length + noiseBeforeCut + frames(3).length + 20 + 10) +
       (prefix.length + noiseBytes + frames(3).length)
-    assert(skipped == first.length + whole.length - expected.map(_.length).sum)
-    // both connections serve the broken frame 3, and nothing else fails a CRC
-    val crcRejects = Seq(first, whole).map(RtcmFraming.feedCounted(RtcmFraming.emptyState, _).crcRejects).sum
-    assert(crcRejects == 2)
+    assert(skipped == delivered.length + whole.length - expected.map(_.length).sum)
+    // both connections serve the broken frame 3; on the first, the cut
+    // chunk's zeros also complete the extent that frame 30's length
+    // header promises (an ARP frame, shorter than 30 bytes), which fails
+    // its CRC; nothing else does
+    assert(frames(30).length < 30)
+    val crcRejects = Seq(delivered, whole).map(RtcmFraming.feedCounted(RtcmFraming.emptyState, _).crcRejects).sum
+    assert(crcRejects == 3)
 
     val server = new ServerSocket(0)
     try {
@@ -501,6 +526,57 @@ class NtripClientSpec extends AnyFunSuite {
         assert(m("MNT0.crcRejects") == crcRejects.toString, m)
         assert(m("MNT0.reconnects") == "1", m)
         assert(m("MNT0.lastReconnectCause").matches("java\\.[\\w.]+Exception: .+"), m)
+      } finally stream.stop()
+    } finally server.close()
+  }
+
+  /** Caster that answers the n-th connection with `responses(n)`, raw
+    * bytes after the request header, and then closes it. */
+  private def serveRaw(server: ServerSocket, responses: Seq[Array[Byte]]): Thread = {
+    val t = new Thread(() => {
+      try {
+        responses.foreach { response =>
+          val sock = server.accept()
+          try {
+            val rd = new BufferedReader(new InputStreamReader(sock.getInputStream, ISO_8859_1))
+            Iterator.continually(rd.readLine()).takeWhile(l => l != null && l.nonEmpty).foreach(_ => ())
+            sock.getOutputStream.write(response)
+            sock.getOutputStream.flush()
+          } finally sock.close()
+        }
+      } catch { case _: Throwable => () } // server closed
+    })
+    t.setDaemon(true)
+    t.start()
+    t
+  }
+
+  test("a caster's chunk size line cannot kill the reader: it reconnects and says why") {
+    def ascii(s: String) = s.getBytes(ISO_8859_1)
+    val header = "HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n"
+    val frames = SyntheticRtcm.framesFor("MNT0", 100, 20, 64L).map(_._2)
+    val body = frames.flatten.toArray
+    // a chunk of almost 2 GiB that ends after 100 bytes (an allocation
+    // by the size line would fail), a size line that is not hex, then a
+    // good stream
+    val responses = Seq(
+      ascii(header + "7ffffff0\r\n") ++ new Array[Byte](100),
+      ascii(header + "zz\r\n"),
+      ascii(header + f"${body.length}%x\r\n") ++ body ++ ascii("\r\n0\r\n\r\n"))
+    val server = new ServerSocket(0)
+    try {
+      serveRaw(server, responses)
+      val stream = mkStream(server.getLocalPort)
+      try {
+        val got = drainAll(stream, 0L, body.length.toLong)
+        assert(got.flatMap(c => RtcmFraming.splitPacked(c.data)).map(_.toSeq) == frames.map(_.toSeq))
+        val m = stream.metrics(java.util.Optional.empty()).asScala.toMap
+        assert(m("MNT0.frames") == frames.size.toString, m)
+        assert(m("MNT0.reconnects") == "2", m)
+        assert(m("MNT0.lastReconnectCause") ==
+          "java.io.IOException: bad HTTP chunk size line: \"zz\"", m)
+        // the 100 bytes read of the huge chunk are in no frame
+        assert(m("MNT0.skippedBytes") == "100", m)
       } finally stream.stop()
     } finally server.close()
   }

@@ -176,6 +176,38 @@ class SinkSpec extends AnyFunSuite {
       .collect().toSeq == Seq(tieIds.max))
   }
 
+  test("writeDecodedBatchJdbc executes each package before its observations, 500 rows at most") {
+    import graft.etl.{RecordingJdbc, Sinks}
+    import spark.implicits._
+    // one partition of 1200 frames: many package and observation
+    // batches on one connection, with observation batches filling up
+    // while a package batch is still pending
+    val decoded = RtcmPipeline.decode(
+      RtcmPipeline.frameChunks(spark.createDataset(SyntheticRtcm.corpus(2, 600)))).coalesce(1)
+      .persist()
+    try {
+      RecordingJdbc.clear()
+      Sinks.writeDecodedBatchJdbc(decoded, new RecordingJdbc.Factory)
+      val execs = RecordingJdbc.execs.toArray(Array.empty[RecordingJdbc.Exec]).toSeq
+      val pkgSql = Sinks.insertSql("rtcm_packages", Sinks.PackagesColumns, 1)
+      val obsSql = Sinks.insertSql("observations", Sinks.ObservationsColumns, 1)
+      val appends = execs.filter(e => e.sql == pkgSql || e.sql == obsSql)
+      assert(appends.map(_.conn).distinct.size == 1)
+      assert(appends.count(_.sql == pkgSql) >= 3 && appends.count(_.sql == obsSql) >= 3)
+      assert(appends.forall(e => e.rows >= 1 && e.rows <= 500), appends.map(_.rows))
+      // at every observation executeBatch, each package it references
+      // was executed earlier
+      val sent = scala.collection.mutable.Set.empty[Any]
+      appends.foreach { e =>
+        if (e.sql == pkgSql) sent ++= e.params.map(_.head)
+        else e.params.foreach(r => assert(sent.contains(r.head), s"observation of ${r.head} first"))
+      }
+      assert(appends.filter(_.sql == pkgSql).map(_.rows).sum == decoded.count())
+      assert(appends.filter(_.sql == obsSql).map(_.rows).sum ==
+        RtcmPipeline.observations(decoded).count())
+    } finally decoded.unpersist()
+  }
+
   test("writeDecodedBatchJdbc binds the same rows whatever the batch's column order") {
     import graft.etl.{DecodedFrame, RecordingJdbc, Sinks}
     import spark.implicits._
