@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
@@ -12,27 +10,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // local[32] wants scan splits ≈ cores: the map side of every
-      // exchange runs in the scan stage, and the default 128 MB
-      // splits give a 200 MB file only 2 map tasks (measured: a05's
-      // 10 M-row shuffle write serialized on 2 of 32 cores, +0.3 s).
-      // 16 MB ≈ 13 splits for that file; sub-16 MB files (all of
-      // sf0.1) stay single-split so the driver's headline bench is
-      // unchanged. On a real cluster this maps to the same rule of
-      // thumb: size splits so every core of every executor has work.
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      // measured path = the engine's default session: functions + the
-      // TopKRewrite optimizer rule registered via extensions
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // measured path = the engine's default session
+    val spark = GraftSession.local(cpus)
 
     // Warm the JVM/session (codegen, parquet footer reads) outside the
     // measured section — and RECORD the corpus row counts in the detail
@@ -63,86 +43,17 @@ object Bench {
     // engines warm, best-of-3, ratios being the statistic that
     // transfers on this noisy VM). Overrides SPARK_GRAFT_WARM.
     val best = sys.env.get("SPARK_GRAFT_BEST").map(_.trim.toInt).filter(_ > 1)
-    // s06's operating mode is build-once/search-many: charge the index
-    // BUILD to its own metric here (a forced fresh build into the
-    // keyed dir), so the s06 query line below measures SEARCH over the
-    // persisted index — the per-query cost a user actually pays.
-    // Both lines count toward the total: the session did both.
-    val s06Build: Seq[(String, Double)] =
-      if (skip("s06_ivf_index_search") || !only.forall(_("s06_ivf_index_search"))) Nil
-      else {
+    // Build-once artifacts (indexes, trained models): each one that a
+    // query of this run reads is built fresh into its keyed dir and
+    // charged to its own line, so the query lines below measure the
+    // per-query work over the persisted artifact. Both count toward
+    // the total: the session did both.
+    val builds: Seq[(String, Double)] = SparkEntry.builds
+      .filter(_.users.exists(n => !skip(n) && only.forall(_(n))))
+      .map { b =>
         val t0 = System.nanoTime()
-        graft.operators.IvfIndex.build(spark, sfDir,
-          graft.operators.IvfIndex.indexDirFor(sfDir))
-        Seq("s06_ivf_index_build" -> (System.nanoTime() - t0) / 1e9)
-      }
-    // t19 is the same operating mode (static eval side, streaming
-    // corpus): charge its index build separately, measure probe-only
-    val t19Build: Seq[(String, Double)] =
-      if (skip("t19_decontamination_index") ||
-          !only.forall(_("t19_decontamination_index"))) Nil
-      else {
-        val t0 = System.nanoTime()
-        graft.operators.DecontamIndex.build(spark, sfDir,
-          graft.operators.DecontamIndex.indexDirFor(sfDir))
-        Seq("t19_decontamination_index_build" -> (System.nanoTime() - t0) / 1e9)
-      }
-    // t26 is train-once/serve-many (the classifier model registry):
-    // charge the model TRAIN separately; the query line measures the
-    // load + apply a scoring job actually pays
-    val t26Build: Seq[(String, Double)] =
-      if (skip("t26_classifier_index") ||
-          !only.forall(_("t26_classifier_index"))) Nil
-      else {
-        val t0 = System.nanoTime()
-        graft.operators.TreeModel.build(spark, sfDir,
-          graft.operators.TreeModel.modelDirFor(sfDir))
-        Seq("t26_classifier_index_build" -> (System.nanoTime() - t0) / 1e9)
-      }
-    // The SA family is build-once/derive-many (the persisted suffix
-    // array): d15/d16/d17 all derive from the ONE persisted artifact,
-    // so charge the SA construction to its own metric whenever any of
-    // them runs; each query line then measures the derive-from-index
-    // pass a repeated analysis actually pays (round-14 verdict item 1
-    // — previously d15/d16 each paid a fresh ~17-min sf10 build).
-    val saUsers = Seq("d15_substring_removal", "d16_exact_decontamination",
-      "d17_sa_index_report", "d18_train_decontamination", "c16_pipeline_substr",
-      "d19_sa_probe_decontamination", "d19_probe_stream")
-    val d17Build: Seq[(String, Double)] =
-      if (saUsers.forall(n => skip(n) || !only.forall(_(n)))) Nil
-      else {
-        val t0 = System.nanoTime()
-        graft.operators.SuffixArrayIndex.build(spark, sfDir,
-          graft.operators.SuffixArrayIndex.indexDirFor(sfDir))
-        Seq("d17_sa_index_build" -> (System.nanoTime() - t0) / 1e9)
-      }
-    // d19 probes the persisted SA through its prefix-hash sidecar —
-    // built once per corpus snapshot like any index: charge it to its
-    // own metric so the d19 query line measures the per-batch probe
-    // cost an onboarding pipeline actually pays
-    // both d19 forms probe through the sidecar (ADVICE r16 item 1: a
-    // run restricted to only the streaming twin must still charge the
-    // one-off sidecar construction to this metric, not the query line)
-    val d19Sidecar: Seq[(String, Double)] =
-      if (Seq("d19_sa_probe_decontamination", "d19_probe_stream")
-            .forall(n => skip(n) || !only.forall(_(n)))) Nil
-      else {
-        val t0 = System.nanoTime()
-        graft.operators.SuffixArrayIndex.ensureProbeSidecar(spark, sfDir,
-          graft.operators.SuffixArrayIndex.indexDirFor(sfDir))
-        Seq("d19_sa_probe_sidecar_build" -> (System.nanoTime() - t0) / 1e9)
-      }
-    // t22 is train-once/tokenize-many: charge the tokenizer TRAIN to
-    // its own metric (forced fresh build into the keyed dir), so the
-    // t22 query line measures the apply join over the persisted vocab
-    // — the per-corpus-batch cost a user actually pays.
-    val t22Build: Seq[(String, Double)] =
-      if (skip("t22_bpe_tokenize") || !only.forall(_("t22_bpe_tokenize"))) Nil
-      else {
-        val t0 = System.nanoTime()
-        graft.operators.BpeTokenizer.build(spark, sfDir,
-          graft.operators.BpeTokenizer.tokenizerDirFor(sfDir))
-        Seq("t22_bpe_tokenize_build" -> (System.nanoTime() - t0) / 1e9)
+        b.build(spark, sfDir)
+        b.metric -> (System.nanoTime() - t0) / 1e9
       }
     // Streaming-fold throughput (verdict r8 item 8): replay the events
     // table in event-time order through StreamingFunnel and
@@ -150,8 +61,7 @@ object Bench {
     // sustained events/s in the detail artifact — NOT in the seconds
     // totals (different unit; regressions are caught by the committed
     // per-round BENCH_DETAIL diff). Runs BEFORE the query loop so the
-    // state-store/session is fresh, matching the dedicated
-    // StreamingFoldBench protocol. Bounded replay: ≤200k events
+    // state-store/session is fresh. Bounded replay: ≤200k events
     // driver-side, the same memory-sink harness the specs use.
     val foldMetrics: Option[String] =
       if (skip("streaming_fold") || only.nonEmpty) None
@@ -201,7 +111,7 @@ object Bench {
     // from per-query diffs.
     def calibrate(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 6400000000L, 1L, numPartitions = cpus.toInt)
+      spark.range(0L, 6400000000L, 1L, numPartitions = cpus)
         .selectExpr("sum(id % 9973)").collect()
       (System.nanoTime() - t0) / 1e9
     }
@@ -265,8 +175,7 @@ object Bench {
     val calJson = cals.map(c => f"$c%.3f").mkString("[", ",", "]")
     // queries whose every run failed carry NaN — reported under
     // "failed", never as a seconds row
-    val results = (s06Build ++ t19Build ++ t22Build ++ t26Build ++ d17Build ++
-      d19Sidecar ++ timed)
+    val results = (builds ++ timed)
       .filterNot(_._2.isNaN).sortBy(_._1)
     def jmap(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-time materialization of the co-located bucketed fact layout
   * ([[graft.etl.BucketedLayout]]) for an SF dir — the ingest-side
   * write that every later session amortizes via DDL re-registration.
@@ -11,13 +9,7 @@ import org.apache.spark.sql.SparkSession
 object LayoutMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     val t0 = System.nanoTime()
     val tables = graft.etl.BucketedLayout.ensure(spark, sfDir)
     println(f"[layout] bucketed ${tables.values.mkString(", ")} in " +

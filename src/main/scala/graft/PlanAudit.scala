@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
 
 /** Physical-plan audit: asserts the scale-critical plan properties
   * (filter/column pushdown to parquet, broadcast joins for dims,
@@ -11,14 +9,7 @@ import org.apache.spark.sql.execution.SparkPlan
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(8)
 
     var failures = 0
     // codegen stages print as "WholeStageCodegen (n)" in formatted
@@ -970,7 +961,6 @@ object PlanAudit {
     // are 256 MB — correct at cluster scale, unreachable here).
     {
       import org.apache.spark.sql.functions._
-      import spark.implicits._
       val conf = spark.conf
       val saved = Seq(
         "spark.sql.autoBroadcastJoinThreshold",

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Dev-only measurement harness (guide §1): for each named query,
@@ -17,23 +16,13 @@ object Profiler {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 3) args(3).toInt else 1
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // dev bisection knobs: PROF_CONF="key=value;key=value"
     sys.env.get("PROF_CONF").foreach(_.split(";").filter(_.contains("="))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)
         spark.conf.set(k.trim, v.trim)
       })
-    spark.sparkContext.setLogLevel("WARN")
     val dir = new java.io.File(s"plans/$tag")
     dir.mkdirs()
     // per-job timing listener

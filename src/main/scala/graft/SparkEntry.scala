@@ -25,4 +25,7 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     modules.flatMap(_.oracle).toMap
+
+  /** Every module's build-once artifacts, in declaration order. */
+  def builds: Seq[ArtifactBuild] = modules.flatMap(_.builds)
 }

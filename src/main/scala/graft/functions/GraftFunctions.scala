@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.functions.{lit, sqrt}
 
 /** Column-level API + SQL registration for the graft native
   * expressions. Use `withExtensions(new GraftExtensions)` at session

@@ -33,7 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * c12 gate hash-checks it against DuckDB's regex engine.
   *
   * Why: the regex form measures hot — at sf10 the 3 counts + 4
-  * replaces are ~3.3 s of c12's 4.0 s (C12Lab ladder); scrubbing is
+  * replaces are ~3.3 s of c12's 4.0 s (BENCH_NOTES, c12 stage ladder); scrubbing is
   * pure scan work and at 100 TB it must run at byte-scan speed, the
   * JsonGetLong/RepetitionStats precedent.
   */

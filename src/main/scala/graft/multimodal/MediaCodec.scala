@@ -980,7 +980,7 @@ object MediaCodec {
     def bit(): Int = {
       if (nBits == 0) {
         if (pos >= b.length) throw new IllegalArgumentException("eof")
-        var v = b(pos) & 0xFF
+        val v = b(pos) & 0xFF
         pos += 1
         if (v == 0xFF) {
           val m = if (pos < b.length) b(pos) & 0xFF else -1
@@ -1465,7 +1465,6 @@ object MediaCodec {
     val in = new JpegBits(b, scanStart)
     val pred = new Array[Int](comps.length)
     val coef = new Array[Int](64)
-    val block = new Array[Double](64)
     var mcu = 0
     val nMcus = mcusX * mcusY
     while (mcu < nMcus) {

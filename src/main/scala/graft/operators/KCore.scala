@@ -35,8 +35,6 @@ object KCore {
     * assumed distinct with a ≠ b) to the k-core; returns the
     * surviving edge rows with the original column names. */
   def core(edges: DataFrame, k: Int, maxRounds: Int = 12): DataFrame = {
-    val a = edges.columns(0)
-    val b = edges.columns(1)
     var e = edges.localCheckpoint(true)
     var nEdges = e.count()
     // `peels` counts only rounds that REMOVED something; the final

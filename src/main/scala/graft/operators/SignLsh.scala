@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** Sign-random-projection (hyperplane) LSH for cosine near-dup
   * banding: signature bit j = sign(v · h_j) for fixed Gaussian

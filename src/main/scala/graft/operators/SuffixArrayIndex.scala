@@ -62,17 +62,21 @@ object SuffixArrayIndex {
     * ONLY this fixed-width column set, scan-side-filtered by the
     * batch's broadcast hash set — no corpus text is touched again. */
   def ensureProbeSidecar(s: SparkSession, sfDir: String, dir: String): DataFrame = {
-    if (!new java.io.File(dir, "h32/_SUCCESS").exists) {
-      val corpus = graft.Tables.load(s, sfDir, "documents")
-        .select(col("doc_id").cast(LongType).as("doc_id"), col("text"))
-      load(s, dir).select(col("doc_id"), col("off"))
-        .join(corpus, Seq("doc_id"))
-        .filter(col("off") <= length(col("text")).cast(LongType) - 32L)
-        .select(col("doc_id"), col("off"),
-          xxhash64(expr("substring(text, cast(off + 1 as int), 32)")).as("h32"))
-        .write.mode("overwrite").parquet(s"$dir/h32")
-    }
+    if (!new java.io.File(dir, "h32/_SUCCESS").exists) buildProbeSidecar(s, sfDir, dir)
     s.read.parquet(s"$dir/h32")
+  }
+
+  /** Writes the [[ensureProbeSidecar]] column set to `dir/h32`, over any
+    * sidecar already there. */
+  def buildProbeSidecar(s: SparkSession, sfDir: String, dir: String): Unit = {
+    val corpus = graft.Tables.load(s, sfDir, "documents")
+      .select(col("doc_id").cast(LongType).as("doc_id"), col("text"))
+    load(s, dir).select(col("doc_id"), col("off"))
+      .join(corpus, Seq("doc_id"))
+      .filter(col("off") <= length(col("text")).cast(LongType) - 32L)
+      .select(col("doc_id"), col("off"),
+        xxhash64(expr("substring(text, cast(off + 1 as int), 32)")).as("h32"))
+      .write.mode("overwrite").parquet(s"$dir/h32")
   }
 
   /** INCREMENTAL cross-corpus probe — the SA family's d13/t19/s06

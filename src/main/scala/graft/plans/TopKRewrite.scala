@@ -76,7 +76,7 @@ object TopKRewrite extends Rule[LogicalPlan] {
 
   private def rewrite(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case f @ Filter(cond,
-        w @ Window(Seq(a @ Alias(WindowExpression(RowNumber(),
+        Window(Seq(a @ Alias(WindowExpression(RowNumber(),
           WindowSpecDefinition(partitionSpec,
             Seq(SortOrder(score, Descending, NullsLast, _),
                 SortOrder(tie, Ascending, NullsFirst, _)),

@@ -14,7 +14,17 @@ trait QueryModule {
   def defs: Map[String, (SparkSession, String) => DataFrame]
   /** name -> DuckDB-compatible ANSI SQL over the same tables. */
   def oracle: Map[String, String]
+  /** The build-once artifacts this module's queries read, in the order
+    * they must be built. */
+  def builds: Seq[ArtifactBuild] = Nil
 }
+
+/** A build-once artifact (an index, a trained model) that `users` read
+  * from its keyed dir. Bench charges `build`, which always builds
+  * fresh into that dir, to its own `metric`, so each user's line
+  * measures only the per-query work over the persisted artifact. */
+final case class ArtifactBuild(metric: String, users: Seq[String],
+                               build: (SparkSession, String) => Unit)
 
 /** Shared helpers enforcing oracle-compare discipline:
   *  - time buckets as BIGINT epoch seconds (no timestamp formatting

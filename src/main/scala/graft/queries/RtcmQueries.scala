@@ -3,7 +3,6 @@ package graft.queries
 import graft.etl.{RtcmPipeline, SyntheticRtcm}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** End-to-end RTCM pipeline queries over a deterministic synthetic
   * corpus (SyntheticRtcm, seed-fixed): transport chunks → framing →

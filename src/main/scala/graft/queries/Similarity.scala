@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   */
 object Similarity extends QueryModule {
 
-  import graft.functions.GraftFunctions.{cosineSimilarity, vectorDot, vectorNorm}
+  import graft.functions.GraftFunctions.cosineSimilarity
 
   private def emb(s: SparkSession, d: String) =
     Tables.load(s, d, "embeddings")
@@ -865,4 +865,11 @@ object Similarity extends QueryModule {
     "s11_hybrid_rrf" -> s11Sql,
     "s12_semantic_decontamination" -> s12Sql,
     "s12_decon_stream" -> s12Sql)
+
+  // s06's operating mode is build-once/search-many: the index build is
+  // charged to its own line, so the s06 line measures search over the
+  // persisted index — the per-query cost a user actually pays
+  override def builds: Seq[ArtifactBuild] = Seq(
+    ArtifactBuild("s06_ivf_index_build", Seq("s06_ivf_index_search"),
+      (s, d) => graft.operators.IvfIndex.build(s, d, graft.operators.IvfIndex.indexDirFor(d))))
 }

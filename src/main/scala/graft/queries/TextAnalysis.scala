@@ -1511,4 +1511,11 @@ object TextAnalysis extends QueryModule {
     "t10_char_lm_quality" -> t10Sql,
     "t13_pmi_collocations" -> t13Sql,
     "t23_perplexity_buckets" -> t23Sql)
+
+  // t26 is train-once/serve-many (the classifier model registry): the
+  // model train is charged separately; the t26 line measures the
+  // load + apply a scoring job actually pays
+  override def builds: Seq[ArtifactBuild] = Seq(
+    ArtifactBuild("t26_classifier_index_build", Seq("t26_classifier_index"),
+      (s, d) => graft.operators.TreeModel.build(s, d, graft.operators.TreeModel.modelDirFor(d))))
 }

@@ -45,6 +45,13 @@ import javax.net.ssl.SSLContext
   *  - sourcetable = text lines until `ENDSOURCETABLE`
   *    (ntripclient.py:379-401).
   *
+  * Header and sourcetable lines are untrusted input too: a line longer
+  * than [[NtripClient.MaxResponseLine]], a header of more than
+  * [[NtripClient.MaxHeaderLines]] lines and a sourcetable of more than
+  * [[NtripClient.MaxSourceTableBytes]] each throw an `IOException`
+  * naming the limit, so a caster that never ends a line or a header
+  * cannot grow the reader's heap.
+  *
   * A [[read]] returns the body bytes the connection already holds, up
   * to the caller's array ([[NtripClient.ReadSize]], 4096 bytes, in the
   * NTRIP source and the durable log): it blocks only until it has one
@@ -73,6 +80,7 @@ final class NtripClient(
     readTimeoutMs: Int = 10000,
     tls: Boolean = false,
     sslContext: Option[SSLContext] = None) extends AutoCloseable {
+  import NtripClient.{MaxHeaderLines, MaxResponseLine, MaxSourceTableBytes}
 
   private var socket: Socket = _
   private var in: ResponseReader = _
@@ -167,8 +175,19 @@ final class NtripClient(
   }
 
   private def readHeaderAndStatus(): Unit = {
-    val lines = Iterator.continually(in.readLine())
-      .takeWhile(l => l != null && l.nonEmpty).toSeq
+    def next() = in.readLine(MaxResponseLine, "NTRIP response line (MaxResponseLine)")
+    val header = Vector.newBuilder[String]
+    var n = 0
+    var line = next()
+    while (line != null && line.nonEmpty) {
+      n += 1
+      if (n > MaxHeaderLines)
+        throw new IOException(
+          s"NTRIP response header has more than $MaxHeaderLines lines (MaxHeaderLines)")
+      header += line
+      line = next()
+    }
+    val lines = header.result()
     responseHeader = lines
     chunked = lines.exists(_.equalsIgnoreCase("Transfer-Encoding: chunked"))
     val status = lines.headOption.map(_.split(" ")).filter(_.length > 1).map(_(1))
@@ -193,16 +212,25 @@ final class NtripClient(
     * lines until ENDSOURCETABLE. */
   def sourceTable(user: Option[String] = None, passwd: Option[String] = None): Seq[String] = {
     connect()
-    out.write(requestHeader("/", user, passwd, ntripVersion = 2, nmeaGga = None))
-    out.flush()
-    readHeaderAndStatus()
-    val body = Iterator.continually(in.readLine())
-      .takeWhile(l => l != null)
-      .span(l => l != "ENDSOURCETABLE") match {
-        case (pre, post) => (pre ++ post.take(1)).toSeq
+    try {
+      out.write(requestHeader("/", user, passwd, ntripVersion = 2, nmeaGga = None))
+      out.flush()
+      readHeaderAndStatus()
+      val body = Vector.newBuilder[String]
+      var bytes = 0L
+      var line = ""
+      while (line != null && line != "ENDSOURCETABLE") {
+        line = in.readLine(MaxResponseLine, "NTRIP sourcetable line (MaxResponseLine)")
+        if (line != null) {
+          bytes += line.length + 2
+          if (bytes > MaxSourceTableBytes)
+            throw new IOException(
+              s"NTRIP sourcetable longer than $MaxSourceTableBytes bytes (MaxSourceTableBytes)")
+          body += line
+        }
       }
-    close()
-    body
+      body.result()
+    } finally close()
   }
 
   /** Reads the next body bytes into `into`: at least one, at most
@@ -226,6 +254,16 @@ object NtripClient {
   private[streaming] final val MaxChunkSize = Int.MaxValue - 2
   /** The longest chunk size line accepted, extensions included. */
   private[streaming] final val MaxSizeLine = 1024
+  /** The longest response header or sourcetable line accepted: the
+    * 8 KiB field limit common HTTP servers apply (Apache's
+    * LimitRequestFieldSize is 8190). */
+  private[streaming] final val MaxResponseLine = 8192
+  /** The most response header lines accepted: Apache's LimitRequestFields
+    * default; an NTRIP caster's response header has under ten. */
+  private[streaming] final val MaxHeaderLines = 100
+  /** The largest sourcetable accepted, CRLFs counted: 1024 lines at
+    * [[MaxResponseLine]], or about 30 000 STR records of 250 bytes. */
+  private[streaming] final val MaxSourceTableBytes = 8L << 20
 }
 
 /** One connection's response bytes through one buffer: header lines
@@ -254,8 +292,8 @@ private[streaming] final class ResponseReader(in: InputStream) {
 
   /** One ISO-8859-1 line (up to and excluding CRLF/LF, CRs dropped);
     * null at EOF before any byte. A line longer than `max` characters
-    * throws `IOException`. */
-  def readLine(max: Int = Int.MaxValue): String = {
+    * throws `IOException` naming it as `what`. */
+  def readLine(max: Int, what: String): String = {
     val sb = new java.lang.StringBuilder
     var any = false
     while (true) {
@@ -266,7 +304,8 @@ private[streaming] final class ResponseReader(in: InputStream) {
       if (b == '\n') return sb.toString
       if (b != '\r') {
         if (sb.length >= max)
-          throw new IOException(s"line longer than $max characters: \"${sb.substring(0, 64)}...\"")
+          throw new IOException(
+            s"$what longer than $max characters: \"${sb.substring(0, math.min(64, max))}...\"")
         sb.append((b & 0xFF).toChar)
       }
     }
@@ -322,8 +361,9 @@ private[streaming] final class ResponseReader(in: InputStream) {
     * previous chunk's payload. The terminal 0-length chunk ends the
     * body; its trailer is not read. */
   private def nextChunk(): Unit = {
-    var line = readLine(MaxSizeLine)
-    while (line != null && line.trim.isEmpty) line = readLine(MaxSizeLine)
+    def next() = readLine(MaxSizeLine, "HTTP chunk size line")
+    var line = next()
+    while (line != null && line.trim.isEmpty) line = next()
     if (line == null) ended = true
     else {
       // RFC 9112 §7.1: the size may carry chunk extensions (";ext")

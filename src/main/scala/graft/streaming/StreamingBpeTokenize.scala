@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.LongType
 
 /** Streaming BPE tokenization — t22's apply pass over a LIVE document

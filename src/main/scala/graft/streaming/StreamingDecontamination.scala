@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.LongType
 
 /** Streaming benchmark decontamination — the t16 overlap report over a

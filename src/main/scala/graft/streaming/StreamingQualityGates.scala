@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming quality gating — the t20 Gopher-rule report over a LIVE
   * document feed: quality filtering runs AT INGEST (tag/divert failing

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 /** Live conversion-latency tracking — the streaming twin of the batch
   * w13 query: for every user whose first purchase strictly follows

@@ -4,6 +4,12 @@ import graft.rtcm._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The specs' shared session. Unlike `graft.GraftSession` it loads no
+  * `GraftExtensions`, on purpose: `TopKRewriteSpec` builds its reference
+  * window plan with the rewrite rule absent, and `AsOfJoinSpec`'s
+  * "column pruning shrinks the merge node" is the only test of
+  * `AsOfJoin.ensureStrategy`'s self-heal path, which an extensions
+  * session would never take. */
 object SparkTestSession {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

@@ -88,7 +88,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("extracted features carry REAL header dimensions and durations") {
-    import spark.implicits._
     val df = Multimodal.extractFeatures(Multimodal.syntheticMedia(spark, sf)).toDF()
     // every image record: dims match the deterministic construction
     val imgs = df.filter(col("kind") === "image")

@@ -67,7 +67,7 @@ class CorpusSharderSpec extends AnyFunSuite {
       lo == sid * 10 + 1 && hi == lo + n - 1 })
     // each shard directory holds exactly ONE parquet file, sorted by
     // rank, with exactly the manifest's rank range
-    manifest.foreach { case (sid, n, lo, hi) =>
+    manifest.foreach { case (sid, _, lo, hi) =>
       val dir = new java.io.File(s"$out/shards/shard_id=$sid")
       val files = dir.listFiles().filter(_.getName.endsWith(".parquet"))
       assert(files.length == 1, s"shard $sid has ${files.length} files")

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.etl.SparkTestSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 /** DedupIndex: the persisted near-dup postings — planted cross-split
   * duplicates are found through the index, clean docs are not, and

@@ -7,20 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class ScaleTechniquesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  test("salted join equals the plain join on skewed data") {
-    import spark.implicits._
-    // 90% of big rows share one hot key
-    val big = (0 until 20000).map(i =>
-      (if (i % 10 == 0) s"k${i % 100}" else "HOT", i.toLong)).toDF("k", "v")
-    val small = (0 until 100).map(i => (s"k$i", s"dim$i")).toDF("k", "d")
-      .union(Seq(("HOT", "dimHot")).toDF("k", "d"))
-    val expected = big.join(small, "k")
-    val got = SaltedJoin.inner(big, small, "k", salts = 8)
-    assert(got.count() == expected.count())
-    assert(got.groupBy("k").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
-      expected.groupBy("k").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-  }
-
   test("grouped top-k aggregate equals the rank window, with a partial (map-side) agg") {
     import graft.functions.GraftFunctions
     import org.apache.spark.sql.expressions.Window

@@ -248,8 +248,7 @@ class SuffixArraySpec extends AnyFunSuite {
     val docs = graft.Tables.load(spark, sf, "documents").selectExpr("doc_id", "text")
     val inMem = GeneralizedSuffixArray.build(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(t => (t._1, t._2))
-    inMem // materialized before flipping the mode
+      .sortBy(t => (t._1, t._2)) // collected before flipping the mode
     val pinned = spark.newSession() // conf-isolated clone (Q.forcedBig idiom)
     pinned.conf.set("spark.graft.saCheckpointMinSuffixes", "1")
     val ckpt = GeneralizedSuffixArray.build(

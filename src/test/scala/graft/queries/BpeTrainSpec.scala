@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.etl.SparkTestSession
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hand-computed fixtures for t21 BPE merge induction: greedy
@@ -11,6 +13,20 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BpeTrainSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+
+  /** Compound-bigram (word, freq, syms) vocabulary of the documents
+    * table — deterministic, one corpus pass, ~|word-vocab|² rows. */
+  private def bigramVocab(spark: SparkSession, sfDir: String) =
+    graft.Tables.load(spark, sfDir, "documents")
+      .select(explode(expr(
+        "transform(sequence(1, size(split(text, ' ')) - 1), " +
+          "i -> concat(split(text, ' ')[i-1], '_', split(text, ' ')[i]))"))
+        .as("word"))
+      .filter(!col("word").startsWith("_") && !col("word").endsWith("_"))
+      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
+      .select(col("word"), col("freq"),
+        expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))")
+          .as("syms"))
 
   private def run(dir: String): Seq[(Long, String, String, Long)] =
     graft.SparkEntry.queries("t21_bpe_merges")(spark, dir)
@@ -40,7 +56,6 @@ class BpeTrainSpec extends AnyFunSuite {
   }
 
   test("persisted tokenizer apply == training inline and applying") {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.LongType
     import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("graft_t22").toString
@@ -101,8 +116,6 @@ class BpeTrainSpec extends AnyFunSuite {
   }
 
   test("incremental rounds match a driver recompute at R = 64") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
     // real sf data (30-word vocabulary, hundreds of merge rounds
     // available) — far past the R = 6 the unrolled CTE oracle covers,
     // so the delta maintenance (affected-word rewrite + pair-count
@@ -119,15 +132,13 @@ class BpeTrainSpec extends AnyFunSuite {
   }
 
   test("incremental rounds match a driver recompute at R = 1024 (compound vocab)") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
     // the sf word vocabulary (~30 words) exhausts after a few hundred
     // merges; the compound-bigram vocabulary (~900 words, ~8k initial
     // symbols) sustains 1024 rounds — the credible-R case for the
-    // delta maintenance (BpeTrace's bigram mode is the same vocab at
-    // sf10 for the BENCH_NOTES cost table)
+    // delta maintenance (the same vocab at sf10 gave the BENCH_NOTES
+    // cost table)
     val d = "/root/testdata/sf0.001"
-    val vocabDf = graft.tools.BpeTrace.bigramVocab(spark, d)
+    val vocabDf = bigramVocab(spark, d)
     val words = vocabDf.select(col("word"), col("freq"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     val expected = refBpe(words, 1024)

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.etl.SparkTestSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** s11 hybrid RRF fusion: the engine's fused ranking against a

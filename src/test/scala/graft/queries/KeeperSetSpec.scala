@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.etl.SparkTestSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** d07's bucket-sparsified candidate graph: linear edges per LSH

@@ -581,6 +581,55 @@ class NtripClientSpec extends AnyFunSuite {
     } finally server.close()
   }
 
+  test("a caster's header line cannot kill the reader: it reconnects and names the limit") {
+    def ascii(s: String) = s.getBytes(ISO_8859_1)
+    val frames = SyntheticRtcm.framesFor("MNT0", 101, 20, 65L).map(_._2)
+    val body = frames.flatten.toArray
+    // a header line one character past the bound, then a good stream
+    val junk = "X-Junk: " + "x" * (NtripClient.MaxResponseLine - 7)
+    val responses = Seq(
+      ascii(s"HTTP/1.1 200 OK\r\n$junk\r\n\r\n"),
+      ascii("HTTP/1.1 200 OK\r\n\r\n") ++ body)
+    val server = new ServerSocket(0)
+    try {
+      serveRaw(server, responses)
+      val stream = mkStream(server.getLocalPort)
+      try {
+        val got = drainAll(stream, 0L, body.length.toLong)
+        assert(got.flatMap(c => RtcmFraming.splitPacked(c.data)).map(_.toSeq) == frames.map(_.toSeq))
+        val m = stream.metrics(java.util.Optional.empty()).asScala.toMap
+        assert(m("MNT0.frames") == frames.size.toString, m)
+        assert(m("MNT0.reconnects") == "1", m)
+        assert(m("MNT0.lastReconnectCause") ==
+          "java.io.IOException: NTRIP response line (MaxResponseLine) longer than " +
+            s"${NtripClient.MaxResponseLine} characters: \"${junk.take(64)}...\"", m)
+      } finally stream.stop()
+    } finally server.close()
+  }
+
+  test("a header of too many lines and a sourcetable past its bounds throw naming the limit") {
+    def ascii(s: String) = s.getBytes(ISO_8859_1)
+    val ok = "HTTP/1.1 200 OK\r\n"
+    val record = "STR;" + "x" * 996 + "\r\n"
+    val responses = Seq(
+      ascii(ok + "X-A: b\r\n" * NtripClient.MaxHeaderLines + "\r\n"),
+      ascii(ok + "\r\nSTR;" + "x" * NtripClient.MaxResponseLine + "\r\n"),
+      ascii(ok + "\r\n" + record * (NtripClient.MaxSourceTableBytes / record.length + 1).toInt +
+        "ENDSOURCETABLE\r\n"))
+    val server = new ServerSocket(0)
+    try {
+      serveRaw(server, responses)
+      def refused() = intercept[java.io.IOException](
+        new NtripClient("127.0.0.1", server.getLocalPort).sourceTable()).getMessage
+      assert(refused() == s"NTRIP response header has more than ${NtripClient.MaxHeaderLines} " +
+        "lines (MaxHeaderLines)")
+      assert(refused().startsWith("NTRIP sourcetable line (MaxResponseLine) longer than " +
+        s"${NtripClient.MaxResponseLine} characters"))
+      assert(refused() == "NTRIP sourcetable longer than " +
+        s"${NtripClient.MaxSourceTableBytes} bytes (MaxSourceTableBytes)")
+    } finally server.close()
+  }
+
   private def ntripChunks(port: Int, mounts: String): org.apache.spark.sql.Dataset[RawChunk] = {
     import spark.implicits._
     spark.readStream.format("graft.streaming.NtripSourceProvider")

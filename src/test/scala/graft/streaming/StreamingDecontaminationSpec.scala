@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import graft.etl.SparkTestSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
