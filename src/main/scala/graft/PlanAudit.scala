@@ -334,9 +334,11 @@ object PlanAudit {
 
     // d14 suffix-array repeats: the LCP stage must stay equi-join-only
     // (rank adjacency + the two text fetches — a cartesian or nested
-    // loop means candidates degenerated to all-pairs), and the exact
-    // compare must run through the codegen prefix kernel
+    // loop means candidates degenerated to all-pairs), the exact
+    // compare must run through the codegen prefix kernel, and the rank
+    // adjacency is the visible OrderedScan node, not an RDD escape
     audit("d14_longest_dup_substrings")(
+      "rank adjacency planned as the OrderedScan node" -> (_.contains("OrderedScan")),
       "LCP stage equi-join only (no cartesian / nested loop)" -> simpleOnly(s => {
         val fin = s.split("== Initial Plan ==").head
         !fin.contains("CartesianProduct") && !fin.contains("BroadcastNestedLoop")
@@ -362,8 +364,8 @@ object PlanAudit {
 
     // d16 exact decontamination: the visible plan is the span-merge +
     // eval-doc report (the SA + directional scans are materialized
-    // behind the spans parquet handoff; the scans themselves are the
-    // denseRank two-pass shape, never a Window) — one doc-keyed
+    // behind the spans parquet handoff; the scans are OrderedScan
+    // nodes, pinned by OrderedScanSpec, never a Window) — one doc-keyed
     // aggregate + one doc-keyed outer equi join, no cartesian, and
     // the eval-split filter must reach the parquet scan
     audit("d16_exact_decontamination")(

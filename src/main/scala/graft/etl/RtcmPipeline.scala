@@ -2,7 +2,7 @@ package graft.etl
 
 import graft.plans.{DecodeFrames, DecodeFramesStrategy}
 import graft.rtcm._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.graftshim.PlanDataFrame
 import org.apache.spark.sql.functions._
 
@@ -223,20 +223,11 @@ object RtcmPipeline {
   def decode(frames: Dataset[EncodedFrame]): Dataset[DecodedFrame] = {
     val spark = frames.sparkSession
     import spark.implicits._
-    ensureDecodeStrategy(spark)
+    graft.functions.GraftExtensions.ensureStrategy(spark, DecodeFramesStrategy)
     val child = frames.select(col("mountPoint"), col("receiveMicros"), col("frame"))
     PlanDataFrame.ofRows(spark, DecodeFrames.over(child.queryExecution.analyzed))
       .as[DecodedFrame]
   }
-
-  /** Make [[graft.plans.DecodeFrames]] plannable in `spark`'s session
-    * even if GraftExtensions wasn't installed (as `AsOfJoin` does). */
-  private def ensureDecodeStrategy(spark: SparkSession): Unit =
-    spark.synchronized {
-      if (!spark.experimental.extraStrategies.contains(DecodeFramesStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ DecodeFramesStrategy
-    }
 
   /** `rtcm_packages` projection (initdb/01-rtcm_packages.sql). */
   def packages(decoded: Dataset[DecodedFrame]): DataFrame =

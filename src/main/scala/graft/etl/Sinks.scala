@@ -52,23 +52,6 @@ object Sinks {
   def reconnectUpdateSql(table: String): String =
     s"UPDATE $table SET reconnect_time = ? WHERE id = ?"
 
-  /** Statement plan for one micro-batch of the decoded stream: which
-    * statement each output table gets (the foreachBatch body executes
-    * these over JDBC; parquet mode in RtcmStreaming is the test
-    * stand-in). */
-  def batchStatementPlan(batchRows: Map[String, Int]): Seq[(String, String)] =
-    batchRows.toSeq.sortBy(_._1).flatMap {
-      case ("rtcm_packages", n) if n > 0 =>
-        Seq("rtcm_packages" ->
-          insertSql("rtcm_packages", PackagesColumns, math.min(n, BatchRows)))
-      case ("observations", n) if n > 0 =>
-        Seq("observations" ->
-          insertSql("observations", ObservationsColumns, math.min(n, BatchRows)))
-      case ("coordinates", n) if n > 0 =>
-        Seq("coordinates" -> upsertSql("coordinates", CoordinatesColumns, Seq("mountpoint")))
-      case _ => Nil
-    }
-
   /** How a batch obtains its JDBC connections. Serializable so the
     * append path can open one connection PER PARTITION on executors;
     * a DriverManager-URL factory is the production impl, a recording

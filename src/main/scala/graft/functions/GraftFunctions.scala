@@ -181,5 +181,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // per-frame RTCM decode node (etl.RtcmPipeline.decode also
     // self-heals this into extraStrategies)
     ext.injectPlannerStrategy(_ => graft.plans.DecodeFramesStrategy)
+    // two-pass ordered scan node (plans.OrderedScan.over also
+    // self-heals this into extraStrategies)
+    ext.injectPlannerStrategy(_ => graft.plans.OrderedScanStrategy)
+  }
+}
+
+object GraftExtensions {
+  /** Make `strategy` plannable in `spark`'s session even if
+    * GraftExtensions wasn't installed (extraStrategies is the public
+    * per-session hook). */
+  def ensureStrategy(spark: SparkSession, strategy: org.apache.spark.sql.execution.SparkStrategy)
+      : Unit = spark.synchronized {
+    if (!spark.experimental.extraStrategies.contains(strategy))
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ strategy
   }
 }

@@ -46,4 +46,23 @@ object ArtifactDir {
       key.getBytes("UTF-8").foldLeft(1469598103934665603L)((a, b) => a * 1000003L + (b & 0xFF)))
     new java.io.File(System.getProperty("java.io.tmpdir"), s"graft_${prefix}_$h").getAbsolutePath
   }
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Deletes `p` and everything under it, closing every directory
+    * stream it opens. Never throws — it runs in `finally` blocks and
+    * shutdown hooks, where a throw would mask the exception in flight —
+    * and logs each path it could not delete at WARN instead. */
+  def deleteTree(p: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, LinkOption}
+    try {
+      if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) {
+        val ls = Files.list(p)
+        try ls.forEach(deleteTree(_)) finally ls.close()
+      }
+      Files.deleteIfExists(p): Unit
+    } catch {
+      case scala.util.control.NonFatal(e) => log.warn(s"could not delete $p", e)
+    }
+  }
 }

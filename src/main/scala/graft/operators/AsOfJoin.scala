@@ -31,14 +31,10 @@ import org.apache.spark.sql.types.LongType
 object AsOfJoin {
 
   /** Make [[AsOfMergeLogical]] plannable in `spark`'s session even if
-    * GraftExtensions wasn't installed: extraStrategies is the public
-    * per-session strategy hook, and adding the same object twice is
-    * harmless but avoided. */
+    * GraftExtensions wasn't installed. */
   private def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.synchronized {
-      if (!spark.experimental.extraStrategies.contains(AsOfMergeStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ AsOfMergeStrategy
+      graft.functions.GraftExtensions.ensureStrategy(spark, AsOfMergeStrategy)
       // best-effort pruning for extension-less sessions too: in the
       // post-hoc batch it still shrinks the shuffle/sort width (the
       // scan-level pushdown needs the injectOptimizerRule path)

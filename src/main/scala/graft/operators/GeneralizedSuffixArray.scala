@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import graft.plans.{OrderedScan, ScanKernel, TwoPassKernel}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed GENERALIZED suffix array over the document corpus —
   * prefix doubling (Manber–Myers, the construction every published
@@ -101,111 +105,101 @@ object GeneralizedSuffixArray {
   /** Bootstrap ranking: every suffix ranked by its 32-code-point
     * prefix in ONE range exchange, emitting per suffix
     * (pk, rank32 = DENSE rank, rank = POSITION rank, tied). Exact for
-    * any partitioning: boundary-spanning key groups are merged in the
-    * driver scan (≤ |partitions| rows of driver state — first/last
-    * key, distinct count, row count, last group's local start, from
-    * which the driver derives each partition's dense offset, row
+    * any partitioning: a two-pass [[OrderedScan]] whose summaries
+    * (first/last key, distinct count, row count, last group's local
+    * start) let the driver derive each partition's dense offset, row
     * start, carried-in group head, and whether its first/last rows
-    * continue a neighbouring partition's group). Returns (rows, the
-    * cached range-sorted frame backing them — the caller unpersists
-    * it once the rows are materialized). */
-  private[operators] def bootstrapRank(df: DataFrame): (DataFrame, DataFrame) = {
-    val s = df.sparkSession
-    val parts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // repartitionByRange SAMPLES its input to pick boundaries — a full
-    // extra evaluation of the explode+substring projection. A
-    // bootstrap-lifetime cache makes the sampling pass the one real
-    // evaluation; it is retired by the stats collect below.
-    val input = df.select(col("p32"), col("pk")).cache()
-    val ordered = input
-      .repartitionByRange(parts, col("p32"))
-      .sortWithinPartitions(col("p32"))
-      .cache()
-    // (pid, firstKey, lastKey, nDistinct, rowCount, lastGroupStartIdx)
-    val stats: Array[(Int, String, String, Long, Long, Long)] =
-      ordered.rdd.mapPartitionsWithIndex { (pid, it) =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          var first: String = null
-          var prev: String = null
-          var nd = 0L
-          var cnt = 0L
-          var lastStart = 0L
-          it.foreach { r =>
-            val k = r.getString(0)
-            if (first == null) first = k
-            if (prev == null || k != prev) { nd += 1; lastStart = cnt; prev = k }
-            cnt += 1
-          }
-          Iterator((pid, first, prev, nd, cnt, lastStart))
+    * continue a neighbouring partition's group — ≤ |partitions| rows
+    * of driver state. */
+  private[operators] def bootstrapRank(df: DataFrame): DataFrame =
+    OrderedScan.over(df.select(col("p32"), col("pk")), Seq("p32"), Bootstrap,
+      rankSchema("pk", "rank32", "rank"))
+
+  /** Non-null long columns, then the non-null boolean `tied`. */
+  private def rankSchema(longs: String*): StructType =
+    OrderedScan.longs(longs: _*).add(StructField("tied", BooleanType, nullable = false))
+
+  private def write(out: UnsafeRowWriter, pk: Long, a: Long, b: Long, tied: Boolean)
+      : InternalRow = {
+    out.reset()
+    out.write(0, pk); out.write(1, a); out.write(2, b); out.write(3, tied)
+    out.getRow
+  }
+
+  /** Summary: (firstKey, lastKey, nDistinct, rowCount,
+    * lastGroupStartIdx); carry: (denseOff, rowStart, headFirst,
+    * contFirst, contLast). */
+  private case object Bootstrap
+      extends TwoPassKernel[(String, String, Long, Long, Long),
+        (Long, Long, Long, Boolean, Boolean)] {
+    def summarize(rows: Iterator[InternalRow]): (String, String, Long, Long, Long) = {
+      var first: UTF8String = null
+      var prev: UTF8String = null
+      var nd = 0L
+      var cnt = 0L
+      var lastStart = 0L
+      rows.foreach { r =>
+        val k = r.getUTF8String(0)
+        if (prev == null || k != prev) {
+          nd += 1; lastStart = cnt; prev = k.clone()
+          if (first == null) first = prev
         }
-      }.collect().sortBy(_._1)
-    input.unpersist()
-    // driver composition: dense offsets (merging boundary-spanning
-    // groups), row starts, and the carried-in group head per partition
-    var denseRun = 0L
-    var rowRun = 0L
-    var prevLast: String = null
-    var carryHead = -1L
-    val infos = new Array[(Int, Long, Long, Long, Boolean, Boolean)](stats.length)
-    var j = 0
-    while (j < stats.length) {
-      val (pid, first, last, nd, cnt, lastStart) = stats(j)
-      val contFirst = prevLast != null && first == prevLast
-      val denseOff = if (contFirst) denseRun - 1 else denseRun
-      val headFirst = if (contFirst) carryHead else -1L
-      val contLast = j + 1 < stats.length && stats(j + 1)._2 == last
-      carryHead = if (nd == 1 && contFirst) carryHead else rowRun + lastStart
-      infos(j) = (pid, denseOff, rowRun, headFirst, contFirst, contLast)
-      denseRun = denseOff + nd
-      rowRun += cnt
-      prevLast = last
-      j += 1
+        cnt += 1
+      }
+      (first.toString, prev.toString, nd, cnt, lastStart)
     }
-    val bc = s.sparkContext.broadcast(
-      infos.map(i => i._1 -> ((i._2, i._3, i._4, i._5, i._6))).toMap)
-    val outRdd = ordered.rdd.mapPartitionsWithIndex { (pid, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val (denseOff, rowStart, headFirst, contFirst, contLast) = bc.value(pid)
-        var dense = denseOff - 1
-        var pos = rowStart - 1
-        var head = -1L
-        var prevKey: String = null
-        // one-row delay so each emitted row knows whether its SUCCESSOR
-        // shares its key (tied = same key as prev OR next, with the
-        // partition-boundary continuations from the driver scan)
-        var pPk = 0L; var pDense = 0L; var pHead = 0L; var pTied = false
-        var hasPend = false
-        (it.map(Option(_)) ++ Iterator(None)).flatMap {
-          case Some(r) =>
-            val k = r.getString(0)
-            val pk = r.getLong(1)
-            pos += 1
-            val sameAsPrev = if (prevKey == null) contFirst else k == prevKey
-            if (prevKey == null) {
-              dense += 1 // denseOff was pre-adjusted for a continuation
-              head = if (contFirst) headFirst else pos
-            } else if (k != prevKey) { dense += 1; head = pos }
-            val res =
-              if (hasPend) Some(Row(pPk, pDense, pHead, pTied || sameAsPrev))
-              else None
-            pPk = pk; pDense = dense; pHead = head; pTied = sameAsPrev
-            hasPend = true
-            prevKey = k
-            res
-          case None =>
-            if (hasPend) Some(Row(pPk, pDense, pHead, pTied || contLast))
-            else None
-        }
+
+    // dense offsets (merging boundary-spanning groups), row starts, and
+    // the carried-in group head per partition
+    def compose(stats: IndexedSeq[(String, String, Long, Long, Long)])
+        : IndexedSeq[(Long, Long, Long, Boolean, Boolean)] = {
+      var denseRun = 0L
+      var rowRun = 0L
+      var prevLast: String = null
+      var carryHead = -1L
+      stats.indices.map { j =>
+        val (first, last, nd, cnt, lastStart) = stats(j)
+        val contFirst = prevLast != null && first == prevLast
+        val denseOff = if (contFirst) denseRun - 1 else denseRun
+        val headFirst = if (contFirst) carryHead else -1L
+        val contLast = j + 1 < stats.length && stats(j + 1)._1 == last
+        val info = (denseOff, rowRun, headFirst, contFirst, contLast)
+        carryHead = if (nd == 1 && contFirst) carryHead else rowRun + lastStart
+        denseRun = denseOff + nd
+        rowRun += cnt
+        prevLast = last
+        info
       }
     }
-    val schema = StructType(Seq(
-      StructField("pk", LongType, nullable = false),
-      StructField("rank32", LongType, nullable = false),
-      StructField("rank", LongType, nullable = false),
-      StructField("tied", BooleanType, nullable = false)))
-    (s.createDataFrame(outRdd, schema), ordered)
+
+    def emit(carry: (Long, Long, Long, Boolean, Boolean), rows: Iterator[InternalRow],
+             out: UnsafeRowWriter): Iterator[InternalRow] = {
+      val (denseOff, rowStart, headFirst, contFirst, contLast) = carry
+      var dense = denseOff - 1
+      var pos = rowStart - 1
+      var head = -1L
+      var prevKey: UTF8String = null
+      // one-row delay so each emitted row knows whether its SUCCESSOR
+      // shares its key (tied = same key as prev OR next, with the
+      // partition-boundary continuations from the driver scan)
+      var pPk = 0L; var pDense = 0L; var pHead = 0L; var pTied = false
+      var hasPend = false
+      rows.flatMap { r =>
+        val k = r.getUTF8String(0)
+        pos += 1
+        val sameAsPrev = if (prevKey == null) contFirst else k == prevKey
+        if (prevKey == null) {
+          dense += 1 // denseOff was pre-adjusted for a continuation
+          head = if (contFirst) headFirst else pos
+        } else if (!sameAsPrev) { dense += 1; head = pos }
+        val res =
+          if (hasPend) Some(write(out, pPk, pDense, pHead, pTied || sameAsPrev)) else None
+        pPk = r.getLong(1); pDense = dense; pHead = head; pTied = sameAsPrev
+        hasPend = true
+        if (prevKey == null || !sameAsPrev) prevKey = k.clone()
+        res
+      } ++ (if (hasPend) Some(write(out, pPk, pDense, pHead, pTied || contLast)) else None)
+    }
   }
 
   /** One tail-round refinement over the LIVE rows only: `paired` =
@@ -218,47 +212,37 @@ object GeneralizedSuffixArray {
     * index where its rank2 subgroup starts), which preserves the
     * position-rank invariant without touching any settled row. Emits
     * (pk, rank, rank32, tied) where tied = the row's (rank, rank2)
-    * subgroup still has ≥ 2 members. One hash exchange over live rows
-    * only, no driver state, no per-class buffering (a one-row delay
-    * computes the tied flag), so a pathological giant class costs
-    * sort time, not memory. rank32 riding the (small) live rows is
-    * what lets the build skip the corpus-sized final join the
-    * classical form paid to re-attach the snapshot. */
-  private[operators] def refineRound(paired: DataFrame): DataFrame = {
-    val s = paired.sparkSession
-    val parts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val ordered = paired
-      .select(col("pk").cast(LongType), col("rank").cast(LongType),
-        col("rank2").cast(LongType), col("rank32").cast(LongType))
-      .repartition(parts, col("rank"))
-      .sortWithinPartitions(col("rank"), col("rank2"))
-    val outRdd = ordered.rdd.mapPartitions { it =>
+    * subgroup still has ≥ 2 members. A single-pass [[OrderedScan]]
+    * clustered on rank: one hash exchange over live rows only, no
+    * driver state, no per-class buffering (a one-row delay computes
+    * the tied flag), so a pathological giant class costs sort time,
+    * not memory. rank32 riding the (small) live rows is what lets the
+    * build skip the corpus-sized final join the classical form paid to
+    * re-attach the snapshot. */
+  private[operators] def refineRound(paired: DataFrame): DataFrame =
+    OrderedScan.over(paired.select(col("pk").cast(LongType), col("rank").cast(LongType),
+      col("rank2").cast(LongType), col("rank32").cast(LongType)),
+      Seq("rank", "rank2"), Refine, rankSchema("pk", "rank", "rank32"), clusterBy = Seq("rank"))
+
+  private case object Refine extends ScanKernel[Unit] {
+    def emit(carry: Unit, rows: Iterator[InternalRow], out: UnsafeRowWriter)
+        : Iterator[InternalRow] = {
       var prevR = 0L; var prevR2 = 0L; var hasPrev = false
       var idx = 0L; var subHead = 0L
       var pPk = 0L; var pRank = 0L; var p32 = 0L; var pTied = false
       var hasPend = false
-      (it.map(Option(_)) ++ Iterator(None)).flatMap {
-        case Some(r) =>
-          val pk = r.getLong(0); val rk = r.getLong(1); val r2 = r.getLong(2)
-          if (!hasPrev || rk != prevR) { idx = 0L; subHead = rk }
-          else if (r2 != prevR2) { subHead = rk + idx }
-          val same = hasPrev && rk == prevR && r2 == prevR2
-          val res =
-            if (hasPend) Some(Row(pPk, pRank, p32, pTied || same)) else None
-          pPk = pk; pRank = subHead; p32 = r.getLong(3); pTied = same
-          hasPend = true
-          idx += 1; prevR = rk; prevR2 = r2; hasPrev = true
-          res
-        case None =>
-          if (hasPend) Some(Row(pPk, pRank, p32, pTied)) else None
-      }
+      rows.flatMap { r =>
+        val rk = r.getLong(1); val r2 = r.getLong(2)
+        if (!hasPrev || rk != prevR) { idx = 0L; subHead = rk }
+        else if (r2 != prevR2) { subHead = rk + idx }
+        val same = hasPrev && rk == prevR && r2 == prevR2
+        val res = if (hasPend) Some(write(out, pPk, pRank, p32, pTied || same)) else None
+        pPk = r.getLong(0); pRank = subHead; p32 = r.getLong(3); pTied = same
+        hasPend = true
+        idx += 1; prevR = rk; prevR2 = r2; hasPrev = true
+        res
+      } ++ (if (hasPend) Some(write(out, pPk, pRank, p32, pTied)) else None)
     }
-    val schema = StructType(Seq(
-      StructField("pk", LongType, nullable = false),
-      StructField("rank", LongType, nullable = false),
-      StructField("rank32", LongType, nullable = false),
-      StructField("tied", BooleanType, nullable = false)))
-    s.createDataFrame(outRdd, schema)
   }
 
   /** Suffix-count threshold above which [[build]] switches to the
@@ -345,6 +329,11 @@ object GeneralizedSuffixArray {
       col("text"), posexplode(split(col("text"), "")).as(Seq("off", "ch")))
       .select(expr("substring(text, off + 1, 32)").as("p32"),
         (shiftleft(col("doc_id"), 32) + col("off").cast(LongType)).as("pk"))
+      // the bootstrap's range exchange SAMPLES its input to pick
+      // boundaries — a full extra evaluation of the explode+substring
+      // projection; this cache makes the sampling pass the one real
+      // evaluation, and is retired once the bootstrap has landed
+      .cache()
     val ckpt = n >= s.conf.getOption("spark.graft.saCheckpointMinSuffixes")
       .map(_.toLong).getOrElse(CkptMinSuffixesDefault)
     val bloomMax = s.conf.getOption("spark.graft.saBloomMaxLiveSuffixes")
@@ -352,24 +341,24 @@ object GeneralizedSuffixArray {
     val tmpRoot: java.nio.file.Path =
       if (ckpt) {
         val p = java.nio.file.Files.createTempDirectory("graft_sa_")
-        sys.addShutdownHook(deleteRecursively(p.toFile)) // session-lifetime
+        sys.addShutdownHook(ArtifactDir.deleteTree(p)) // session-lifetime
         p
       } else null
     val caches = scala.collection.mutable.ListBuffer.empty[DataFrame]
 
     // ---- bootstrap: one range exchange → (pk, rank32, rank, tied)
-    val (bootRaw, bootOrdered) = bootstrapRank(chars)
+    val bootRaw = bootstrapRank(chars)
     val boot: DataFrame =
       if (ckpt) {
         val dir = tmpRoot.resolve("boot").toString
         bootRaw.write.mode("overwrite").parquet(dir)
-        bootOrdered.unpersist()
+        chars.unpersist()
         System.gc()
         s.read.parquet(dir)
       } else {
         val b = bootRaw.cache()
         b.count(): Unit
-        bootOrdered.unpersist()
+        chars.unpersist()
         caches += b
         b
       }
@@ -425,7 +414,7 @@ object GeneralizedSuffixArray {
           settled.map(_.withColumn("tied", lit(false)))
             .reduce(_.unionByName(_)).unionByName(out)
             .write.mode("overwrite").parquet(cdir)
-          roundDirs.foreach(d => deleteRecursively(new java.io.File(d)))
+          roundDirs.foreach(d => ArtifactDir.deleteTree(java.nio.file.Paths.get(d)))
           roundDirs = List(cdir)
           System.gc()
           val read = s.read.parquet(cdir)
@@ -482,10 +471,10 @@ object GeneralizedSuffixArray {
       val resDir = resultDir.getOrElse(tmpRoot.resolve("result").toString)
       joined.write.mode("overwrite").parquet(resDir)
       (tmpRoot.resolve("boot").toString :: roundDirs)
-        .foreach(d => deleteRecursively(new java.io.File(d)))
+        .foreach(d => ArtifactDir.deleteTree(java.nio.file.Paths.get(d)))
       // caller-owned result ⇒ nothing of the build remains in the
       // temp root; reclaim it now instead of at JVM shutdown
-      if (resultDir.isDefined) deleteRecursively(tmpRoot.toFile)
+      if (resultDir.isDefined) ArtifactDir.deleteTree(tmpRoot)
       System.gc()
       s.read.parquet(resDir)
     } else resultDir match {
@@ -502,11 +491,5 @@ object GeneralizedSuffixArray {
         caches.foreach(_.unpersist())
         result
     }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val cs = f.listFiles()
-    if (cs != null) cs.foreach(deleteRecursively)
-    f.delete(): Unit
   }
 }

@@ -1,8 +1,13 @@
 package graft.operators
 
+import graft.operators.GatedMinScan.{Inf, NoTrain}
+import graft.plans.{OrderedScan, TwoPassKernel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Persisted GENERALIZED suffix array — the build-once / derive-many
   * operating mode of the SA family (the s06/t19/d13/t26 pattern): a
@@ -93,11 +98,12 @@ object SuffixArrayIndex {
     * scan-side-filtered read of the [[ensureProbeSidecar]] column set,
     * the batch side to hashes the corpus actually contains. The
     * pruned union of capped suffix prefixes is then totally ordered
-    * (the denseRank two-pass — UTF8String binary order IS code-point
-    * order), adjacent-boundary LCPs run through the codegen
-    * CommonPrefixLen kernel, and the two directional [[GatedMinScan]]
-    * passes (reset on corpus rows, emit batch rows) yield for every
-    * batch suffix the longest prefix it shares with ANY corpus suffix.
+    * (UTF8String binary order IS code-point order) and scanned by ONE
+    * two-pass [[graft.plans.OrderedScan]] ([[prunedUnionSpans]]):
+    * adjacent-boundary LCPs run through the CommonPrefixLen kernel,
+    * and both gated-min directions (reset on corpus rows, emit batch
+    * rows) yield for every batch suffix the longest prefix it shares
+    * with ANY corpus suffix.
     *
     * Exactness under the pruning: a hash join has no false negatives,
     * so any batch suffix with a true ≥32 match keeps its achiever in
@@ -117,8 +123,8 @@ object SuffixArrayIndex {
     * everything downstream is proportional to the pruned union
     * (batch suffixes + their corpus hash-mates). The one-off sidecar
     * construction is a single corpus pass charged like any index
-    * build. Driver state: the two-pass stats and scan summaries
-    * (≤ |partitions| rows each) plus nothing batch- or corpus-sized. */
+    * build. Driver state: the scan's per-partition summaries
+    * (≤ |partitions| rows) plus nothing batch- or corpus-sized. */
   def probe(s: SparkSession, sfDir: String, batch: DataFrame,
             spansDir: String, sidecarOverride: Option[DataFrame] = None): DataFrame = {
     val sidecar = sidecarOverride.getOrElse {
@@ -181,204 +187,155 @@ object SuffixArrayIndex {
         (when(col("train"), lit(1L)).otherwise(lit(0L)) * lit(1L << 61) +
           shiftleft(col("doc_id"), 30) + col("off")).as("pk"))
       .cache()
-    val (spans, orderedCache) = prunedUnionSpans(u)
-    spans.write.mode("overwrite").parquet(spansDir)
-    Seq(orderedCache, u, bs).foreach(_.unpersist())
+    prunedUnionSpans(u).write.mode("overwrite").parquet(spansDir)
+    Seq(u, bs).foreach(_.unpersist())
     s.read.parquet(spansDir)
   }
 
   /** Fused bidirectional gated-min scan over the pruned union in
     * (pref, pk) order — ONE range exchange, one bounded summaries
-    * collect, one emit pass (optimization round 17). This replaces
-    * the former chain (denseRank two-pass + adjacent-boundary LCP
-    * join + two directional [[GatedMinScan]] passes + the union
-    * merge: four exchanges, two joins and six passes over the union)
-    * with exactly the same arithmetic: rows totally ordered by
-    * (pref, pk) — pk unique, UTF8String binary order = code-point
-    * order — adjacent-boundary LCPs through the SAME
-    * [[graft.functions.CommonPrefixLen]] byte kernel, state resets to
-    * ∞ on corpus rows, gated min along boundary LCPs on batch rows,
-    * absent boundaries at the two ends of the total order count 0,
-    * per-row max of the two directions, ≥ 32 emitted as
+    * collect, one emit pass (a two-pass [[OrderedScan]]; optimization
+    * round 17). This replaces the former chain (dense-rank two-pass +
+    * adjacent-boundary LCP join + two directional [[GatedMinScan]]
+    * passes + the union merge: four exchanges, two joins and six
+    * passes over the union) with exactly the same arithmetic: rows
+    * totally ordered by (pref, pk) — pk unique, UTF8String binary
+    * order = code-point order — adjacent-boundary LCPs through the
+    * SAME [[graft.functions.CommonPrefixLen]] byte kernel, state
+    * resets to ∞ on corpus rows, gated min along boundary LCPs on
+    * batch rows, absent boundaries at the two ends of the total order
+    * count 0, per-row max of the two directions, ≥ 32 emitted as
     * (doc_id, st, en). Driver state: one summary row per partition
     * (two ≤2048-code-point boundary prefixes + the directional state
-    * composition) — the denseRank two-pass bound, unchanged.
-    * Returns (spans, the cached range-sorted frame backing them —
-    * caller unpersists after materializing downstream). */
-  private[operators] def prunedUnionSpans(u: DataFrame): (DataFrame, DataFrame) = {
-    import org.apache.spark.unsafe.types.UTF8String
-    val s = u.sparkSession
-    val parts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val NoTrain = -1L
-    val Inf = Long.MaxValue
-    def cp(a: UTF8String, b: UTF8String): Long =
-      graft.functions.CommonPrefixLen.compute(a, b)
-    val ordered = u
-      .select(col("pref"), col("pk"), col("train"),
-        col("doc_id").cast(org.apache.spark.sql.types.LongType),
-        col("off").cast(org.apache.spark.sql.types.LongType))
-      .repartitionByRange(parts, col("pref"), col("pk"))
-      .sortWithinPartitions(col("pref"), col("pk"))
-      .cache()
-    // pass 1: per-partition (firstPref, lastPref, sawTrain,
-    //   outF = state after the last reset scanning forward (valid iff
-    //   sawTrain; the unknown first-row boundary LCP never enters it),
-    //   outB = the backward mirror (valid iff sawTrain; the unknown
-    //   last-row boundary never enters it),
-    //   minLocal = min of the known internal boundary LCPs — the
-    //   no-reset pass-through term, identical for both directions)
-    val summ: Array[(Int, String, String, Boolean, Long, Long, Long)] =
-      ordered.rdd.mapPartitionsWithIndex { (pid, it) =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          var prevPref: UTF8String = null
-          var sawTrain = false
-          var outF = Inf // state after the last train row (forward)
-          var minLocal = Inf
-          var outB = Inf // min of internal lcps BEFORE the first train
-          var beforeFirstTrain = true
-          var firstPref: String = null
-          var lastPref: String = null
-          it.foreach { r =>
-            val p = UTF8String.fromString(r.getString(0))
-            if (firstPref == null) firstPref = p.toString
-            val train = r.getBoolean(2)
-            if (prevPref != null) {
-              val l = cp(prevPref, p)
-              minLocal = math.min(minLocal, l)
-              if (!train) outF = math.min(outF, l)
-              if (beforeFirstTrain) outB = math.min(outB, l)
-            }
-            if (train) {
-              sawTrain = true
-              outF = Inf
-              beforeFirstTrain = false
-            }
-            prevPref = p
-          }
-          lastPref = prevPref.toString
-          Iterator((pid, firstPref, lastPref, sawTrain, outF, outB, minLocal))
+    * composition). */
+  private[operators] def prunedUnionSpans(u: DataFrame): DataFrame = {
+    // a LOUD per-partition row bound on pass 2's buffer: the batch
+    // side is capped by the probe's broadcast guard, but the
+    // corpus-survivor side is not bounded per h32 (a boilerplate
+    // 32-prefix can match arbitrarily many sidecar rows), so a skewed
+    // partition fails fast with the remedy named instead of OOMing the
+    // executor. Override via `spark.graft.saProbeMaxPartitionRows`.
+    val maxPartRows = u.sparkSession.conf.getOption("spark.graft.saProbeMaxPartitionRows")
+      .map(_.toInt).getOrElse(1 << 24)
+    OrderedScan.over(u.select(col("pref"), col("pk"), col("train"),
+        col("doc_id").cast(LongType), col("off").cast(LongType)),
+      Seq("pref", "pk"), ProbeScan(maxPartRows),
+      OrderedScan.longs("doc_id", "st", "en"))
+  }
+
+  private def cp(a: UTF8String, b: UTF8String): Long =
+    graft.functions.CommonPrefixLen.compute(a, b)
+
+  /** Summary: (firstPref, lastPref, sawTrain,
+    *   outF = state after the last reset scanning forward (valid iff
+    *   sawTrain; the unknown first-row boundary LCP never enters it),
+    *   outB = the backward mirror (valid iff sawTrain; the unknown
+    *   last-row boundary never enters it),
+    *   minLocal = min of the known internal boundary LCPs — the
+    *   no-reset pass-through term, identical for both directions).
+    * Carry: (incoming forward state, incoming backward state, LCP to
+    * the previous partition's last row, LCP to the next partition's
+    * first row); the two ends of the total order have no boundary
+    * (lcp 0). */
+  private final case class ProbeScan(maxPartRows: Int)
+      extends TwoPassKernel[(String, String, Boolean, Long, Long, Long),
+        (Long, Long, Long, Long)] {
+    def summarize(rows: Iterator[InternalRow]): (String, String, Boolean, Long, Long, Long) = {
+      var first: UTF8String = null
+      var prevPref: UTF8String = null
+      var sawTrain = false
+      var outF = Inf // state after the last train row (forward)
+      var minLocal = Inf
+      var outB = Inf // min of internal lcps BEFORE the first train
+      rows.foreach { r =>
+        val p = r.getUTF8String(0)
+        val train = r.getBoolean(2)
+        if (prevPref != null) {
+          val l = cp(prevPref, p)
+          minLocal = math.min(minLocal, l)
+          if (!train) outF = math.min(outF, l)
+          if (!sawTrain) outB = math.min(outB, l)
         }
-      }.collect().sortBy(_._1)
-    // driver composition: boundary LCPs between adjacent non-empty
-    // partitions + incoming gated-min state per partition per
-    // direction; the two ends of the total order have no boundary
-    // (lcp 0 — the former na.fill semantics)
-    val n = summ.length
-    val bndIn = new Array[Long](n) // lcp(last of p-1, first of p); [0]=0
-    var i = 1
-    while (i < n) {
-      bndIn(i) = cp(UTF8String.fromString(summ(i - 1)._3),
-        UTF8String.fromString(summ(i)._2))
-      i += 1
+        if (train) { sawTrain = true; outF = Inf }
+        prevPref = p.clone() // the sorted input reuses its row buffer
+        if (first == null) first = prevPref
+      }
+      (first.toString, prevPref.toString, sawTrain, outF, outB, minLocal)
     }
-    val inF = new Array[Long](n)
-    var st = NoTrain
-    i = 0
-    while (i < n) {
-      inF(i) = st
-      val (_, _, _, sawTrain, outF, _, minLocal) = summ(i)
-      st =
-        if (sawTrain) outF
-        else if (st == NoTrain) NoTrain
-        else math.min(st, math.min(bndIn(i), minLocal))
-      i += 1
+
+    def compose(summ: IndexedSeq[(String, String, Boolean, Long, Long, Long)])
+        : IndexedSeq[(Long, Long, Long, Long)] = {
+      val n = summ.length
+      // lcp(last row of partition j-1, first row of j); none before the first
+      val bndIn = (0 until n).map(j => if (j == 0) 0L
+        else cp(UTF8String.fromString(summ(j - 1)._2), UTF8String.fromString(summ(j)._1)))
+      def bndOut(j: Int): Long = if (j + 1 < n) bndIn(j + 1) else 0L
+      val inF = (0 until n).scanLeft(NoTrain) { (st, j) => val (_, _, t, outF, _, minLocal) = summ(j)
+        GatedMinScan.step(st, t, if (t) outF else math.min(bndIn(j), minLocal)) }
+      val inB = (0 until n).scanRight(NoTrain) { (j, st) => val (_, _, t, _, outB, minLocal) = summ(j)
+        GatedMinScan.step(st, t, if (t) outB else math.min(bndOut(j), minLocal)) }
+      (0 until n).map(j => (inF(j), inB(j + 1), bndIn(j), bndOut(j)))
     }
-    val inB = new Array[Long](n)
-    st = NoTrain
-    i = n - 1
-    while (i >= 0) {
-      inB(i) = st
-      val (_, _, _, sawTrain, _, outB, minLocal) = summ(i)
-      val bOut = if (i + 1 < n) bndIn(i + 1) else 0L
-      st =
-        if (sawTrain) outB
-        else if (st == NoTrain) NoTrain
-        else math.min(st, math.min(bOut, minLocal))
-      i -= 1
-    }
-    val states: Map[Int, (Long, Long, Long, Long)] = summ.indices.map { j =>
-      val pid = summ(j)._1
-      val bOut = if (j + 1 < n) bndIn(j + 1) else 0L
-      pid -> (inF(j), inB(j), bndIn(j), bOut)
-    }.toMap
-    val bc = s.sparkContext.broadcast(states)
-    // pass 2: buffer the partition's compact (doc_id, off, train,
+
+    // buffer the partition's compact (doc_id, off, train,
     // lcp-to-predecessor) columns — prefixes are folded into the LCPs
     // on the fly and never retained — then run the forward scan and
     // the backward scan over the buffer and emit max(mF, mB) ≥ 32.
     // UNBOXED growable arrays (ADVICE r17 item 2: the boxed
-    // ArrayBuffer[Long] form tripled the buffer's footprint), and a
-    // LOUD per-partition row bound: the batch side is capped by the
-    // probe's broadcast guard, but the corpus-survivor side is not
-    // bounded per h32 (a boilerplate 32-prefix can match arbitrarily
-    // many sidecar rows), so a skewed partition fails fast with the
-    // remedy named instead of OOMing the executor. Override via
-    // `spark.graft.saProbeMaxPartitionRows`.
-    val maxPartRows = s.conf.getOption("spark.graft.saProbeMaxPartitionRows")
-      .map(_.toInt).getOrElse(1 << 24)
-    val outRdd = ordered.rdd.mapPartitionsWithIndex { (pid, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val (pInF, pInB, pBndIn, pBndOut) = bc.value(pid)
-        val ids = new scala.collection.mutable.ArrayBuilder.ofLong
-        val offs = new scala.collection.mutable.ArrayBuilder.ofLong
-        val trainsB = new scala.collection.mutable.ArrayBuilder.ofBoolean
-        val lcpsB = new scala.collection.mutable.ArrayBuilder.ofLong
-        var prevPref: UTF8String = null
-        var nBuf = 0
-        it.foreach { r =>
-          val p = UTF8String.fromString(r.getString(0))
-          lcpsB += (if (prevPref == null) pBndIn else cp(prevPref, p))
-          ids += r.getLong(3)
-          offs += r.getLong(4)
-          trainsB += r.getBoolean(2)
-          prevPref = p
-          nBuf += 1
-          require(nBuf <= maxPartRows,
-            s"SA probe union partition $pid exceeds $maxPartRows buffered rows " +
-              "(a boilerplate 32-prefix matching that many corpus suffixes): " +
-              "raise spark.sql.shuffle.partitions or split the batch")
+    // ArrayBuffer[Long] form tripled the buffer's footprint).
+    def emit(carry: (Long, Long, Long, Long), rows: Iterator[InternalRow],
+             out: UnsafeRowWriter): Iterator[InternalRow] = {
+      val (pInF, pInB, pBndIn, pBndOut) = carry
+      val ids = new scala.collection.mutable.ArrayBuilder.ofLong
+      val offs = new scala.collection.mutable.ArrayBuilder.ofLong
+      val trainsB = new scala.collection.mutable.ArrayBuilder.ofBoolean
+      val lcpsB = new scala.collection.mutable.ArrayBuilder.ofLong
+      var prevPref: UTF8String = null
+      var nBuf = 0
+      rows.foreach { r =>
+        val p = r.getUTF8String(0)
+        lcpsB += (if (prevPref == null) pBndIn else cp(prevPref, p))
+        ids += r.getLong(3)
+        offs += r.getLong(4)
+        trainsB += r.getBoolean(2)
+        prevPref = p.clone()
+        nBuf += 1
+        require(nBuf <= maxPartRows,
+          s"SA probe union partition ${org.apache.spark.TaskContext.getPartitionId()} " +
+            s"exceeds $maxPartRows buffered rows " +
+            "(a boilerplate 32-prefix matching that many corpus suffixes): " +
+            "raise spark.sql.shuffle.partitions or split the batch")
+      }
+      val idsA = ids.result(); val offsA = offs.result()
+      val trains = trainsB.result(); val lcps = lcpsB.result()
+      val m = idsA.length
+      val best = new Array[Long](m)
+      var stF = pInF
+      var k = 0
+      while (k < m) {
+        if (trains(k)) stF = Inf
+        else {
+          stF = if (stF == NoTrain) NoTrain else math.min(stF, lcps(k))
+          best(k) = stF
         }
-        val idsA = ids.result(); val offsA = offs.result()
-        val trains = trainsB.result(); val lcps = lcpsB.result()
-        val m = idsA.length
-        val best = new Array[Long](m)
-        var stF = pInF
-        var k = 0
-        while (k < m) {
-          if (trains(k)) stF = Inf
-          else {
-            stF = if (stF == NoTrain) NoTrain else math.min(stF, lcps(k))
-            best(k) = stF
-          }
-          k += 1
+        k += 1
+      }
+      var stB = pInB
+      k = m - 1
+      while (k >= 0) {
+        val gOut = if (k + 1 < m) lcps(k + 1) else pBndOut
+        if (trains(k)) stB = Inf
+        else {
+          stB = if (stB == NoTrain) NoTrain else math.min(stB, gOut)
+          if (stB > best(k)) best(k) = stB
         }
-        var stB = pInB
-        k = m - 1
-        while (k >= 0) {
-          val gOut = if (k + 1 < m) lcps(k + 1) else pBndOut
-          if (trains(k)) stB = Inf
-          else {
-            stB = if (stB == NoTrain) NoTrain else math.min(stB, gOut)
-            if (stB > best(k)) best(k) = stB
-          }
-          k -= 1
-        }
-        (0 until m).iterator.flatMap { j =>
-          if (!trains(j) && best(j) >= 32L)
-            Some(org.apache.spark.sql.Row(idsA(j), offsA(j), offsA(j) + best(j)))
-          else None
-        }
+        k -= 1
+      }
+      (0 until m).iterator.flatMap { j =>
+        if (!trains(j) && best(j) >= 32L)
+          Some(OrderedScan.row(out, idsA(j), offsA(j), offsA(j) + best(j)))
+        else None
       }
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("st",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("en",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    (s.createDataFrame(outRdd, schema), ordered)
   }
 }

@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -972,51 +974,16 @@ object Dedup extends QueryModule {
     // §2.4): ranks are a 0..n−1 permutation, so SA-adjacency ==
     // consecutive rows in rank order. The former self-join exchanged
     // the corpus-sized array TWICE (rank and rank−1 keys) and
-    // merge-joined; here the array is range-exchanged once, each
-    // partition pairs consecutive rows locally, and cross-partition
-    // adjacency comes from ONE collected first-row per partition
-    // (fixed width — the denseRank two-pass driver bound). Both RDD
-    // passes hang off the same RDD, so the second reuses the first's
-    // shuffle files (no re-exchange). rank32-equal pruning and the
-    // capped text fetch are unchanged.
-    val s = sa.sparkSession
-    val parts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val ordRdd = sa
-      .select(col("rank").cast(LongType), col("doc_id").cast(LongType),
-        col("off").cast(LongType), col("rank32").cast(LongType))
-      .repartitionByRange(parts, col("rank"))
-      .sortWithinPartitions(col("rank"))
-      .rdd
-    val firsts: Array[(Int, (Long, Long, Long, Long))] =
-      ordRdd.mapPartitionsWithIndex { (pid, it) =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val r = it.next()
-          Iterator((pid, (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))))
-        }
-      }.collect().sortBy(_._1)
-    val nextFirst: Map[Int, (Long, Long, Long, Long)] =
-      (0 until firsts.length - 1).map(j => firsts(j)._1 -> firsts(j + 1)._2).toMap
-    val bcNext = s.sparkContext.broadcast(nextFirst)
-    val candsRdd = ordRdd.mapPartitionsWithIndex { (pid, it) =>
-      val tail = bcNext.value.get(pid)
-      var prevD = 0L; var prevO = 0L; var prev32 = 0L; var has = false
-      def pair(r: Long, d: Long, o: Long, r32: Long): Option[org.apache.spark.sql.Row] = {
-        val res =
-          if (has && prev32 == r32)
-            Some(org.apache.spark.sql.Row(r, prevD, prevO, d, o))
-          else None
-        prevD = d; prevO = o; prev32 = r32; has = true
-        res
-      }
-      it.flatMap(rr =>
-        pair(rr.getLong(0), rr.getLong(1), rr.getLong(2), rr.getLong(3))) ++
-        tail.iterator.flatMap { case (r, d, o, r32) => pair(r, d, o, r32) }
-    }
-    val cands = s.createDataFrame(candsRdd,
-      org.apache.spark.sql.types.StructType(
-        Seq("b_rank", "doc_a", "off_a", "doc_b", "off_b").map(
-          org.apache.spark.sql.types.StructField(_, LongType, nullable = false))))
+    // merge-joined; here a two-pass OrderedScan range-exchanges the
+    // array once, each partition pairs consecutive rows locally, and
+    // cross-partition adjacency comes from ONE collected first-row per
+    // partition (fixed width). rank32-equal pruning and the capped
+    // text fetch are unchanged.
+    val cands = graft.plans.OrderedScan.over(
+      sa.select(col("rank").cast(LongType), col("doc_id").cast(LongType),
+        col("off").cast(LongType), col("rank32").cast(LongType)),
+      Seq("rank"), AdjacentPairs,
+      graft.plans.OrderedScan.longs("b_rank", "doc_a", "off_a", "doc_b", "off_b"))
     val ta = base.select(col("doc_id").as("doc_a"), col("text").as("text_a"))
     val tb = base.select(col("doc_id").as("doc_b"), col("text").as("text_b"))
     cands.join(ta, Seq("doc_a")).join(tb, Seq("doc_b"))
@@ -1025,6 +992,34 @@ object Dedup extends QueryModule {
         graft.functions.GraftFunctions.commonPrefixLen(
           expr("substring(text_a, cast(off_a + 1 as int), 2048)"),
           expr("substring(text_b, cast(off_b + 1 as int), 2048)")).as("lcp"))
+  }
+
+  /** SA-adjacent pairs with equal rank32, as (b_rank, doc_a, off_a,
+    * doc_b, off_b). Summary: a partition's first row (rank, doc_id,
+    * off, rank32); carry: the next non-empty partition's first row, the
+    * SA successor of this partition's last row. */
+  private case object AdjacentPairs extends graft.plans.TwoPassKernel[
+      (Long, Long, Long, Long), Option[(Long, Long, Long, Long)]] {
+    def summarize(rows: Iterator[InternalRow]): (Long, Long, Long, Long) = {
+      val r = rows.next()
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    }
+    def compose(firsts: IndexedSeq[(Long, Long, Long, Long)])
+        : IndexedSeq[Option[(Long, Long, Long, Long)]] =
+      firsts.drop(1).map(Some(_)) :+ None
+    def emit(tail: Option[(Long, Long, Long, Long)], rows: Iterator[InternalRow],
+             out: UnsafeRowWriter): Iterator[InternalRow] = {
+      var prevD = 0L; var prevO = 0L; var prev32 = 0L; var has = false
+      def pair(r: Long, d: Long, o: Long, r32: Long): Option[InternalRow] = {
+        val res =
+          if (has && prev32 == r32) Some(graft.plans.OrderedScan.row(out, r, prevD, prevO, d, o))
+          else None
+        prevD = d; prevO = o; prev32 = r32; has = true
+        res
+      }
+      rows.flatMap(r => pair(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))) ++
+        tail.iterator.flatMap { case (r, d, o, r32) => pair(r, d, o, r32) }
+    }
   }
 
   /** The d14 report tail: top-20 repeats ≥ 32, deterministic order. */
@@ -1197,9 +1192,10 @@ object Dedup extends QueryModule {
   // hence rank32-equal, hence exactly computed — boundaries below 32
   // (absent candidates, stored 0) can only appear in chains whose min
   // is < 32, which the threshold drops on both engines identically.
-  // Scale: the scans are the denseRank two-pass shape (range exchange
-  // + bounded per-partition summary + driver composition + broadcast
-  // second pass — driver state ≤ |partitions| rows); spans merge with
+  // Scale: the scans are two-pass OrderedScan nodes (range exchange
+  // + bounded per-partition summary + driver composition + second
+  // pass from each partition's carry — driver state ≤ |partitions|
+  // rows); spans merge with
   // d15's per-doc fold; output one row per eval doc. Oracle: the d14
   // Python suffix sort extended with the same two scans
   // (scripts/py_oracles.py) — DuckDB cannot materialize the relation.
@@ -1224,7 +1220,7 @@ object Dedup extends QueryModule {
     * every suffix on the EMIT side, the longest prefix shared with
     * ANY suffix on the RESET side (`resetSide` true rows), as merged
     * per-doc spans (doc_id, iv) — two directional gated-min scans in
-    * rank order ([[scanSharedWithTrain]]; state resets to ∞ on reset-
+    * rank order ([[graft.operators.GatedMinScan]]; state resets to ∞ on reset-
     * side rows, gate-mins along boundary LCPs on emit-side rows),
     * spans ≥ 32 union-merged after a corpus-keyed parquet handoff
     * under `prefix` (the d15 lineage cut). */
@@ -1262,34 +1258,24 @@ object Dedup extends QueryModule {
     // GatedMinScan form when the driver-side check trips (an
     // adversarial run length), so no task ever buffers unboundedly.
     val spansDir = graft.operators.ArtifactDir.dirFor(d, "documents.parquet", prefix)
-    val (fused, fusedCache) = graft.operators.GatedMinScan.scanBoth(both
+    def writeSpans(m: DataFrame): Unit =
+      m.select(col("doc_id"), col("off").as("st"), (col("off") + col("m")).as("en"))
+        .write.mode("overwrite").parquet(spansDir)
+    // materialize the (small: one row per shared-span suffix) span
+    // set, then retire the join cache (the d15 handoff; the SA itself
+    // is the persisted artifact — nothing of it is cached)
+    try writeSpans(graft.operators.GatedMinScan.scanBoth(both
       .select(col("rank").as("ord"), col("doc_id"), col("off"),
-        col("train"), col("lcpIn"), col("lcpOut")))
-    fused match {
-      case Some(m) =>
-        // materialize the (small: one row per shared-span suffix)
-        // span set, then retire the scan + join caches (the d15
-        // handoff; the SA itself is the persisted artifact — nothing
-        // of it is cached)
-        m.select(col("doc_id"), col("off").as("st"),
-            (col("off") + col("m")).as("en"))
-          .write.mode("overwrite").parquet(spansDir)
-        Seq(fusedCache, both).foreach(_.unpersist())
-      case None =>
-        fusedCache.unpersist()
-        val (l, lc) = scanSharedWithTrain(both
-          .select(col("rank").as("ord"), col("doc_id"), col("off"),
-            col("train"), col("lcpIn")))
-        val (r, rc) = scanSharedWithTrain(both
-          .select((-col("rank")).as("ord"), col("doc_id"), col("off"),
-            col("train"), col("lcpOut").as("lcpIn")))
-        l.unionByName(r).groupBy(col("doc_id"), col("off"))
-          .agg(max(col("m")).as("m"))
-          .select(col("doc_id"), col("off").as("st"),
-            (col("off") + col("m")).as("en"))
-          .write.mode("overwrite").parquet(spansDir)
-        Seq(lc, rc, both).foreach(_.unpersist())
-    }
+        col("train"), col("lcpIn"), col("lcpOut"))))
+    catch {
+      case e: Exception if graft.operators.GatedMinScan.boundExceeded(e) =>
+        val l = graft.operators.GatedMinScan.scan(both.select(col("rank").as("ord"),
+          col("doc_id"), col("off"), col("train"), col("lcpIn")))
+        val r = graft.operators.GatedMinScan.scan(both.select((-col("rank")).as("ord"),
+          col("doc_id"), col("off"), col("train"), col("lcpOut").as("lcpIn")))
+        writeSpans(l.unionByName(r).groupBy(col("doc_id"), col("off"))
+          .agg(max(col("m")).as("m")))
+    } finally both.unpersist()
     mergedSpans(s.read.parquet(spansDir))
   }
 
@@ -1322,13 +1308,6 @@ object Dedup extends QueryModule {
         cleanStitch.as("text_clean"))
       .orderBy("doc_id")
   }
-
-  /** One directional gated-min scan (see d16) — the machinery is the
-    * SA family's single-owner [[graft.operators.GatedMinScan]] (shared
-    * with d19's incremental probe); this alias keeps the d16/d18 call
-    * sites reading as before. */
-  private def scanSharedWithTrain(rows: DataFrame): (DataFrame, DataFrame) =
-    graft.operators.GatedMinScan.scan(rows)
 
   /** d19's deterministic "new crawl batch": one synthesized doc per
     * corpus doc with doc_id % 53 == 7, its text a novel-filler frame

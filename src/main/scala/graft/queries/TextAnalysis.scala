@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -940,62 +942,58 @@ object TextAnalysis extends QueryModule {
     * today's exact candidate set); else b = (cum(v)−1)·B div n with
     * cum the inclusive value-ordered count prefix — deterministic,
     * value-monotone, ties never split (rows with equal v share a
-    * bucket by construction). Distributed as the denseRank two-pass:
+    * bucket by construction). A two-pass [[graft.plans.OrderedScan]]:
     * range exchange on (fi, v), bounded per-partition (feature →
     * subtotal) summaries, driver composition (≤ |partitions|·4
-    * entries), broadcast second pass. Returns (bucket map frame,
-    * the cached range-sorted frame backing it — caller unpersists
-    * once downstream is materialized). */
-  private def t24BucketMap(lf: DataFrame): (DataFrame, DataFrame) = {
-    val s = lf.sparkSession
-    val parts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val B = T24Buckets
-    val ordered = lf.groupBy(col("fi"), col("v"))
-      .agg(count(lit(1)).as("c"))
-      .repartitionByRange(parts, col("fi"), col("v"))
-      .sortWithinPartitions(col("fi"), col("v"))
-      .cache()
-    val stats: Array[(Int, Map[Int, (Long, Long)])] =
-      ordered.rdd.mapPartitionsWithIndex { (pid, it) =>
-        val m = scala.collection.mutable.Map.empty[Int, (Long, Long)]
-        it.foreach { r =>
-          val (sc, nd) = m.getOrElse(r.getInt(0), (0L, 0L))
-          m(r.getInt(0)) = (sc + r.getLong(2), nd + 1)
-        }
-        Iterator((pid, m.toMap))
-      }.collect().sortBy(_._1)
-    val totals: Map[Int, (Long, Long)] = stats.flatMap(_._2).groupBy(_._1)
-      .map { case (fi, xs) => fi -> ((xs.map(_._2._1).sum, xs.map(_._2._2).sum)) }
-    val run = scala.collection.mutable.Map.empty[Int, (Long, Long)]
-    val incoming: Map[Int, Map[Int, (Long, Long)]] = stats.map { case (pid, m) =>
-      val in = run.toMap
-      m.foreach { case (fi, (sc, nd)) =>
-        val (c0, n0) = run.getOrElse(fi, (0L, 0L))
-        run(fi) = (c0 + sc, n0 + nd)
+    * entries), second pass from each partition's carry. */
+  private def t24BucketMap(lf: DataFrame): DataFrame =
+    graft.plans.OrderedScan.over(
+      lf.groupBy(col("fi"), col("v")).agg(count(lit(1)).as("c")),
+      Seq("fi", "v"), QuantileBuckets(T24Buckets),
+      StructType(StructField("fi", IntegerType, nullable = false) +:
+        graft.plans.OrderedScan.longs("v", "b").fields))
+
+  /** feature → (count subtotal, distinct values) */
+  private type Totals = Map[Int, (Long, Long)]
+
+  /** Summary: one partition's [[Totals]]; carry: (the running totals
+    * over the partitions before it, the feature totals). */
+  private final case class QuantileBuckets(B: Long)
+      extends graft.plans.TwoPassKernel[Totals, (Totals, Totals)] {
+    def summarize(rows: Iterator[InternalRow]): Totals = {
+      val m = scala.collection.mutable.Map.empty[Int, (Long, Long)]
+      rows.foreach { r =>
+        val (sc, nd) = m.getOrElse(r.getInt(0), (0L, 0L))
+        m(r.getInt(0)) = (sc + r.getLong(2), nd + 1)
       }
-      pid -> in
-    }.toMap
-    val bcIn = s.sparkContext.broadcast(incoming)
-    val bcTot = s.sparkContext.broadcast(totals)
-    val bmRdd = ordered.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val st = scala.collection.mutable.Map.empty[Int, (Long, Long)] ++=
-        bcIn.value(pid)
-      it.map { r =>
+      m.toMap
+    }
+    def compose(stats: IndexedSeq[Totals]): IndexedSeq[(Totals, Totals)] = {
+      def add(a: Totals, b: Totals) =
+        b.foldLeft(a) { case (acc, (fi, (sc, nd))) =>
+          val (c0, n0) = acc.getOrElse(fi, (0L, 0L))
+          acc.updated(fi, (c0 + sc, n0 + nd))
+        }
+      val incoming = stats.scanLeft(Map.empty: Totals)(add)
+      incoming.init.map(_ -> incoming.last)
+    }
+    def emit(carry: (Totals, Totals), rows: Iterator[InternalRow], out: UnsafeRowWriter)
+        : Iterator[InternalRow] = {
+      val (in, totals) = carry
+      val st = scala.collection.mutable.Map.empty[Int, (Long, Long)] ++= in
+      rows.map { r =>
         val fi = r.getInt(0)
         val (c0, n0) = st.getOrElse(fi, (0L, 0L))
         val cum = c0 + r.getLong(2)
         val rank = n0 // 0-based rank of this distinct value
         st(fi) = (cum, n0 + 1)
-        val (n, nd) = bcTot.value(fi)
-        val b = if (nd <= B) rank else (cum - 1) * B / n
-        org.apache.spark.sql.Row(fi, r.getLong(1), b)
+        val (n, nd) = totals(fi)
+        out.reset()
+        out.write(0, fi); out.write(1, r.getLong(1))
+        out.write(2, if (nd <= B) rank else (cum - 1) * B / n)
+        out.getRow
       }
     }
-    val schema = StructType(Seq(
-      StructField("fi", IntegerType, nullable = false),
-      StructField("v", LongType, nullable = false),
-      StructField("b", LongType, nullable = false)))
-    (s.createDataFrame(bmRdd, schema), ordered)
   }
 
   /** Histogram-driven training: per level one aggregate + a driver
@@ -1015,15 +1013,13 @@ object TextAnalysis extends QueryModule {
     val lf = feats.select(
       posexplode(array(col("w"), col("cpw10"), col("sw"), col("dpm")))
         .as(Seq("fi", "v")))
-    val (bm0, bmCache) = t24BucketMap(lf)
-    val bm = bm0.cache()
+    val bm = t24BucketMap(lf).cache()
     // bucket → max raw training value: the threshold translation
     // (bucket monotone in v ⇒ "v ≤ thr(b)" ≡ "bucket(v) ≤ b");
     // bounded collect: ≤ 4·T24Buckets rows (also materializes bm)
     val thrOf: Map[(Int, Long), Long] = bm.groupBy(col("fi"), col("b"))
       .agg(max(col("v")).as("thr")).collect()
       .map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2))).toMap
-    bmCache.unpersist()
     var levels = Vector.empty[Seq[T24Split]]
     for (_ <- 1 to depth) {
       val hist = t24Assign(feats, levels)
@@ -1297,12 +1293,10 @@ object TextAnalysis extends QueryModule {
     // independent bucket maps would
     val lf = rep.select(col("ko"), posexplode(array(featCols: _*)).as(Seq("fi", "v")))
       .select(gi(col("fi")).as("fi"), col("v"))
-    val (bm0, bmCache) = t24BucketMap(lf)
-    val bm = bm0.cache()
+    val bm = t24BucketMap(lf).cache()
     val thrOf: Map[(Int, Long), Long] = bm.groupBy(col("fi"), col("b"))
       .agg(max(col("v")).as("thr")).collect()
       .map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2))).toMap
-    bmCache.unpersist()
     var byKo: Map[Long, Vector[Seq[T24Split]]] =
       (0L until Folds).map(_ -> Vector.empty[Seq[T24Split]]).toMap
     for (li <- 0 until T24Depth) {

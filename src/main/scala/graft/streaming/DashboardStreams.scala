@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.etl.{DecodedFrame, RawChunk, SyntheticRtcm}
 import graft.rtcm.RtcmFraming
-import org.apache.spark.sql.{DataFrame, Dataset, SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SQLContext, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
@@ -146,10 +146,23 @@ object StreamingReplay {
   def run(s: SparkSession, chunks: Seq[RawChunk], nBatches: Int,
           flush: Long => RawChunk = defaultFlush)
          (transform: Dataset[RawChunk] => DataFrame): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import s.implicits._
+    // arrival order = event-time order (all mounts stream
+    // concurrently); per-mount seq order is preserved because chunk
+    // receive times increase with seq
+    val ordered = framed(chunks).sortBy(c => (c.receiveMicros, c.mountPoint, c.seq))
+    replay(s, ordered, flush(chunks.iterator.map(_.receiveMicros).max), nBatches)(transform)
+  }
+
+  /** The drive loop behind [[run]], for any element type: `rows` fed
+    * in arrival order in `nBatches` slices through a `MemoryStream`,
+    * then `flush` twice (see below), into an Append-mode memory sink;
+    * returns the materialized output. */
+  def replay[T: Encoder](s: SparkSession, rows: Seq[T], flush: T, nBatches: Int)
+         (transform: Dataset[T] => DataFrame): DataFrame = {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx: SQLContext = s.sqlContext
-    val input = MemoryStream[RawChunk]
+    val input = MemoryStream[T]
     val out = transform(input.toDS())
     val name = s"graft_replay_${counter.incrementAndGet()}"
     val ckpt = java.nio.file.Files.createTempDirectory("graft-replay-ckpt")
@@ -166,9 +179,9 @@ object StreamingReplay {
     // watermark closes then happens in the NEXT batch with data, so
     // the engine skips the full-plan empty batch it otherwise runs
     // after EVERY processAllAvailable (measured: half of a replay's
-    // micro-batches). A SECOND flush frame below is what flushes the
-    // windows the first flush's watermark closed — flush rows
-    // themselves never close and callers drop the sentinel mountpoint.
+    // micro-batches). A SECOND flush below is what flushes the windows
+    // the first flush's watermark closed — flush rows themselves never
+    // close and callers drop the sentinel's rows.
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val q = try {
       out.writeStream.format("memory").queryName(name)
@@ -180,18 +193,13 @@ object StreamingReplay {
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", oldNoData)
     }
     try {
-      // arrival order = event-time order (all mounts stream
-      // concurrently); per-mount seq order is preserved because chunk
-      // receive times increase with seq
-      val ordered = framed(chunks).sortBy(c => (c.receiveMicros, c.mountPoint, c.seq))
-      ordered.grouped(math.max(1, ordered.size / nBatches + 1)).foreach { g =>
+      rows.grouped(math.max(1, rows.size / nBatches + 1)).foreach { g =>
         input.addData(g)
         q.processAllAvailable()
       }
-      val maxT = chunks.iterator.map(_.receiveMicros).max
-      input.addData(flush(maxT))
+      input.addData(flush)
       q.processAllAvailable()
-      input.addData(flush(maxT))
+      input.addData(flush)
       q.processAllAvailable()
       val table = s.table(name)
       // materialize before the query/table lifecycle ends
@@ -200,7 +208,7 @@ object StreamingReplay {
       result
     } finally {
       q.stop()
-      deleteRecursively(ckpt)
+      graft.operators.ArtifactDir.deleteTree(ckpt)
     }
   }
 
@@ -213,15 +221,4 @@ object StreamingReplay {
       val framer = new RtcmFraming.Framer
       cs.sortBy(_.seq).flatMap(c => framer.push(c.data).map(f => c.copy(data = f)))
     }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    try {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.forEach(deleteRecursively(_)) finally s.close()
-      }
-      Files.deleteIfExists(p)
-    } catch { case _: java.io.IOException => () }
-  }
 }

@@ -28,7 +28,7 @@ import java.nio.file.{Files, Path}
   *     cannot leak it under /tmp; the streaming query is stopped in a
   *     `finally` so a failing drive loop cannot leak the query thread.
   *   - **fd hygiene** — every directory stream is closed ([[moveChunk]],
-  *     [[deleteRec]]); the long-lived driver JVM accumulates fds across
+  *     `ArtifactDir.deleteTree`); the long-lived driver JVM accumulates fds across
   *     best-of-N replays otherwise.
   *   - **Session-conf restore** — shuffle partitions are pinned to 4
   *     for the replay's micro-batches (gate-scale state, 32 would be
@@ -121,7 +121,7 @@ object ReplayHarness {
       val rep = report(s, outDir.toString)
       // materialize before the finally deletes the replay root
       s.createDataFrame(rep.collectAsList(), rep.schema)
-    } finally deleteRec(root)
+    } finally graft.operators.ArtifactDir.deleteTree(root)
   }
 
   /** The documents-table convention shared by the t16/t20/t22 gates:
@@ -208,7 +208,7 @@ object ReplayHarness {
       val rep = report(s, outDir)
       // materialize before the finally deletes the replay root
       s.createDataFrame(rep.collectAsList(), rep.schema)
-    } finally deleteRec(root)
+    } finally graft.operators.ArtifactDir.deleteTree(root)
   }
 
   /** Move a staged chunk's parquet files into the watched source dir.
@@ -221,13 +221,5 @@ object ReplayHarness {
         Files.move(f, watch.resolve(s"b$batch-${f.getFileName}"),
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     } finally ls.close()
-  }
-
-  private[streaming] def deleteRec(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val ls = Files.list(p) // close: leaks a dir fd otherwise
-      try ls.forEach(deleteRec) finally ls.close()
-    }
-    Files.deleteIfExists(p)
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.LongType
 
 /** The w08 sliding (hopping) window aggregates as a STREAMING
@@ -92,44 +91,5 @@ object StreamingSlidingWindows {
     ReplayHarness.run(s, "graft-w08-replay", nBatches, chunked, sentinel,
       stream => preAgg(stream.as[Ev], delay),
       (sp, out) => rollup(sp.read.parquet(out)))
-  }
-
-  private val counter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** MemoryStream replay harness for event rows (the RawChunk replay
-    * in [[StreamingReplay]], generalized to the events table). */
-  def run(s: SparkSession, batchesInput: Seq[Ev], flush: Ev, nBatches: Int)
-         (transform: Dataset[Ev] => DataFrame): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import s.implicits._
-    implicit val ctx: SQLContext = s.sqlContext
-    val input = MemoryStream[Ev]
-    val out = transform(input.toDS())
-    val name = s"graft_evreplay_${counter.incrementAndGet()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-evreplay")
-    val oldParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = try {
-      out.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-    } finally s.conf.set("spark.sql.shuffle.partitions", oldParts)
-    try {
-      batchesInput.grouped(
-        math.max(1, batchesInput.size / nBatches + 1)).foreach { g =>
-        input.addData(g)
-        q.processAllAvailable()
-      }
-      input.addData(flush)
-      q.processAllAvailable()
-      val table = s.table(name)
-      val result = s.createDataFrame(table.collectAsList(), table.schema)
-      s.catalog.dropTempView(name)
-      result
-    } finally {
-      q.stop()
-      ReplayHarness.deleteRec(ckpt)
-    }
   }
 }

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the two directional scan() calls it replaces: same output on
   * randomized fixtures (dense resets, sparse resets, no resets,
   * all-resets), and the segment-bound fallback trips loudly at the
-  * driver — returning None — instead of buffering an over-bound run. */
+  * driver — failing with SegmentBoundExceeded — instead of buffering an
+  * over-bound run. */
 class GatedMinScanSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -28,26 +29,22 @@ class GatedMinScanSpec extends AnyFunSuite {
       : Set[(Long, Long, Long)] = {
     import spark.implicits._
     val df = rows.toDF("ord", "doc_id", "off", "train", "lcpIn", "lcpOut")
-    val (l, lc) = GatedMinScan.scan(
+    val l = GatedMinScan.scan(
       df.selectExpr("ord", "doc_id", "off", "train", "lcpIn"))
-    val (r, rc) = GatedMinScan.scan(
+    val r = GatedMinScan.scan(
       df.selectExpr("-ord as ord", "doc_id", "off", "train", "lcpOut as lcpIn"))
-    val out = l.unionByName(r).groupBy("doc_id", "off")
+    l.unionByName(r).groupBy("doc_id", "off")
       .agg(org.apache.spark.sql.functions.max("m").as("m"))
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
-    Seq(lc, rc).foreach(_.unpersist())
-    out
   }
 
   private def viaFused(rows: Seq[(Long, Long, Long, Boolean, Long, Long)])
       : Option[Set[(Long, Long, Long)]] = {
     import spark.implicits._
     val df = rows.toDF("ord", "doc_id", "off", "train", "lcpIn", "lcpOut")
-    val (res, cache) = GatedMinScan.scanBoth(df)
-    val out = res.map(_.collect()
+    try Some(GatedMinScan.scanBoth(df).collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet)
-    cache.unpersist()
-    out
+    catch { case e: Exception if GatedMinScan.boundExceeded(e) => None }
   }
 
   test("fused == two directional scans across reset densities") {
@@ -65,15 +62,14 @@ class GatedMinScanSpec extends AnyFunSuite {
     assert(viaFused(rows).get === viaTwoScans(rows))
   }
 
-  test("over-bound emit run falls back loudly (None) at the driver") {
+  test("over-bound emit run falls back loudly (SegmentBoundExceeded) at the driver") {
     val pinned = spark.newSession()
     pinned.conf.set("spark.graft.saScanMaxSegmentRows", "16")
     import pinned.implicits._
     val rows = fixture(400, 0) // no resets: one 400-row run
     val df = rows.toDF("ord", "doc_id", "off", "train", "lcpIn", "lcpOut")
-    val (res, cache) = GatedMinScan.scanBoth(df)
-    cache.unpersist()
-    assert(res.isEmpty, "a run past the bound must return None, not buffer")
+    val e = intercept[Exception](GatedMinScan.scanBoth(df).collect())
+    assert(GatedMinScan.boundExceeded(e), "a run past the bound must fail at the driver, not buffer")
     // and the caller's fallback (two scans) still answers
     assert(viaTwoScans(rows) === viaTwoScans(rows))
   }

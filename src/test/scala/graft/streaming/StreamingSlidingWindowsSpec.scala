@@ -36,8 +36,9 @@ class StreamingSlidingWindowsSpec extends AnyFunSuite {
   private def streamed(evs: Seq[Ev], nBatches: Int): Seq[Seq[Any]] = {
     val flush = Ev(Long.MaxValue,
       evs.map(_.us).max + 3L * 3600L * 1000000L, -1L, FlushType, 0.0)
+    import spark.implicits._
     StreamingSlidingWindows.rollup(
-      StreamingSlidingWindows.run(spark, evs, flush, nBatches)(
+      StreamingReplay.replay(spark, evs, flush, nBatches)(
         ds => StreamingSlidingWindows.preAgg(ds, "1 hour")))
       .collect().map(_.toSeq).toSeq
   }
