@@ -62,7 +62,9 @@ class GatedMinScanSpec extends AnyFunSuite {
     assert(viaFused(rows).get === viaTwoScans(rows))
   }
 
-  test("over-bound emit run falls back loudly (SegmentBoundExceeded) at the driver") {
+  // "(None)": the fused scan gives no answer (viaFused's None) and
+  // the caller's two-scan fallback answers instead.
+  test("over-bound emit run falls back loudly (None) at the driver") {
     val pinned = spark.newSession()
     pinned.conf.set("spark.graft.saScanMaxSegmentRows", "16")
     import pinned.implicits._
