@@ -19,7 +19,7 @@ final case class EncodedFrame(mountPoint: String, receiveMicros: Long, frame: Ar
 
 /** Observation output row (matches `*_observations` columns,
   * initdb/11-gps_observations.sql). */
-final case class ObsOut(
+private[graft] final case class ObsOut(
     obs_epoch_micros: Long,
     sat_id: String,
     sat_signal: String,

@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * can't express this, so queries over it are rows-only with
   * value-level assertions in ScalaTest.
   */
-object TextTokens {
+private[graft] object TextTokens {
 
   // UNICODE_CHARACTER_CLASS makes \s Unicode-aware (Java's default \s
   // is ASCII-only; the published pattern is Python regex, where \s

@@ -31,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * order, which no consumer may rely on (aggregates are
   * order-independent).
   */
-abstract class TokenTfBase extends UnaryExpression {
+private[graft] abstract class TokenTfBase extends UnaryExpression {
   /** n-gram window width: 1 = words (empties dropped), 2 = bigrams,
     * 3 = trigrams (n >= 2 keeps empty tokens — pair/triple identity is
     * the contiguous source byte slice). */
@@ -137,7 +137,7 @@ case class WordCount(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object TokenTfPairs {
+private[graft] object TokenTfPairs {
 
   val OutType: DataType = ArrayType(StructType(Seq(
     StructField("t", StringType, nullable = false),

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * bit-identical to the interpreted fold and to DuckDB's list_sum, so
   * oracle-checked queries can swap implementations freely.
   */
-trait VectorArrayHelpers {
+private[graft] trait VectorArrayHelpers {
   protected def elemIsFloat(dt: DataType): Boolean = dt match {
     case ArrayType(FloatType, _) => true
     case _ => false
@@ -31,11 +31,11 @@ trait VectorArrayHelpers {
 
 // Minimal success/failure shim so we don't depend on the (moving)
 // TypeCheckResult helper API across Spark versions.
-sealed trait TypeCheckResultCompat { def toResult: org.apache.spark.sql.catalyst.analysis.TypeCheckResult }
-case object TypeCheckOk extends TypeCheckResultCompat {
+private[graft] sealed trait TypeCheckResultCompat { def toResult: org.apache.spark.sql.catalyst.analysis.TypeCheckResult }
+private[graft] case object TypeCheckOk extends TypeCheckResultCompat {
   def toResult = org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
 }
-final case class TypeCheckFail(msg: String) extends TypeCheckResultCompat {
+private[graft] final case class TypeCheckFail(msg: String) extends TypeCheckResultCompat {
   def toResult = org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(msg)
 }
 

@@ -247,7 +247,7 @@ object GeneralizedSuffixArray {
 
   /** Suffix-count threshold above which [[build]] switches to the
     * SPILL-BOUNDED mode: the bootstrap and every tail round are
-    * handed off through parquet dirs instead of cached plans. The
+    * handed off through parquet dirs instead of local checkpoints. The
     * handoff CUTS THE LINEAGE, so a round's join/exchange shuffle
     * files become unreachable the moment the round rebinds — the
     * forced GC then reclaims them INSIDE the round. Round dirs hold
@@ -258,8 +258,14 @@ object GeneralizedSuffixArray {
     * (when cumulative written rows exceed 3n, the latest-rank view is
     * rewritten into one dir and the round dirs retired — disk stays
     * ≤ ~4 corpus-sized snapshots, independent of round count). Below
-    * the threshold the build keeps the all-in-memory lineage (no I/O,
-    * oracle-verified at the gates). Override for tests via
+    * the threshold each round lands in an eager local checkpoint (no
+    * I/O, oracle-verified at the gates), which cuts the lineage the
+    * same way: a round's plan would otherwise hold every earlier
+    * round's plan (live rows join the union of all settled frames),
+    * so the plan to analyse grows about threefold per round (measured
+    * at sf0.1: five rounds without the cut tripled the d14 build).
+    * Checkpoint blocks go with their frames, through the context
+    * cleaner. Override for tests via
     * `spark.graft.saCheckpointMinSuffixes`. */
   private val CkptMinSuffixesDefault: Long = 64L << 20
 
@@ -344,7 +350,6 @@ object GeneralizedSuffixArray {
         sys.addShutdownHook(ArtifactDir.deleteTree(p)) // session-lifetime
         p
       } else null
-    val caches = scala.collection.mutable.ListBuffer.empty[DataFrame]
 
     // ---- bootstrap: one range exchange → (pk, rank32, rank, tied)
     val bootRaw = bootstrapRank(chars)
@@ -356,10 +361,8 @@ object GeneralizedSuffixArray {
         System.gc()
         s.read.parquet(dir)
       } else {
-        val b = bootRaw.cache()
-        b.count(): Unit
+        val b = bootRaw.localCheckpoint(true)
         chars.unpersist()
-        caches += b
         b
       }
     // ---- tail rounds over the live (still-tied) rows only. rank32
@@ -429,10 +432,7 @@ object GeneralizedSuffixArray {
           outF = s.read.parquet(dir)
           written += liveCnt
         }
-      } else {
-        outF = out.cache()
-        caches += outF
-      }
+      } else outF = out.localCheckpoint(true)
       settled :+= outF.filter(!col("tied")).select(rowCols: _*)
       live = outF.filter(col("tied")).select(rowCols: _*)
       liveCnt = live.count()
@@ -480,15 +480,12 @@ object GeneralizedSuffixArray {
     } else resultDir match {
       case Some(resDir) =>
         // persisted-index path: ONE write (the write materializes the
-        // plan), caches retired, returned frame reads the artifact
+        // plan), returned frame reads the artifact
         joined.write.mode("overwrite").parquet(resDir)
-        caches.foreach(_.unpersist())
         s.read.parquet(resDir)
       case None =>
-        // materialize the result, then retire the remaining caches
         val result = joined.cache()
         result.count()
-        caches.foreach(_.unpersist())
         result
     }
   }

@@ -88,7 +88,7 @@ object AsOfMergeStrategy extends SparkStrategy {
   }
 }
 
-case class AsOfMergeExec(
+private[graft] case class AsOfMergeExec(
     key: Attribute,
     ts: Attribute,
     tag: Attribute,

@@ -69,7 +69,7 @@ object DecodeFramesStrategy extends SparkStrategy {
   }
 }
 
-case class DecodeFramesExec(
+private[graft] case class DecodeFramesExec(
     mountPoint: Attribute,
     receiveMicros: Attribute,
     frame: Attribute,

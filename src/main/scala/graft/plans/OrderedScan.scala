@@ -92,7 +92,7 @@ object OrderedScanStrategy extends SparkStrategy {
   }
 }
 
-case class OrderedScanExec(
+private[graft] case class OrderedScanExec(
     input: Seq[Attribute],
     ordering: Seq[SortOrder],
     clustering: Seq[Attribute],

@@ -5,7 +5,7 @@ package graft.rtcm
   * (reference: src/decoderclasses.py:238-249) with the epoch as
   * absolute microseconds.
   */
-final case class Observation(
+private[graft] final case class Observation(
     mountPoint: String,
     obsEpochMicros: Long,
     messageType: Int,

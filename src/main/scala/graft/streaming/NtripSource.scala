@@ -350,7 +350,7 @@ private object NtripInputPartition {
     }
 }
 
-object NtripSource {
+private[graft] object NtripSource {
   /** Matches `etl.RawChunk`, so `.as[RawChunk]` feeds the pipeline. */
   val Schema: StructType = StructType(Seq(
     StructField("mountPoint", StringType, nullable = false),

@@ -6,12 +6,12 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Dead-code check: every top-level non-private `object`, `class` or
-  * `trait` in `src/main` must be named by code outside its own
-  * top-level definition — another `src/main` file (which includes
-  * `SparkEntry`'s entry list), another definition in its own file, or
-  * a `perfbench/scala` file. Comments are stripped first: a name in a
-  * comment reaches nothing. Specs do not count, so a definition only
-  * its spec uses shows up here. */
+  * `trait` in `src/main` must be named by another file — another
+  * `src/main` file (which includes `SparkEntry`'s entry list) or a
+  * `perfbench/scala` file. Uses inside its own file do not count, so a
+  * definition only a dead sibling calls shows up too. Comments are
+  * stripped first: a name in a comment reaches nothing. Specs do not
+  * count, so a definition only its spec uses shows up here. */
 class ReachabilitySpec extends AnyFunSuite {
 
   /** Known unreached definitions, each with its reason. */
@@ -28,9 +28,7 @@ class ReachabilitySpec extends AnyFunSuite {
     "NtripDurableLog", "Retention", "StreamingDedup", "StreamingNearDup")
 
   private val decl =
-    """^(?:(?:final|sealed|abstract|case|implicit)\s+)*(?:object|class|trait)\s+(\w+)""".r
-  private val privateDecl =
-    """^private(?:\[\w+\])?\s+(?:(?:final|sealed|abstract|case)\s+)*(?:object|class|trait)\b""".r
+    """(?m)^(?:(?:final|sealed|abstract|case|implicit)\s+)*(?:object|class|trait)\s+(\w+)""".r
 
   private def scalaFiles(root: String): Seq[Path] = {
     val dir = Paths.get(root)
@@ -40,42 +38,22 @@ class ReachabilitySpec extends AnyFunSuite {
     finally walk.close()
   }
 
-  private def stripComments(src: String): String =
-    src.replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")
+  private def stripped(f: Path): String =
+    Files.readString(f).replaceAll("""(?s)/\*.*?\*/""", "").replaceAll("//[^\n]*", "")
 
-  /** A file's top-level chunks: (declared name, if a non-private
-    * declaration opens the chunk; the chunk's text). */
-  private def chunks(src: String, declares: Boolean): Seq[(Option[String], String)] = {
-    val out = Seq.newBuilder[(Option[String], String)]
-    var name: Option[String] = None
-    val text = new StringBuilder
-    stripComments(src).split("\n").foreach { line =>
-      val opened = decl.findPrefixMatchOf(line).map(_.group(1))
-      if (opened.isDefined || privateDecl.findPrefixMatchOf(line).isDefined) {
-        out += name -> text.toString
-        name = if (declares) opened else None
-        text.clear()
-      }
-      text ++= line
-      text += '\n'
-    }
-    (out += name -> text.toString).result()
-  }
-
-  test("every top-level src/main definition is named outside itself") {
-    val all =
-      scalaFiles("src/main/scala").flatMap(f => chunks(Files.readString(f), declares = true)) ++
-        scalaFiles("perfbench/scala").flatMap(f => chunks(Files.readString(f), declares = false))
-    val unreached = all.indices.flatMap { i =>
-      all(i)._1.filter { n =>
+  test("every top-level src/main definition is named by another file") {
+    val main = scalaFiles("src/main/scala").map(stripped)
+    val all = main ++ scalaFiles("perfbench/scala").map(stripped)
+    val unreached = main.indices.flatMap { i =>
+      decl.findAllMatchIn(main(i)).map(_.group(1)).filter { n =>
         val named = ("\\b" + n + "\\b").r
-        !all.indices.exists(j => j != i && named.findFirstIn(all(j)._2).isDefined)
+        !all.indices.exists(j => j != i && named.findFirstIn(all(j)).isDefined)
       }
-    }
+    }.toSet
     // the scan is not vacuous: it finds the mains, which no code names
-    assert(Set("Bench", "Verify").subsetOf(unreached.toSet))
-    assert((unreached.toSet -- allowed).isEmpty,
-      s"defined in src/main but named by no entry, ingest path or perfbench code: " +
-        (unreached.toSet -- allowed).toSeq.sorted.mkString(", "))
+    assert(Set("Bench", "Verify").subsetOf(unreached))
+    assert((unreached -- allowed).isEmpty,
+      s"defined in src/main but named by no other src/main or perfbench file: " +
+        (unreached -- allowed).toSeq.sorted.mkString(", "))
   }
 }

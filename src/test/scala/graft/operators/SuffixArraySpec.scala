@@ -368,6 +368,55 @@ class SuffixArraySpec extends AnyFunSuite {
     }
   }
 
+  test("d16 and d18 past the segment bound fall back to two scans, same answer") {
+    import spark.implicits._
+    val passage = "the verbatim benchmark passage that leaked into the training corpus"
+    val rows = Seq(
+      (0L, s"eval starts $passage eval ends"),
+      (37L, "a fully original evaluation document here"),
+      (74L, s"$passage twice around $passage here"),
+      (1L, s"train doc containing $passage in the middle"),
+      (2L, "another train document with nothing shared"),
+      (5L, s"$passage opens and $passage closes this one"),
+      (40L, "yet more unrelated training text goes here"))
+    val dir = java.nio.file.Files.createTempDirectory("saBoundSpec").toString
+    rows.toDF("doc_id", "text")
+      .withColumn("lang", org.apache.spark.sql.functions.lit("en"))
+      .withColumn("source", org.apache.spark.sql.functions.lit("s0"))
+      .withColumn("n_chars", org.apache.spark.sql.functions.length($"text").cast("long"))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    // bound 0: every emit run (d16: eval suffixes, d18: train suffixes)
+    // is over it, so the fused scan must refuse and the spans write
+    // must go through crossSharedSpans' two-scan fallback
+    val pinned = spark.newSession()
+    pinned.conf.set("spark.graft.saScanMaxSegmentRows", "0")
+    val refused = new java.util.concurrent.atomic.AtomicInteger
+    pinned.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = ()
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        if (GatedMinScan.boundExceeded(e)) refused.incrementAndGet()
+    })
+    def run(s: org.apache.spark.sql.SparkSession, q: String): Seq[Seq[Any]] =
+      graft.SparkEntry.queries(q)(s, dir).collect().map(_.toSeq).toSeq
+    def refusals(atLeast: Int): Int = {
+      val until = System.nanoTime() + 20000000000L // listener events are async
+      while (refused.get < atLeast && System.nanoTime() < until) Thread.sleep(50)
+      refused.get
+    }
+    try {
+      val d16 = run(spark, "d16_exact_decontamination")
+      assert(run(pinned, "d16_exact_decontamination") === d16)
+      assert(refusals(1) >= 1, "d16's fused scan must refuse past the bound")
+      assert(d16.map(r => (r(0), r(2), r(3), r(4))) === d16Driver(rows))
+      val d18 = run(spark, "d18_train_decontamination")
+      assert(run(pinned, "d18_train_decontamination") === d18)
+      assert(refusals(2) >= 2, "d18's fused scan must refuse past the bound")
+      assert(d18.map(r => (r(0), r(2), r(3), r(4))) === d18Driver(rows))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   test("persisted index content equals a fresh build (single-write resultDir path)") {
     val sf = "/root/testdata/sf0.001"
     val fresh = GeneralizedSuffixArray.build(
